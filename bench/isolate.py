@@ -1,15 +1,17 @@
 #!/usr/bin/env python
-"""Round-6 isolation harness (guide §1.4): time individual queries()
-keys with the noop sink, labeled jobs, and optional plan capture.
+"""Isolation harness: time individual queries() keys with the noop
+sink and labeled jobs, with optional plan capture.
 
 Usage:
-  python bench/r06_isolate.py KEY [KEY...] [--sf DIR] [--reps N]
-      [--explain OUTDIR] [--loadavg]
+  python bench/isolate.py KEY [KEY...] [--sf DIR] [--reps N]
+      [--explain OUTDIR] [--cpus N]
 
-Prints one JSON line: {"sf":..., "reps":N, "loadavg":[...], "keys":
-{name: {"best":s, "all":[...]}}}. Writes .explain("formatted") to
-OUTDIR/<key>.txt when --explain is given. Does NOT touch bench.py
-(frozen for measurement).
+--sf defaults to $SPARK_GRAFT_SF_DIR, else sf0.1; --cpus to
+$SPARK_GRAFT_CPUS, else the CPUs this process may run on. Prints one
+JSON line: {"sf":..., "reps":N, "loadavg_start":[...],
+"loadavg_end":[...], "keys": {name: {"best":s, "all":[...]}}}. With
+--explain, writes .explain("formatted") to OUTDIR/<key>.txt; run it
+from two checkouts to diff plans before and after a change.
 """
 from __future__ import annotations
 
@@ -27,18 +29,19 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("keys", nargs="+")
     ap.add_argument("--sf", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--explain", default=None)
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS")
+                                or len(os.sched_getaffinity(0))))
     args = ap.parse_args()
 
     import ocrflow.dataops  # noqa: F401
     from ocrflow.session import build_session
     from ocrflow.queries import QUERIES
 
-    spark = build_session(master=f"local[{args.cpus}]", app="r06-isolate",
+    spark = build_session(master=f"local[{args.cpus}]", app="isolate",
                           shuffle_partitions=max(args.cpus, 8))
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -22,7 +22,7 @@ Scale design (BASELINE.json north_rule; SURVEY.md §4):
   within-partition (conv_id, turn_idx) sort for physically ordered
   output files. Default off: the kernel is stateless per turn and the
   ordering CONTRACT is enforced where it is semantic — the A8
-  reassembly window / array_sort — so the pipeline does not pay a sort
+  reassembly array_sort — so the pipeline does not pay a sort
   it does not need (measured ~30% of 32-core wall).
 - **Broadcast model state (A9)**: weights dict broadcast once;
   executors deserialize once per process.
@@ -32,7 +32,7 @@ Scale design (BASELINE.json north_rule; SURVEY.md §4):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, Window as W
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import chartables as ct
 from .kernel import EXTRACTED_DDL, SPAN_KINDS, make_kernel
@@ -74,13 +74,6 @@ def extract_df(spark: SparkSession, transcripts: DataFrame,
     return ordered.mapInArrow(kern, EXTRACTED_DDL)
 
 
-def extract_parquet(spark: SparkSession, in_path: str, out_path: str,
-                    **kw) -> None:
-    """File-to-file convenience: parquet in → extracted parquet out."""
-    df = spark.read.parquet(in_path)
-    extract_df(spark, df, **kw).write.mode("overwrite").parquet(out_path)
-
-
 def decode_spans(extracted: DataFrame) -> DataFrame:
     """Add human-readable span kinds (lazy, JVM-side dictionary lookup).
 
@@ -117,8 +110,3 @@ def assemble_conversations(extracted: DataFrame) -> DataFrame:
                     F.transform("turns", lambda s: s["extracted_text"]),
                     "\n").alias("conversation_text")))
 
-
-def turn_order_window(extracted: DataFrame) -> DataFrame:
-    """A8 window form: global stable row_number per conversation."""
-    w = W.partitionBy("conv_id").orderBy("turn_idx")
-    return extracted.withColumn("turn_rank", F.row_number().over(w))
