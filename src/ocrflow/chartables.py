@@ -6,8 +6,8 @@ image to 1-D row/column profiles and classifies fixed-size glyph batches
 with a CNN whose weights are loaded once per process. Here the "image"
 is a unicode payload, the "profile" is a vectorized codepoint→class
 lookup (``np.take`` over a 0x110000-entry table), and the "CNN" is a
-small linear model (feature matrix @ weight vector) applied to whole
-batches at once. Both the tables and the weights are broadcast once per
+small linear model (a weighted feature sum) applied to whole batches at
+once. Both the tables and the weights are broadcast once per
 executor by pipeline.py (SURVEY.md §2.A A6/A9).
 
 Everything here is pure + deterministic: the single-node reference
@@ -127,19 +127,20 @@ def default_weights() -> dict:
 def score_blocks(lengths: np.ndarray, link_density: np.ndarray,
                  is_code: np.ndarray, cjk_ratio: np.ndarray,
                  weights: np.ndarray = BLOCK_WEIGHTS) -> np.ndarray:
-    """Batched linear classify: one matvec for the whole block batch.
+    """Batched linear classify: ``w0 + w1·f1 + … + w4·f4`` over the whole
+    block batch.
 
-    The analog of ``model.predict(batch)`` in the reference: features are
-    stacked into one matrix and scored in a single numpy op.
+    The analog of ``model.predict(batch)`` in the reference. The sum is
+    elementwise in a fixed order rather than a BLAS matvec: a matvec's
+    rounding depends on how many rows it is given, and the kernel scores
+    a whole Arrow batch at once, so a block's score must not depend on
+    its batch neighbours.
     """
-    n = len(lengths)
-    feats = np.empty((n, 5), dtype=np.float64)
-    feats[:, 0] = 1.0
-    feats[:, 1] = np.minimum(lengths, 100) / 100.0
-    feats[:, 2] = link_density
-    feats[:, 3] = is_code
-    feats[:, 4] = cjk_ratio
-    return feats @ weights
+    return (weights[0]
+            + weights[1] * (np.minimum(lengths, 100) / 100.0)
+            + weights[2] * link_density
+            + weights[3] * is_code
+            + weights[4] * cjk_ratio)
 
 
 def score_spans(kind_codes: np.ndarray, lengths: np.ndarray,

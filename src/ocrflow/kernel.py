@@ -2,9 +2,13 @@
 
 This is the graft analog of the reference's inference hot loop: the JVM
 streams Arrow record batches into the Python worker
-(``df.mapInArrow``), the kernel runs the A2–A7 extraction per batch,
-and span columns are assembled as flat Arrow buffers — no per-span
-Python objects cross back. Model state (weights/thresholds) arrives via
+(``df.mapInArrow``), and the kernel runs the A2–A7 extraction per batch.
+The per-turn Python loop does only what is inherently per document —
+A2 sniff, A3 block parse and A7 stitch; A6 classify, A4 span
+segmentation and span scoring each run once over the whole batch, as
+the reference's ``model.predict(batch)`` does. Span columns are
+assembled as flat Arrow buffers — no per-span Python objects cross
+back. Model state (weights/thresholds) arrives via
 a Spark broadcast created once per run and deserialized once per
 executor (A9), mirroring the reference's load-model-once behavior.
 
@@ -21,6 +25,7 @@ import time
 import numpy as np
 import pyarrow as pa
 
+from . import chartables as ct
 from . import reference as R
 
 #: Spark DDL for the extracted table (SURVEY.md §1.2, amended: span kind
@@ -56,37 +61,67 @@ SPAN_KINDS = R.SPAN_KINDS
 def extract_batch(batch: pa.RecordBatch, weights: dict) -> pa.RecordBatch:
     """Extract one Arrow batch; returns the extracted batch.
 
-    Span columns are built vectorized: per-row numpy arrays are
-    concatenated once, the kind strings come from a dictionary take,
-    and the list offsets close over the whole batch.
+    Only A2 sniff, A3 block parse and A7 stitch run once per turn; A6
+    classify, A4 span segmentation and span scoring each run once per
+    batch:
+
+    - A2+A3, per turn: ``reference.segment_blocks``.
+    - A6, per batch: one ``reference._score_and_keep`` over every block
+      of the batch, with one role per block.
+    - A7, per turn: ``reference._stitch`` over the turn's kept blocks.
+    - A4 and span scoring, per batch: one ``reference.segment_spans``
+      and one ``chartables.score_spans`` over the turns' texts joined
+      with '\\n' — a space class, so every turn boundary breaks a run —
+      with code ranges shifted to batch positions. Spans are then split
+      back per turn at the turn start offsets and rebased to their turn.
+
+    The result equals ``reference.extract_turn_arrays`` per turn (the
+    golden oracle) for any batch composition. Span columns are built
+    vectorized: the kind codes ship as a dictionary code, and the list
+    offsets close over the whole batch.
     """
     texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
     role_idx = batch.schema.get_field_index("role")
     roles = (batch.column(role_idx).to_pylist() if role_idx >= 0
              else [None] * len(texts))
     n = len(texts)
-    ex_texts: list[str] = []
-    kinds: list[str] = []
-    starts_l, ends_l, kc_l, sc_l = [], [], [], []
-    offsets = np.zeros(n + 1, dtype=np.int32)
-    for i, t in enumerate(texts):
-        ex, st, en, kc, sc, kind = R.extract_turn_arrays(t, weights, roles[i])
-        ex_texts.append(ex)
-        kinds.append(kind)
-        starts_l.append(st)
-        ends_l.append(en)
-        kc_l.append(kc)
-        sc_l.append(sc)
-        offsets[i + 1] = offsets[i] + len(st)
 
-    starts = np.concatenate(starts_l) if starts_l else np.empty(0, np.int64)
-    ends = np.concatenate(ends_l) if ends_l else np.empty(0, np.int64)
-    kcodes = np.concatenate(kc_l) if kc_l else np.empty(0, np.int64)
-    scores = np.concatenate(sc_l) if sc_l else np.empty(0, np.float64)
+    kinds: list[str] = []
+    blocks: list[R.Block] = []
+    block_roles: list[str | None] = []
+    bounds = np.zeros(n + 1, dtype=np.int64)
+    for i, t in enumerate(texts):
+        kind, turn_blocks = R.segment_blocks(t)
+        kinds.append(kind)
+        blocks.extend(turn_blocks)
+        block_roles.extend([roles[i]] * len(turn_blocks))
+        bounds[i + 1] = len(blocks)
+
+    kept = set(map(id, R._score_and_keep(blocks, weights, block_roles)))
+
+    ex_texts: list[str] = []
+    code_ranges: list[tuple[int, int]] = []
+    turn_starts = np.zeros(n, dtype=np.int64)
+    pos = 0
+    for i in range(n):
+        ex, turn_code = R._stitch([b for b in blocks[bounds[i]:bounds[i + 1]]
+                                   if id(b) in kept])
+        ex_texts.append(ex)
+        code_ranges.extend((pos + s, pos + e) for s, e in turn_code)
+        turn_starts[i] = pos
+        pos += len(ex) + 1
+
+    starts, ends, kcodes = R.segment_spans("\n".join(ex_texts), code_ranges)
+    scores = ct.score_spans(kcodes, (ends - starts).astype(np.float64),
+                            R._BASE_BY_CODE)
+    owner = np.searchsorted(turn_starts, starts, side="right") - 1
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(np.bincount(owner, minlength=n), out=offsets[1:])
+    base = turn_starts[owner]
 
     span_struct = pa.StructArray.from_arrays(
-        [pa.array(starts.astype(np.int32), type=pa.int32()),
-         pa.array(ends.astype(np.int32), type=pa.int32()),
+        [pa.array((starts - base).astype(np.int32), type=pa.int32()),
+         pa.array((ends - base).astype(np.int32), type=pa.int32()),
          pa.array(kcodes.astype(np.int8), type=pa.int8()),
          pa.array(scores, type=pa.float64())],
         fields=list(_SPAN_STRUCT))

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import re
 import unicodedata
+from collections.abc import Sequence
 from dataclasses import dataclass
 from html import unescape as _unescape
 
@@ -279,9 +280,28 @@ def segment_plain(text: str) -> list[Block]:
     return blocks
 
 
+def segment_blocks(text: str | None) -> tuple[str, list[Block]]:
+    """A2+A3: sniff the payload kind, then parse it into blocks.
+
+    A null or empty payload is plain and has no blocks (frozen rule)."""
+    if not text:
+        return PAYLOAD_PLAIN, []
+    kind = detect_payload_kind(text)
+    if kind == PAYLOAD_HTML:
+        return kind, segment_html(text)
+    if kind == PAYLOAD_PDF:
+        return kind, segment_pdf(text)
+    return kind, segment_plain(text)
+
+
 def _score_and_keep(blocks: list[Block], weights: dict,
-                    role: str | None = None) -> list[Block]:
+                    role: str | None | Sequence[str | None] = None
+                    ) -> list[Block]:
     """A6+A7: batched linear classify, threshold at τ, keep document order.
+
+    ``role`` feeds the A6 role prior: one role (``str`` or ``None``)
+    shared by every block, or a sequence with one role per block, which
+    lets the kernel score a whole Arrow batch of turns in one call.
 
     The whole block batch is featurized in single numpy passes — one
     codepoint-class lookup over the concatenated text serves every
@@ -304,10 +324,32 @@ def _score_and_keep(blocks: list[Block], weights: dict,
     cjk = counts / np.maximum(lengths, 1)
     scores = ct.score_blocks(lengths.astype(np.float64), ld, code, cjk,
                              weights["block_weights"])
-    # A6 role prior: a constant per-turn shift of every block score
-    scores = scores + weights.get("role_prior", {}).get(role, 0.0)
+    # A6 role prior: a constant shift of every block score of a turn
+    prior = weights.get("role_prior", {})
+    if role is None or isinstance(role, str):
+        scores = scores + prior.get(role, 0.0)
+    else:
+        scores = scores + np.fromiter((prior.get(r, 0.0) for r in role),
+                                      dtype=np.float64, count=len(blocks))
     tau = weights["tau"]
     return [b for b, s in zip(blocks, scores) if s >= tau]
+
+
+def _stitch(kept: list[Block]) -> tuple[str, list[tuple[int, int]]]:
+    """A7 greedy stitch: '\\n' separator, document order (frozen).
+
+    Returns the extracted text and the ``[start, end)`` ranges of its
+    code blocks."""
+    pieces, code_ranges = [], []
+    pos = 0
+    for b in kept:
+        if pieces:
+            pos += 1  # separator
+        if b.is_code:
+            code_ranges.append((pos, pos + len(b.text)))
+        pieces.append(b.text)
+        pos += len(b.text)
+    return "\n".join(pieces), code_ranges
 
 
 def segment_spans(text: str, code_ranges: list[tuple[int, int]]):
@@ -377,41 +419,18 @@ class ExtractResult:
         return len(self.spans)
 
 
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
-_EMPTY_F64 = np.empty(0, dtype=np.float64)
-
-
 def extract_turn_arrays(text: str | None, weights: dict,
                         role: str | None = None):
-    """The full A2→A7 loop, flat-array form (the kernel-facing API).
+    """The full A2→A7 loop for one turn, flat-array form.
 
     Returns ``(extracted_text, starts, ends, kind_codes, scores,
-    payload_kind)`` with numpy arrays, so the Arrow kernel can build
-    list<struct> span columns without per-span Python objects. ``role``
-    feeds the A6 role prior (tool/system turns need more evidence).
+    payload_kind)`` with numpy arrays. ``role`` feeds the A6 role prior
+    (tool/system turns need more evidence). This is the per-turn oracle:
+    ``kernel.extract_batch``, which runs A6 and A4 once per Arrow batch,
+    must equal it turn by turn.
     """
-    if text is None or text == "":
-        return "", _EMPTY_I64, _EMPTY_I64, _EMPTY_I64, _EMPTY_F64, PAYLOAD_PLAIN
-    kind = detect_payload_kind(text)
-    if kind == PAYLOAD_HTML:
-        blocks = segment_html(text)
-    elif kind == PAYLOAD_PDF:
-        blocks = segment_pdf(text)
-    else:
-        blocks = segment_plain(text)
-    kept = _score_and_keep(blocks, weights, role)
-
-    # A7 greedy stitch: '\n' separator, document order (frozen)
-    pieces, code_ranges = [], []
-    pos = 0
-    for b in kept:
-        if pieces:
-            pos += 1  # separator
-        if b.is_code:
-            code_ranges.append((pos, pos + len(b.text)))
-        pieces.append(b.text)
-        pos += len(b.text)
-    extracted = "\n".join(pieces)
+    kind, blocks = segment_blocks(text)
+    extracted, code_ranges = _stitch(_score_and_keep(blocks, weights, role))
 
     starts, ends, kcodes = segment_spans(extracted, code_ranges)
     lengths = (ends - starts).astype(np.float64)

@@ -32,12 +32,9 @@ def _transcripts_df(spark, rows):
     return spark.createDataFrame(rows, schema=synth.TRANSCRIPTS_DDL)
 
 
-@pytest.mark.parametrize("partitions,salt", [(3, 1), (7, 4), (16, 8)])
-def test_spark_matches_golden(spark, rows, golden, partitions, salt):
-    df = _transcripts_df(spark, rows)
-    out = extract_df(spark, df, partitions=partitions, salt_buckets=salt)
-    got = {(r["conv_id"], r["turn_idx"]): r for r in out.collect()}
-    assert len(got) == len(golden)
+def _assert_matches_golden(got, golden):
+    """Every output row equals its golden turn: text, payload kind and
+    spans with scores."""
     for key, res in golden.items():
         g = got[key]
         assert g["extracted_text"] == res.extracted_text, key
@@ -48,15 +45,22 @@ def test_spark_matches_golden(spark, rows, golden, partitions, salt):
         assert gspans == res.spans, key
 
 
+@pytest.mark.parametrize("partitions,salt", [(3, 1), (7, 4), (16, 8)])
+def test_spark_matches_golden(spark, rows, golden, partitions, salt):
+    df = _transcripts_df(spark, rows)
+    out = extract_df(spark, df, partitions=partitions, salt_buckets=salt)
+    got = {(r["conv_id"], r["turn_idx"]): r for r in out.collect()}
+    assert len(got) == len(golden)
+    _assert_matches_golden(got, golden)
+
+
 def test_arrow_batch_size_invariance(spark, rows, golden):
     # tiny batches → many kernel invocations; bytes must not change
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
         out = extract_df(spark, _transcripts_df(spark, rows), partitions=5)
-        got = {(r["conv_id"], r["turn_idx"]): r["extracted_text"]
-               for r in out.collect()}
-        for key, res in golden.items():
-            assert got[key] == res.extracted_text, key
+        got = {(r["conv_id"], r["turn_idx"]): r for r in out.collect()}
+        _assert_matches_golden(got, golden)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
 

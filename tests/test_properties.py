@@ -1,7 +1,10 @@
 """Property-based tests for the golden extractor (SURVEY.md §5.3)."""
 
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
+from ocrflow import chartables as ct
+from ocrflow import kernel
 from ocrflow import reference as R
 
 payloads = st.one_of(
@@ -66,6 +69,55 @@ def test_no_control_chars_in_output(payload):
     out = R.extract_turn(payload).extracted_text
     assert not any(ord(c) < 0x20 and c not in "\n\t" for c in out)
     assert not any(0xD800 <= ord(c) < 0xE000 for c in out)
+
+
+_line = st.text(alphabet=st.characters(blacklist_characters="`",
+                                       blacklist_categories=("Cs",)),
+               max_size=40)
+
+turn_texts = st.one_of(
+    st.none(),
+    st.just(""),
+    st.text(alphabet=" \t\n\r\u3000\u00a0\u2028", max_size=12),
+    payloads,
+    # two fences: two code ranges in one turn, each rebased to the turn
+    st.builds(lambda a, c1, b, c2: f"{a}\n```py\n{c1}\n```\n{b}\n```\n{c2}\n```",
+              _line, _line, _line, _line),
+    st.builds(lambda code, p: f"<html><body><pre>{code}</pre><p>{p}</p></body></html>",
+              _line, _line),
+    st.text(alphabet="ＡＢＣｘｙｚ０１９，。「」中文 a1.", max_size=40),
+)
+roles = st.sampled_from(["user", "assistant", "tool", "system", None])
+
+_BATCH_SCHEMA = pa.schema([pa.field("conv_id", pa.string()),
+                           pa.field("turn_idx", pa.int32()),
+                           pa.field("role", pa.string()),
+                           pa.field("text", pa.string())])
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(st.tuples(turn_texts, roles), max_size=24),
+       st.lists(st.integers(min_value=0, max_value=24), max_size=5))
+def test_batch_kernel_equals_per_turn_reference(turns, cuts):
+    """Batch-level A6/A4 in the Arrow kernel equals the per-turn golden
+    extractor for any turns cut at any batch boundaries (empty batches
+    included)."""
+    whole = pa.RecordBatch.from_pylist(
+        [{"conv_id": "c", "turn_idx": i, "role": role, "text": text}
+         for i, (text, role) in enumerate(turns)], schema=_BATCH_SCHEMA)
+    edges = [0, *sorted(min(c, len(turns)) for c in cuts), len(turns)]
+    weights = ct.default_weights()
+    got = []
+    for lo, hi in zip(edges, edges[1:]):
+        got.extend(kernel.extract_batch(whole.slice(lo, hi - lo), weights).to_pylist())
+    assert len(got) == len(turns)
+    for row, (text, role) in zip(got, turns):
+        want = R.extract_turn(text, role=role)
+        assert row["extracted_text"] == want.extracted_text
+        assert row["payload_kind"] == want.payload_kind
+        assert row["n_spans"] == want.n_spans
+        assert [(s["start"], s["end"], R.SPAN_KINDS[s["kind_code"]], s["score"])
+                for s in row["spans"]] == want.spans
 
 
 def test_asof_union_merge_matches_naive_oracle(spark):

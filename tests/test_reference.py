@@ -147,3 +147,18 @@ def test_classify_kernel_is_batched_matvec():
     drop = ct.score_blocks(np.array([30.0]), np.array([0.9]),
                            np.array([0.0]), np.array([0.0]))
     assert drop[0] < 0
+
+
+def test_score_blocks_is_row_invariant():
+    """A block's score must not depend on its batch neighbours: the
+    kernel scores a whole Arrow batch of turns in one call, the golden
+    extractor one turn at a time."""
+    rng = np.random.default_rng(5)
+    n = 20_000
+    lengths = rng.integers(1, 400, n).astype(np.float64)
+    ld, code, cjk = rng.random(n), (rng.random(n) < 0.2) * 1.0, rng.random(n)
+    whole = ct.score_blocks(lengths, ld, code, cjk)
+    cuts = np.sort(rng.choice(np.arange(1, n), 300, replace=False))
+    parts = [ct.score_blocks(lengths[a:b], ld[a:b], code[a:b], cjk[a:b])
+             for a, b in zip([0, *cuts], [*cuts, n])]
+    assert whole.tobytes() == np.concatenate(parts).tobytes()
