@@ -92,8 +92,10 @@ _STRIP.update({c: None for c in range(0x80, 0xA0)})
 _STRIP.update({c: None for c in range(0xD800, 0xE000)})
 
 _CANON_TABLE = {**_STRIP, **_FOLD}
-
-_WS_RUN = re.compile(r"[\s\u0085\u00a0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]+")
+#: any character the table rewrites: one C-level search spares most
+#: texts the per-character translate
+_CANON_CHARS = re.compile(
+    "[" + "".join(re.escape(chr(c)) for c in sorted(_CANON_TABLE)) + "]")
 
 
 # --- classify kernel (A6): content-vs-boilerplate block scorer --------------

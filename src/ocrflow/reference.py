@@ -6,8 +6,11 @@ per-glyph CNN classification, greedy decode to text"): a pure,
 single-process implementation whose output the distributed Spark
 pipeline must reproduce byte-for-byte under ``python -m pytest -x -q``
 (per-turn text equality under stable turn ordering — BASELINE.json
-north_rule). Zero Spark imports; stdlib ``html.parser`` + numpy only
-(no bs4/lxml/cv2/tensorflow — from scratch, NOT a port).
+north_rule). Zero Spark imports; stdlib ``re`` + ``html.unescape`` +
+numpy only (no bs4/lxml/cv2/tensorflow — from scratch, NOT a port).
+Each payload is parsed in a few C-level passes: one ``re.split`` token
+list per HTML document, one ``findall`` per pdf dump, and ``str.split``
+for every whitespace rule.
 
 Pipeline stages (SURVEY.md §2.A), mirroring the reference loop:
 
@@ -48,8 +51,10 @@ _BASE_BY_CODE = np.array([ct.SPAN_BASE[k] for k in SPAN_KINDS], dtype=np.float64
 _HTML_SIG = re.compile(
     r"<\s*(?:!doctype|html|head|body|div|p|a|span|h[1-6]|article|section|"
     r"nav|header|footer|ul|ol|li|table|br|script|style)\b", re.IGNORECASE)
-_PDF_LINE = re.compile(r"^(\d+),(\d+(?:\.\d+)?),(\d+(?:\.\d+)?),(\w+)\t(.*)$")
-_CODE_FENCE = re.compile(r"^```")
+#: a pdf record line, `page,y,x,block_id\ttext`: one findall collects
+#: every record of a payload as (page, y, x, text)
+_PDF_RECORD = re.compile(
+    r"^(\d+),(\d+(?:\.\d+)?),(\d+(?:\.\d+)?),\w+\t(.*)$", re.MULTILINE)
 _BLANK_LINE = re.compile(r"\n[ \t]*\n")
 
 # tags whose entire subtree is boilerplate (dropped before scoring)
@@ -63,9 +68,6 @@ _BLOCK_TAGS = frozenset({"p", "div", "article", "section", "main", "li",
                          "html", "figure", "figcaption", "dd", "dt"})
 _VOID_BREAKS = frozenset({"br", "hr"})
 
-_NONSPACE = re.compile(r"\S")
-_WS = re.compile(r"\s+")
-
 
 def canonicalize(text: str, is_code: bool = False) -> str:
     """A5: NFC, strip controls/surrogates, fold full-width alnum, collapse ws.
@@ -76,7 +78,8 @@ def canonicalize(text: str, is_code: bool = False) -> str:
     if not text:
         return ""
     # surrogates break NFC; strip via translate first
-    text = text.translate(ct._CANON_TABLE)
+    if ct._CANON_CHARS.search(text):
+        text = text.translate(ct._CANON_TABLE)
     if not text.isascii():
         # ASCII is NFC-closed: normalize() is the identity there, and
         # isascii() is a single C scan — skip the normalizer quickcheck
@@ -84,7 +87,7 @@ def canonicalize(text: str, is_code: bool = False) -> str:
     if is_code:
         text = text.replace("\r\n", "\n").replace("\r", "\n")
         return text.strip("\n")
-    return ct._WS_RUN.sub(" ", text).strip()
+    return " ".join(text.split())
 
 
 def detect_payload_kind(text: str) -> str:
@@ -95,7 +98,7 @@ def detect_payload_kind(text: str) -> str:
     if _HTML_SIG.search(head[:512]):
         return PAYLOAD_HTML
     first_line = head.split("\n", 1)[0]
-    if _PDF_LINE.match(first_line):
+    if _PDF_RECORD.match(first_line):
         return PAYLOAD_PDF
     return PAYLOAD_PLAIN
 
@@ -107,144 +110,110 @@ class Block:
     is_code: bool
 
 
-# single-pass tag tokenizer: matches comments/doctypes/PIs and start/end
-# tags (attribute values may contain '>'); text runs live between matches.
-# Replaces stdlib html.parser in the hot loop (it was 65% of per-turn
-# cost, measured by cProfile) with identical block semantics.
-_TAG_RE = re.compile(
+# One re.split per payload tokenizes the whole HTML document. Its two
+# groups (end-tag slash, tag name) interleave the text runs as
+# [data, close, name, data, close, name, ...]; every other separator
+# leaves both groups None and is dropped with its content:
+#   - comments (unterminated → EOF), CDATA, <!doctype> and <?pi?>;
+#   - whole raw-text elements (script/style/textarea/title): the start
+#     tag through the matching end tag, or through EOF if there is none.
+#     Their content runs to the end tag regardless of '<', and they are
+#     net no-ops for the block state (no flush, content dropped).
+# A raw-text start tag's name is ASCII case-insensitive and maximal, as a
+# tag name is; its end tag matches with Unicode IGNORECASE (frozen rule:
+# '</ſcript>' closes a script, '<ſcript>' is text). Attribute values may
+# contain a quoted '>'.
+_ATTRS = r"(?:[^>\"']|\"[^\"]*\"|'[^']*')*"
+_SPLIT = re.compile(
     r"<!--.*?(?:-->|$)"                       # comments (unterminated → EOF)
     r"|<!\[CDATA\[.*?(?:\]\]>|$)"             # CDATA
     r"|<![^>]*>|<\?[^>]*>"                    # doctype / PI
-    r"|<(/?)([a-zA-Z][a-zA-Z0-9:-]*)"         # tag open: / and name
-    r"((?:[^>\"']|\"[^\"]*\"|'[^']*')*)(/?)>",  # attrs (quoted '>' ok), self-close
+    + "".join(f"|<(?a:(?i:{t}))(?![a-zA-Z0-9:-]){_ATTRS}>"
+              f".*?(?:(?i:</{t}\\b[^>]*>)|\\Z)"
+              for t in ("script", "style", "textarea", "title"))
+    + f"|<(/?)([a-zA-Z][a-zA-Z0-9:-]*){_ATTRS}>",  # start / end tag
     re.DOTALL)
 
-#: raw-text elements: content runs to the matching end tag, regardless of '<'
-_RAWTEXT_END = {tag: re.compile(f"</{tag}\\b[^>]*>", re.IGNORECASE)
-                for tag in ("script", "style", "textarea", "title")}
+# per-tag action of the A3 block walk; any other tag is inert
+_SKIP, _BLOCK, _PRE, _BREAK, _A = 1, 2, 3, 4, 5
+_TAG_ACTION = {**{t: _SKIP for t in _SKIP_TAGS},
+               **{t: _BLOCK for t in _BLOCK_TAGS}, "pre": _PRE,
+               **{t: _BREAK for t in _VOID_BREAKS}, "a": _A}
 
 
-class _BlockCollector:
-    """Flat block list with link-char counts — the graft analog of the
-    horizontal projection profile (A3): blocks accumulate text mass and
+def _flush(blocks: list[Block], chunks: list[str], links: list[str],
+           is_code: bool) -> None:
+    """Close the open block: the graft analog of one cut of the
+    horizontal projection profile (A3). A block carries its text mass and
     link mass; the density features drive the classify kernel."""
-
-    __slots__ = ("blocks", "_chunks", "_link_chunks", "_skip", "_a", "_pre")
-
-    def __init__(self) -> None:
-        self.blocks: list[Block] = []
-        self._chunks: list[str] = []
-        self._link_chunks: list[str] = []
-        self._skip = 0
-        self._a = 0
-        self._pre = 0
-
-    def data(self, raw: str) -> None:
-        if self._skip or not raw:
-            return
-        if "&" in raw:
-            raw = _unescape(raw)
-        self._chunks.append(raw)
-        if self._a:
-            self._link_chunks.append(raw)
-
-    def start(self, tag: str) -> None:
-        if tag in _SKIP_TAGS:
-            self._skip += 1
-            return
-        if self._skip:
-            return
-        if tag == "a":
-            self._a += 1
-        if tag in _VOID_BREAKS:
-            self.flush()
-        elif tag in _BLOCK_TAGS:
-            self.flush()
-            if tag == "pre":
-                self._pre += 1
-
-    def end(self, tag: str) -> None:
-        if tag in _SKIP_TAGS:
-            if self._skip:
-                self._skip -= 1
-            return
-        if self._skip:
-            return
-        if tag == "a" and self._a:
-            self._a -= 1
-        elif tag in _BLOCK_TAGS:
-            self.flush()
-            if tag == "pre" and self._pre:
-                self._pre -= 1
-
-    def flush(self) -> None:
-        if not self._chunks:
-            return
-        raw = "".join(self._chunks)
-        link_raw = "".join(self._link_chunks)
-        self._chunks.clear()
-        self._link_chunks.clear()
-        is_code = self._pre > 0
-        canon = canonicalize(raw, is_code=is_code)
-        if not canon:
-            return
-        # |\S| = len(\s-stripped): one C-level sub pass, ~2x faster
-        # than a findall list with one str object per non-space char
-        n = len(_WS.sub("", raw))
-        nl = len(_WS.sub("", link_raw)) if link_raw else 0
-        self.blocks.append(Block(canon, nl / n if n else 0.0, is_code))
+    raw = "".join(chunks)
+    link_raw = "".join(links)
+    chunks.clear()
+    links.clear()
+    canon = canonicalize(raw, is_code=is_code)
+    if not canon:
+        return
+    # |\S| as the summed lengths of the whitespace-split words
+    n = sum(map(len, raw.split()))
+    nl = sum(map(len, link_raw.split()))
+    blocks.append(Block(canon, nl / n if n else 0.0, is_code))
 
 
 def segment_html(text: str) -> list[Block]:
-    c = _BlockCollector()
-    pos = 0
-    n = len(text)
-    while pos < n:
-        m = _TAG_RE.search(text, pos)
-        if m is None:
-            c.data(text[pos:])
-            break
-        if m.start() > pos:
-            c.data(text[pos:m.start()])
-        pos = m.end()
-        name = m.group(2)
-        if name is None:
-            continue  # comment / doctype / CDATA / PI
-        tag = name.lower()
-        if m.group(1):            # </tag>
-            c.end(tag)
-        else:                     # <tag ...> or <tag/>
-            if m.group(4):        # self-closing
-                if tag in _VOID_BREAKS or tag in _BLOCK_TAGS:
-                    if not c._skip:
-                        c.flush()
-                continue
-            c.start(tag)
-            if tag in _RAWTEXT_END:
-                # raw-text content: skip straight to the matching end tag
-                em = _RAWTEXT_END[tag].search(text, pos)
-                if em is None:
-                    pos = n
-                    c.end(tag)
-                else:
-                    pos = em.end()
-                    c.end(tag)
-    c.flush()
-    return c.blocks
+    """A3 html path: DOM-lite blocks cut at block and break tags; the
+    subtrees of skip tags are dropped; text inside <a> is link mass;
+    <pre> content is a code block. Entities are decoded per text run."""
+    blocks: list[Block] = []
+    chunks: list[str] = []   # text runs of the open block
+    links: list[str] = []    # the ones of those inside <a>
+    skip = a = pre = 0
+    toks = _SPLIT.split(text)
+    toks[:0] = (None, None)  # the first text run follows no tag
+    it = iter(toks)
+    for close, name, raw in zip(it, it, it):
+        if name is not None:
+            act = _TAG_ACTION.get(name.lower())
+            if act is None:
+                pass
+            elif act == _SKIP:
+                if not close:
+                    skip += 1
+                elif skip:
+                    skip -= 1
+            elif skip:
+                pass
+            elif act == _A:
+                if not close:
+                    a += 1
+                elif a:
+                    a -= 1
+            elif act != _BREAK or not close:
+                if chunks:
+                    _flush(blocks, chunks, links, pre > 0)
+                if act == _PRE:
+                    if not close:
+                        pre += 1
+                    elif pre:
+                        pre -= 1
+        if raw and not skip:
+            if "&" in raw:
+                raw = _unescape(raw)
+            chunks.append(raw)
+            if a:
+                links.append(raw)
+    if chunks:
+        _flush(blocks, chunks, links, pre > 0)
+    return blocks
 
 
 def segment_pdf(text: str) -> list[Block]:
     """A3 pdf path: parse `page,y,x,block_id\\ttext` lines, re-order by
     (page, y, x) — the layout analog of reading-order line cuts. Lines
-    not matching the record shape are skipped (frozen rule)."""
-    recs = []
-    for i, line in enumerate(text.split("\n")):
-        m = _PDF_LINE.match(line)
-        if not m:
-            continue
-        page, y, x = int(m.group(1)), float(m.group(2)), float(m.group(3))
-        recs.append((page, y, x, i, m.group(5)))
-    recs.sort(key=lambda r: (r[0], r[1], r[2], r[3]))
+    not matching the record shape are skipped (frozen rule); ties keep
+    line order."""
+    recs = [(int(page), float(y), float(x), i, t) for i, (page, y, x, t)
+            in enumerate(_PDF_RECORD.findall(text))]
+    recs.sort()
     blocks = []
     for *_ignored, t in recs:
         canon = canonicalize(t)

@@ -1,10 +1,14 @@
 """Unit tests for the golden single-node extractor (SURVEY.md §5.1)."""
 
+import hashlib
+import random
+
 import numpy as np
 import pytest
 
 from ocrflow import chartables as ct
 from ocrflow import reference as R
+from ocrflow import synth
 
 
 def test_detect_kinds():
@@ -140,7 +144,7 @@ def test_deterministic_and_idempotent():
     assert again.extracted_text == a.extracted_text
 
 
-def test_classify_kernel_is_batched_matvec():
+def test_classify_kernel_scores_batch():
     n = 7
     s = ct.score_blocks(np.full(n, 200.0), np.zeros(n), np.zeros(n), np.zeros(n))
     assert s.shape == (n,) and np.all(s > 0)
@@ -162,3 +166,111 @@ def test_score_blocks_is_row_invariant():
     parts = [ct.score_blocks(lengths[a:b], ld[a:b], code[a:b], cjk[a:b])
              for a, b in zip([0, *cuts], [*cuts, n])]
     assert whole.tobytes() == np.concatenate(parts).tobytes()
+
+
+#: A3 tokenizer edge semantics: payload → (kind, [(text, link_density,
+#: is_code)]) from segment_blocks, frozen from the per-tag tokenizer the
+#: one-split parser replaced
+_TOKENIZER_EDGES = [
+    # raw-text content runs to its end tag regardless of '<'
+    ("<p>a</p><script>if(a<b)</script><p>c</p>",
+     ("html", [("a", 0.0, False), ("c", 0.0, False)])),
+    ('<p>a<SCRIPT type="x">var s = "</p>";</script >b</p>',
+     ("html", [("ab", 0.0, False)])),
+    # the end tag matches with Unicode IGNORECASE, the start tag in ASCII
+    ("<p>a<script>x</ſcript>b</p>", ("html", [("ab", 0.0, False)])),
+    ("<p>a<ſcript>b</p>", ("html", [("a<ſcript>b", 0.0, False)])),
+    # an unterminated raw-text element drops the rest of the payload
+    ("<p>keep</p><title>rest <p>of the payload",
+     ("html", [("keep", 0.0, False)])),
+    ("<p>keep</p><script>rest <p>of the payload",
+     ("html", [("keep", 0.0, False)])),
+    ("<div>a<textarea>typed <b>text</b></textarea>b</div>",
+     ("html", [("ab", 0.0, False)])),
+    ("<p data-x=\"a>b\" title='c>d'>quoted</p>",
+     ("html", [("quoted", 0.0, False)])),
+    # comments and CDATA run to EOF when unterminated
+    ("<p>a<!-- unterminated <p>b", ("html", [("a", 0.0, False)])),
+    ("<p>a<![CDATA[ x <p> y", ("html", [("a", 0.0, False)])),
+    ('<!DOCTYPE html><?xml version="1.0"?><p>x</p>',
+     ("html", [("x", 0.0, False)])),
+    # entities decode per text run: a tag splits "&amp;"
+    ("<p>fish &am<span>p; chips</p>",
+     ("html", [("fish &amp; chips", 0.0, False)])),
+    # "<x/>" is a start tag: <pre/> opens a code block, <script/> a script
+    ("<p>a<pre/>code  x</pre>b",
+     ("html", [("a", 0.0, False), ("code  x", 0.0, True),
+               ("b", 0.0, False)])),
+    ("<p>a<script/>b</p>", ("html", [("a", 0.0, False)])),
+    # skip tags nest; a stray end tag is ignored
+    ("<p>a<nav>b<nav>c</nav>d</nav>e</p>", ("html", [("ae", 0.0, False)])),
+    ("<p></nav>x<nav>y", ("html", [("x", 0.0, False)])),
+    # an <a> stays open across a block break
+    ('<p>pre <a href="/">link<p>after</a> tail</p>',
+     ("html", [("pre link", 0.5714285714285714, False),
+               ("after tail", 0.5555555555555556, False)])),
+    # U+3000, U+0085 and \x1c are whitespace for the link mass, and
+    # canonicalize strips the two controls
+    ("<p>a\u3000b<a>\x85c\x1cd</a></p>", ("html", [("a bcd", 0.5, False)])),
+    ("a\u3000b\x85c\x1cd", ("plain", [("a bcd", 0.0, False)])),
+    ("1,10,20,b0\ta\u3000b\x85c\x1cd", ("pdf", [("a bcd", 0.0, False)])),
+    # pdf records tied on (page, y, x) keep their line order
+    ("1,5,5,b1\tfirst\nnoise\n1,5,5,b0\tsecond\n1,5.0,5,b2\tthird",
+     ("pdf", [("first", 0.0, False), ("second", 0.0, False),
+              ("third", 0.0, False)])),
+]
+
+
+@pytest.mark.parametrize("payload,expected", _TOKENIZER_EDGES)
+def test_tokenizer_edge_semantics(payload, expected):
+    kind, blocks = R.segment_blocks(payload)
+    assert (kind, [(b.text, b.link_density, b.is_code) for b in blocks]) \
+        == expected
+
+
+#: tag-soup alphabet for the corpus digest: raw-text tags in mixed case,
+#: U+017F, comments, CDATA, entities, <pre>, <a>, quoted '>' attributes,
+#: whitespace controls and pdf-shaped lines
+_SOUP = (
+    "<p>", "</p>", "<div class=\"a>b\">", "<a href='x>y'>", "</a>", "<A>",
+    "<pre>", "</pre>", "<pre/>", "<br/>", "<hr>", "</br>", "<li/>", "<td>",
+    "<h1>", "</H1>", "<b>", "</b>", "<span", "<x-y:z>", "<scriptx>",
+    "<script-a>", "<SCRIPT>", "<script/>", "</script>", "</ScRiPt >",
+    "<Style>", "</style>", "<textarea>", "</TEXTAREA>", "<title>", "</title>",
+    "</ſcript>", "<ſcript>", "<nav>", "</nav>", "<Footer>",
+    "<!-- c -->", "<!--", "-->", "<![CDATA[", "]]>", "<!DOCTYPE html>",
+    "<?xml?>", "&amp;", "&am", "p;", "&#x4e2d;", "&notx", "&#1;", "<", ">",
+    "\"", "'", "/", "=", "word", "more words", "中文", "\u3000",
+    "\x85", "\x1c", "\n", "\n\n", "\r\n", "\t", " ", "１２ｂ",
+    "1,10.5,20,b0\tpdf line\n", "```", "```py\n", "\ud800",
+)
+
+
+def _tag_soup(n: int, seed: int):
+    rng = random.Random(seed)
+    heads = ("", "<html>", "1,2,3,b\t", "\n")
+    for _ in range(n):
+        yield rng.choice(heads) + "".join(
+            rng.choice(_SOUP) for _ in range(rng.randint(1, 40)))
+
+
+def _blocks_digest(payloads) -> str:
+    h = hashlib.sha256()
+    for p in payloads:
+        kind, blocks = R.segment_blocks(p)
+        h.update(kind.encode() + b"\0")
+        for b in blocks:
+            h.update(f"{b.text}\x01{b.link_density!r}\x01{b.is_code:d}\x02"
+                     .encode("utf-8", "surrogatepass"))
+    return h.hexdigest()
+
+
+def test_block_parse_corpus_digest():
+    """Any A2/A3/A5 rewrite must reproduce these digests, recorded from
+    the per-tag tokenizer: every block's text, link density and code flag
+    over a skewed synth corpus and 20,000 tag-soup strings."""
+    rows = synth.gen_rows(4000, seed=42, monster_every=150, monster_size=8000)
+    assert _blocks_digest(r["text"] for r in rows) == (
+        "0d59235aaf3ec263cff22fcd33703f9a09b85aeb9fe3a248f1864e4c22c5d83a")
+    assert _blocks_digest(_tag_soup(20_000, seed=7)) == (
+        "9994e8af5f4a79735c4d7abeb1b4d05f4efbaee08b7c597c6c1378c50c7bc208")
