@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import functions as F, types as T
 from pyspark.sql import Window as W
 
-from .queries import ORACLE, QUERIES, q, t, widen
+from .queries import ORACLE, QUERIES, pin, q, t, widen
 
 # =========================================================================
 # Deduplication
@@ -2039,22 +2039,13 @@ def corpus_curation_e2e(spark, sf):
          .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
          .select("doc_id", "lang", "n_chars", "text",
                  F.split(F.trim("text"), r"\s+").alias("w")))
-    # stage 1: quality gate. The gate metrics are wrapped in
-    # when(monotonically_increasing_id() >= 0, ...) — a value-level
-    # no-op (the id is always >= 0) whose nondeterministic flag stops
-    # PushDownPredicates from substituting the gate regexes into a
-    # filter BELOW the widen() exchange. Without it the whole
-    # regex-heavy gate slid to SCAN parallelism (one task on a
-    # one-row-group file) with each regex re-inlined 3x across the
-    # conjuncts — the same pushdown trap as decontaminate_fuzzy's size
-    # filter, but here the filter cannot simply be dropped. With the
-    # barrier each regex evaluates once, post-exchange, cluster-wide
-    # (plan-verified; 10x replica median 3.7 -> 1.67 s). Retry-safe:
-    # the guard's VALUE is deterministic, only the flag is not.
-    nd = F.monotonically_increasing_id() >= 0
-    n_word = F.when(nd, F.size(F.expr(
+    # stage 1: quality gate. pin() keeps each gate regex at one eval
+    # per row above the widen() exchange; unpinned, the gate filter
+    # pulled all of them below it, 3x each (10x replica median 3.7 ->
+    # 1.67 s with the barrier)
+    n_word = pin(F.size(F.expr(
         r"regexp_extract_all(text, '[A-Za-z0-9]+', 0)")))
-    n_stop = F.when(nd, F.size(F.expr(
+    n_stop = pin(F.size(F.expr(
         r"regexp_extract_all(lower(text),"
         r" '\\b(the|a|an|and|or|of|to|in|is|it)\\b', 0)")))
     gated = (d.withColumn("n_word", n_word).withColumn("n_stop", n_stop)
@@ -2860,9 +2851,8 @@ def ngram_novelty_curve(spark, sf):
     attributed per source). Distinct grams per source → min-rank per
     gram (one hash agg over the gram key) → rank equality; everything
     linear in total gram volume, join keyed on the gram."""
-    # widen BEFORE the cheap null filter (same guard as the old inline
-    # probe, now sharing widen()'s memoized split-count probe; the
-    # isnotnull still reaches the scan via pushdown)
+    # widen BEFORE the cheap null filter: the isnotnull still reaches
+    # the scan via pushdown, below the round-robin exchange
     d = widen(spark, t(spark, sf, "documents")).filter(
         F.col("text").isNotNull())
     # Overlapping trigrams via zero-width-lookahead regex (verified
@@ -4482,14 +4472,9 @@ def emb_quantize_int8(spark, sf):
     # a one-row-group scan would run every row on one core
     e = widen(spark, t(spark, sf, "embeddings"))
     xd = F.transform("embedding", lambda x: F.abs(x.cast("double")))
-    # when(mid>=0, ...) barrier: without it PushDownPredicates inlines
-    # the whole array_max(transform(...)) into the scale>0 filter BELOW
-    # the widen() exchange — the lambda runs per row on the scan's
-    # single task AND re-runs above for the scale column. The guard's
-    # value is always true (ids are >= 0); only its nondeterministic
-    # flag matters, pinning one eval post-exchange (plan-verified).
-    e = e.withColumn("scale", F.when(F.monotonically_increasing_id() >= 0,
-                                     F.array_max(xd) / F.lit(127.0))) \
+    # pin(): the scale>0 filter would otherwise run the lambda below
+    # the widen() exchange as well as above it
+    e = e.withColumn("scale", pin(F.array_max(xd) / F.lit(127.0))) \
          .filter(F.col("scale") > 0)
     qv = F.transform(
         "embedding",
@@ -7663,15 +7648,14 @@ def decontaminate_fuzzy(spark, sf):
     inferred-filter evals are noise. (2) Map-parallelism guard: with
     no pre-join exchange, explode parallelism equals the SCAN's, and
     a one-row-group input file serializes the whole pipeline. When
-    the scan yields fewer splits than the cluster has slots, a
+    the scan has fewer row groups than the cluster has slots, a
     round-robin repartition of the raw docs (text-sized, cheaper
     than shuffling exploded grams) restores parallelism; at real
-    scale the scan has thousands of splits and the guard never
+    scale the scan has thousands of row groups and the guard never
     fires, keeping the one-exchange plan. Measured: 17.5 s (lambda,
     no guard) -> 9.6 s (lambda + guard) -> 1.09 s (regex + guard)."""
-    # widen BEFORE the cheap null/length filter (same guard as the old
-    # inline probe, now sharing widen()'s memoized split-count probe;
-    # the cheap predicates still reach the scan via pushdown)
+    # widen BEFORE the cheap null/length filter: the cheap predicates
+    # still reach the scan via pushdown, below the round-robin exchange
     d = (widen(spark, t(spark, sf, "documents"))
          .filter(F.col("text").isNotNull()
                  & (F.length(F.trim("text")) > 0)))
@@ -7687,17 +7671,12 @@ def decontaminate_fuzzy(spark, sf):
     # n_g is computed BEFORE the explode so the Generate's required
     # child output is (doc_id, n_g), not the whole gram array — a
     # size() above the Generate would carry ga per exploded row.
-    # when(mid>=0, ...) barrier on n_g: the final jaccard filter lets
-    # InferFiltersFromConstraints derive isnotnull(n_g), and predicate
-    # pushdown re-inlines the WHOLE gram regex into that filter below
-    # the round-robin exchange (one more whole-document regex pass on
-    # the scan's single task — the surviving sibling of the excluded
-    # InferFiltersFromGenerate trap). The guard's value is always true;
-    # its nondeterministic flag blocks the substitution (plan-verified).
+    # pin() on n_g: the final jaccard filter lets
+    # InferFiltersFromConstraints derive isnotnull(n_g), which would
+    # otherwise carry the whole gram regex below the widen() exchange
     posts = (garr.select(
-                 "doc_id",
-                 F.when(F.monotonically_increasing_id() >= 0,
-                        F.size("ga").cast("bigint")).alias("n_g"), "ga")
+                 "doc_id", pin(F.size("ga").cast("bigint")).alias("n_g"),
+                 "ga")
              .select("doc_id", "n_g", F.explode("ga").alias("g")))
     bench = (posts.filter(F.col("doc_id") % 11 == 0)
              .select(F.col("doc_id").alias("bench_id"),

@@ -1,6 +1,6 @@
 """The distributed extraction pipeline (SURVEY.md §3.2 — the flagship).
 
-    read ──► prune ──► salted repartition ──► sort-within ──► Arrow kernel ──► write
+    read ──► prune ──► salted repartition ──► Arrow kernel ──► write
 
 Scale design (BASELINE.json north_rule; SURVEY.md §4):
 
@@ -18,12 +18,11 @@ Scale design (BASELINE.json north_rule; SURVEY.md §4):
   with salt=8 a 100k-turn conversation made 12.5k-turn cells whose
   partition collisions produced 50s straggler tasks at 32 cores
   (measured, 1M-turn bench); salt=64 restores near-uniform cells.
-- **One shuffle total**; `sort_within=True` optionally adds a
-  within-partition (conv_id, turn_idx) sort for physically ordered
-  output files. Default off: the kernel is stateless per turn and the
-  ordering CONTRACT is enforced where it is semantic — the A8
-  reassembly array_sort — so the pipeline does not pay a sort
-  it does not need (measured ~30% of 32-core wall).
+- **One shuffle total, no sort**: the kernel is stateless per turn and
+  the ordering CONTRACT is enforced where it is semantic — the A8
+  reassembly array_sort — so the pipeline does not pay a
+  within-partition sort it does not need (measured ~30% of 32-core
+  wall).
 - **Broadcast model state (A9)**: weights dict broadcast once;
   executors deserialize once per process.
 - **Zero per-row Python at the Spark API level**: the only Python is
@@ -51,8 +50,7 @@ def extract_df(spark: SparkSession, transcripts: DataFrame,
                partitions: int | None = None,
                salt_buckets: int = DEFAULT_SALT_BUCKETS,
                weights: dict | None = None,
-               lineage_acc=None, input_file_col: str | None = None,
-               sort_within: bool = False) -> DataFrame:
+               lineage_acc=None, input_file_col: str | None = None) -> DataFrame:
     """Build the extraction plan over a transcripts DataFrame (lazy)."""
     weights = weights or ct.default_weights()
     b = spark.sparkContext.broadcast(weights)
@@ -67,11 +65,9 @@ def extract_df(spark: SparkSession, transcripts: DataFrame,
     if partitions is None:
         partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     salted = pruned.repartition(partitions, *salted_key(salt_buckets))
-    ordered = (salted.sortWithinPartitions("conv_id", "turn_idx")
-               if sort_within else salted)
 
     kern = make_kernel(b, lineage_acc=lineage_acc, input_file_col=input_file_col)
-    return ordered.mapInArrow(kern, EXTRACTED_DDL)
+    return salted.mapInArrow(kern, EXTRACTED_DDL)
 
 
 def decode_spans(extracted: DataFrame) -> DataFrame:

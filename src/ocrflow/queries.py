@@ -17,7 +17,9 @@ shuffles are, what changes at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql import Window as W
 
 QUERIES: dict = {}
@@ -35,58 +37,60 @@ def q(name: str, sql: str | None = None):
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    # scan-identity tag: lets widen() memoize its split-count probe per
-    # (application, path, split config) instead of compiling an RDD per
-    # call (~150 ms each on this driver)
-    df._ocrflow_src = path
-    return df
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def widen(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Scan-parallelism guard (the decontaminate_fuzzy lesson, round 5;
-    guide-style round-robin repartition): when the parquet scan yields
-    fewer splits than the cluster has slots — single-row-group files
-    cannot split below one task no matter the split size — a map-heavy
-    stage (regex extraction, explode fanout, Python kernels) serializes
-    onto one core. A round-robin repartition of the raw rows restores
-    parallelism for ~the cost of shuffling the input once (row-sized,
-    cheap next to the per-row compute it parallelizes). At 100 TB the
-    scan has thousands of splits and the guard is a no-op, keeping the
-    original plan. Apply ONLY where per-row compute dominates the
-    shuffle cost; never on plain column-pruned aggregation scans."""
+    """Scan-parallelism guard for map-heavy stages (regex extraction,
+    explode fanout, array lambdas, Python kernels) over a parquet scan.
+
+    A scan task never reads less than one parquet row group, so a scan
+    over fewer row groups than the cluster has slots keeps slots idle
+    however small the split size: a single-row-group file runs every
+    row on one core. When the row groups of ``df.inputFiles()`` number
+    fewer than ``defaultParallelism``, a round-robin repartition of the
+    raw rows spreads them over every slot for about the cost of
+    shuffling the input once. At 100 TB the scan has thousands of row
+    groups and the guard is a no-op, keeping the original plan.
+
+    The count comes from the parquet footers, read on the driver and
+    stopping as soon as it reaches ``defaultParallelism``; it compiles
+    no RDD and caches nothing, so it is always current for the files
+    the plan reads. Apply ONLY where per-row compute dominates the
+    shuffle cost; never on plain column-pruned aggregation scans. Pair
+    it with ``pin()`` on any computed column that a later filter could
+    otherwise pull below the exchange."""
     par = spark.sparkContext.defaultParallelism
-    src = getattr(df, "_ocrflow_src", None)
-    if src is None:
-        n = df.rdd.getNumPartitions()
-    else:
-        # Memoize the probe: df.rdd compiles the scan to an RDD (~150
-        # ms of driver work), and the suite probes the same handful of
-        # static tables dozens of times per run. The split count is a
-        # pure function of (files at path, maxPartitionBytes/openCost,
-        # parallelism), so the memo is PLAN METADATA — the same class
-        # of session-scoped cache as Spark's own InMemoryFileIndex —
-        # and never holds data or results. Keyed by applicationId so a
-        # new session (or a driver rerun) always re-probes.
-        # no default arg: Spark 4 VALIDATES a passed default against
-        # the conf's type (get(key, "") throws INVALID_CONF_VALUE on a
-        # stock session where the conf is unset); the no-arg form
-        # falls back to the conf's own default ("134217728b")
-        key = (spark.sparkContext.applicationId, src,
-               spark.conf.get("spark.sql.files.maxPartitionBytes"),
-               par)
-        n = _WIDEN_PROBE_CACHE.get(key)
-        if n is None:
-            n = df.rdd.getNumPartitions()
-            _WIDEN_PROBE_CACHE[key] = n
-    if n < par:
-        df = df.repartition(par)
-    return df
+    groups = 0
+    for uri in df.inputFiles():
+        fs, path = pafs.FileSystem.from_uri(uri)
+        with pq.ParquetFile(path, filesystem=fs) as f:
+            groups += f.metadata.num_row_groups
+        if groups >= par:
+            return df
+    return df.repartition(par)
 
 
-#: widen()'s split-count memo — metadata only, see widen()
-_WIDEN_PROBE_CACHE: dict = {}
+def pin(expr: Column) -> Column:
+    """Keep ``expr`` evaluated where it is projected: above ``widen()``'s
+    round-robin exchange, once per row.
+
+    Without it, predicate pushdown substitutes a computed column into
+    any filter on it (written, or inferred by
+    InferFiltersFromConstraints) and pushes that filter below the
+    exchange, so a regex or array lambda runs at scan parallelism (one
+    task on a one-row-group file) and again above. Wrapping the value
+    in a ``when()`` on the never-negative
+    ``monotonically_increasing_id()`` keeps the value (so a retry
+    recomputes the same result), and the nondeterministic id stops
+    Catalyst from moving the expression.
+
+    This is optimizer-version-specific: it relies on Catalyst never
+    pushing a predicate through a projection with a nondeterministic
+    field. It also blocks every predicate pushdown through that
+    projection, cheap ones included: ``decontaminate_fuzzy``'s
+    ``doc_id % 11`` split stays above the exchange."""
+    return F.when(F.monotonically_increasing_id() >= 0, expr)
 
 
 # =========================================================================

@@ -29,9 +29,11 @@ from pyspark.sql import SparkSession, functions as F
 from .icelite import IceliteTable, write_dataframe_files
 from .pipeline import DEFAULT_SALT_BUCKETS, extract_df
 
+#: lineage rows as run_extract builds them; a ``ts`` timestamp column
+#: is appended at write time
 LINEAGE_DDL = ("run_id string, snapshot_id bigint, partition_id int, "
                "input_file string, turn_lo bigint, turn_hi bigint, "
-               "rows_in bigint, rows_out bigint, wall_ms double, ts timestamp")
+               "rows_in bigint, rows_out bigint, wall_ms double")
 
 
 class _ListAccum(AccumulatorParam):
@@ -138,8 +140,7 @@ def compact_output(spark: SparkSession, out_table_path: str,
 def run_extract(spark: SparkSession, input_path: str, out_table_path: str,
                 run_id: str | None = None, partitions: int | None = None,
                 salt_buckets: int = DEFAULT_SALT_BUCKETS,
-                max_files: int | None = None,
-                bucket_output: bool = True) -> dict:
+                max_files: int | None = None) -> dict:
     """One resumable extraction run. Returns a summary dict.
 
     ``max_files`` caps how many pending input files this run processes —
@@ -169,42 +170,36 @@ def run_extract(spark: SparkSession, input_path: str, out_table_path: str,
 
     t0 = time.time()
     commit_dir = out.new_commit_dir(f"{run_id}-{uuid.uuid4().hex[:6]}")
-    if bucket_output:
-        # output layout partitioned by conv_bucket (SURVEY.md §4):
-        # downstream conversation-level reads prune to their buckets at
-        # the manifest level. Kept as a regular column too, so reading
-        # leaf files directly (no basePath) still sees it. Trade-off:
-        # files multiply by (tasks x buckets); at small inputs that is
-        # many tiny files — compact with a pre-write repartition("_cb")
-        # when commit sizes warrant it.
-        extracted = extracted.withColumn(
-            "conv_bucket",
-            F.pmod(F.xxhash64("conv_id"), F.lit(N_CONV_BUCKETS)).cast("int"))
-        files = write_dataframe_files(
-            extracted.withColumn("_cb", F.col("conv_bucket")),
-            commit_dir, partition_by=("_cb",))
-    else:
-        files = write_dataframe_files(extracted, commit_dir)
+    # output layout partitioned by conv_bucket (SURVEY.md §4):
+    # downstream conversation-level reads prune to their buckets at
+    # the manifest level. Kept as a regular column too, so reading
+    # leaf files directly (no basePath) still sees it. Trade-off:
+    # files multiply by (tasks x buckets); at small inputs that is
+    # many tiny files — compact with a pre-write repartition("_cb")
+    # when commit sizes warrant it.
+    extracted = extracted.withColumn(
+        "conv_bucket",
+        F.pmod(F.xxhash64("conv_id"), F.lit(N_CONV_BUCKETS)).cast("int"))
+    files = write_dataframe_files(
+        extracted.withColumn("_cb", F.col("conv_bucket")),
+        commit_dir, partition_by=("_cb",))
     wall_s = time.time() - t0
 
     sid_guess = (out.current_snapshot_id() or 0) + 1
     # per-task lineage from the accumulator (partition id, rows, turn
     # range, wall), deduped by partition id against task-retry replays
-    ddl = ("run_id string, snapshot_id bigint, partition_id int, "
-           "input_file string, turn_lo bigint, turn_hi bigint, "
-           "rows_in bigint, rows_out bigint, wall_ms double")
     task_rows = _dedup_lineage_rows(acc.value)
     lineage_rows = [
         (run_id, sid_guess, int(pid), in_files, int(lo), int(hi),
          int(rin), int(rout), float(ms))
         for (pid, in_files, rin, rout, lo, hi, ms) in task_rows]
-    ldf = (spark.createDataFrame(lineage_rows, ddl)
+    ldf = (spark.createDataFrame(lineage_rows, LINEAGE_DDL)
            .withColumn("ts", F.current_timestamp()))
     # exact per-input-file completion markers (partition_id = -1): resume
     # anti-joins on these even when one task consumed several files
     file_rows = [(run_id, sid_guess, -1, f, -1, -1, -1, -1, 0.0)
                  for f in pending]
-    fdf = (spark.createDataFrame(file_rows, ddl)
+    fdf = (spark.createDataFrame(file_rows, LINEAGE_DDL)
            .withColumn("ts", F.current_timestamp()))
     lineage_commit_dir = lineage.new_commit_dir(f"{run_id}-{uuid.uuid4().hex[:6]}")
     lfiles = write_dataframe_files(ldf.unionByName(fdf).coalesce(1),

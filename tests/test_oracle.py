@@ -7,6 +7,7 @@ order-insensitive values (floats to 1e-9 rel tol).
 
 import math
 import os
+import types
 
 import duckdb
 import pytest
@@ -57,8 +58,60 @@ def _close(a, b):
     return a == b
 
 
+def _code_names(code) -> set:
+    names = set(code.co_names)
+    for c in code.co_consts:
+        if isinstance(c, types.CodeType):
+            names |= _code_names(c)
+    return names
+
+
+def _guarded(fn, seen=frozenset()) -> bool:
+    """fn calls widen() or pin(), directly or through an ocrflow helper
+    (e.g. dataops._docs_tokenized)."""
+    names = _code_names(fn.__code__)
+    if names & {"widen", "pin"}:
+        return True
+    return any(_guarded(h, seen | {fn})
+               for h in (fn.__globals__.get(n) for n in names)
+               if isinstance(h, types.FunctionType) and h not in seen
+               and h.__module__.startswith("ocrflow"))
+
+
+#: oracled keys behind the scan-parallelism guard or a pushdown barrier
+GUARDED = sorted(k for k in ORACLE if _guarded(QUERIES[k]))
+
+
+@pytest.fixture(scope="module")
+def stock(spark):
+    """A session sharing the test context with every modifiable SQL conf
+    the tuned builder set unset again, except the UTC time zone the
+    oracle comparison needs."""
+    s = spark.newSession()
+    for k, _ in spark.sparkContext.getConf().getAll():
+        if (k.startswith("spark.sql.") and k != "spark.sql.session.timeZone"
+                and s.conf.isModifiable(k)):
+            s.conf.unset(k)
+    return s
+
+
+def test_guarded_keys_found():
+    assert {"corpus_curation_e2e", "emb_quantize_int8", "decontaminate_fuzzy",
+            "str_regexp", "ann_lsh_recall"} <= set(GUARDED)
+
+
+@pytest.mark.parametrize("name", GUARDED)
+def test_guarded_query_matches_oracle_stock_session(stock, duck, name):
+    assert stock.conf.get("spark.sql.shuffle.partitions") == "200"
+    _assert_matches_oracle(stock, duck, name)
+
+
 @pytest.mark.parametrize("name", sorted(ORACLE))
 def test_query_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(spark, duck, name)
+
+
+def _assert_matches_oracle(spark, duck, name):
     sdf = QUERIES[name](spark, SF_DIR)
     s_rows = sdf.collect()
     s_cols = sdf.columns

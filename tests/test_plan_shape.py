@@ -487,55 +487,92 @@ def test_text_nb_train_single_count_agg_broadcast_sizes(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_widen_barriers_keep_heavy_exprs_above_rr_exchange(spark):
-    # round-6 continuation: the when(monotonically_increasing_id()>=0,
-    # ...) barriers must keep regex/array-lambda work ABOVE the
-    # scan-parallelism guard's round-robin exchange — predicate
-    # pushdown used to substitute the computed columns and run them
-    # per row at scan parallelism (one task on one-row-group inputs)
+def _subtrees(plan: str, needle: str) -> list[list[str]]:
+    """Each plan line containing ``needle`` with the lines of its own
+    subtree: the following lines whose node starts deeper."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if needle in line:
+            d, sub = depth(line), [line]
+            for below in lines[i + 1:]:
+                if depth(below) <= d:
+                    break
+                sub.append(below)
+            out.append(sub)
+    return out
+
+
+def test_subtrees_stop_at_sibling():
+    plan = ("A\n"
+            "+- Join\n"
+            "   :- Exchange RoundRobinPartitioning(4)\n"
+            "   :  +- Filter f\n"
+            "   +- Filter g\n")
+    (sub,) = _subtrees(plan, "RoundRobinPartitioning")
+    assert sub[1:] == ["   :  +- Filter f"]
+
+
+def test_widen_barriers_keep_heavy_exprs_above_rr_exchange(spark, monkeypatch):
+    # pin() must keep regex/array-lambda work ABOVE widen()'s
+    # round-robin exchange: predicate pushdown would otherwise
+    # substitute the computed columns into filters below it, running
+    # them per row at scan parallelism (one task on one-row-group
+    # inputs). corpus_curation_e2e's survivor localCheckpoint hides
+    # its exchanges behind a Scan ExistingRDD, so expose the full plan.
     import re
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+    monkeypatch.setattr(ClassicDF, "localCheckpoint",
+                        lambda self, *a, **k: self)
     for key, needle in (("corpus_curation_e2e", "regexp_extract_all"),
                         ("emb_quantize_int8", "lambdafunction"),
                         ("decontaminate_fuzzy", "regexp_extract_all")):
-        plan = _plan(QUERIES[key](spark, SF_DIR))
-        lines = plan.splitlines()
-        rrs = [i for i, l in enumerate(lines)
-               if "RoundRobinPartitioning" in l]
-        if not rrs:  # widen no-op (multi-split input): nothing to pin
-            continue
-        rr = max(rrs)
-        below = [l for l in lines[rr:]
-                 if re.search(needle, l)
-                 and ("Filter" in l or "DataFilters" in l)]
-        assert not below, f"{key}: heavy expr below RR exchange: {below[:1]}"
+        subs = _subtrees(_plan(QUERIES[key](spark, SF_DIR)),
+                         "RoundRobinPartitioning")
+        assert subs, f"{key}: no round-robin exchange (widen no-op?)"
+        for sub in subs:
+            below = [l for l in sub[1:] if re.search(needle, l)
+                     and ("Filter" in l or "DataFilters" in l)]
+            assert not below, f"{key}: heavy expr below RR exchange: {below[:1]}"
 
 
-def test_widen_probe_memo_and_decision(spark):
-    # the split-count probe memo must (a) cache per (app, path, conf),
-    # (b) not change widen's repartition decision
+def test_widen_decides_from_row_groups(spark, tmp_path):
+    # widen() repartitions iff the scan's files hold fewer parquet row
+    # groups than defaultParallelism (a scan task never reads less
+    # than one row group)
+    import pyarrow.parquet as pq
     from ocrflow import queries as Q
-    Q._WIDEN_PROBE_CACHE.clear()
-    df = Q.t(spark, SF_DIR, "documents")
     par = spark.sparkContext.defaultParallelism
-    out1 = Q.widen(spark, df)
-    assert len(Q._WIDEN_PROBE_CACHE) == 1
-    (key, n), = Q._WIDEN_PROBE_CACHE.items()
-    assert key[0] == spark.sparkContext.applicationId
-    assert n == df.rdd.getNumPartitions()  # memo equals the real probe
-    out2 = Q.widen(spark, Q.t(spark, SF_DIR, "documents"))
-    assert len(Q._WIDEN_PROBE_CACHE) == 1  # second call hit the memo
-    # decision parity: repartitioned iff the real probe says < cores
-    expect_widen = n < par
-    for out in (out1, out2):
-        assert ("RoundRobinPartitioning" in _plan(out)) == expect_widen
-    # stock-session regression: with maxPartitionBytes UNSET the memo
-    # key must fall back to the conf's own default instead of passing
-    # a typed default (Spark 4 validates get(key, "") and throws
-    # INVALID_CONF_VALUE — caught by the stock oracle sweep)
+    rows = pq.read_table(f"{SF_DIR}/documents.parquet")
+    assert rows.num_rows >= par
+    step = -(-rows.num_rows // par)
+    one = str(tmp_path / "one.parquet")
+    pq.write_table(rows, one)
+    many = str(tmp_path / "many.parquet")
+    pq.write_table(rows, many, row_group_size=step)
+    assert pq.ParquetFile(one).metadata.num_row_groups == 1
+    assert pq.ParquetFile(many).metadata.num_row_groups >= par
+    files = tmp_path / "files"
+    files.mkdir()
+    for i in range(par):
+        pq.write_table(rows.slice(i * step, step), str(files / f"{i}.parquet"))
+
+    def widened(path):
+        out = Q.widen(spark, spark.read.parquet(path))
+        return "RoundRobinPartitioning" in _plan(out)
+
+    assert widened(one)
+    assert not widened(many)
+    assert not widened(str(files))
+    # stock session: the decision must not depend on (or trip over) an
+    # unset split-size conf
     prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.unset("spark.sql.files.maxPartitionBytes")
     try:
-        Q._WIDEN_PROBE_CACHE.clear()
-        Q.widen(spark, Q.t(spark, SF_DIR, "documents"))  # must not raise
+        assert widened(one)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
