@@ -5,9 +5,9 @@ core budgets — the sanctioned stand-in for N vs 4N executor clusters
 
 Honesty notes:
 - Each config runs in a FRESH JVM subprocess pinned with ``taskset`` to
-  its core budget (0-7 vs 0-31). Without pinning, the local[8] JVM's
-  scan/shuffle/Arrow threads borrow idle cores and inflate the small
-  config, understating true scaling.
+  its core budget (0-(N-1) vs 0-(4N-1)). Without pinning, the small
+  config's JVM scan/shuffle/Arrow threads borrow idle cores and inflate
+  it, understating true scaling.
 - The input is generated once to parquet and re-read per run — the
   timed region covers scan → salted repartition → Arrow kernel → count,
   i.e. the full pipeline minus result collection.
@@ -33,15 +33,17 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "src"))
 
-# N vs 4N core budgets. Default 2 vs 8: this host carries invisible
-# neighbor-container load that the kernel scheduler balances onto
-# unpinned cores, so small pinned sets measure the CODE while
-# whole-machine sets measure the NEIGHBORS (local[32] was reproducibly
-# slower than local[8] on identical work). Override with
-# OCRFLOW_BENCH_CONFIGS="8:local[8],32:local[32]" to measure the wide
-# pair anyway; both sets are reported in BENCH/BASELINE.md.
-import os as _os
-_cfg = _os.environ.get("OCRFLOW_BENCH_CONFIGS", "2:local[2],8:local[8]")
+# N vs 4N core budgets, default N = nproc / 4, so 4N is every core this
+# process may use (1 vs 4 on a 4-core host). Whole-machine sets also
+# measure neighbor load and the driver JVM's own threads (on the old
+# 32-core host local[32] was reproducibly slower than local[8] on
+# identical work). Override with e.g.
+# OCRFLOW_BENCH_CONFIGS="2:local[2],8:local[8]" to keep 4N below the
+# machine.
+NPROC = len(os.sched_getaffinity(0))
+_n = max(1, NPROC // 4)
+_cfg = os.environ.get("OCRFLOW_BENCH_CONFIGS",
+                      f"{_n}:local[{_n}],{4 * _n}:local[{4 * _n}]")
 _parsed = [c.split(":") for c in _cfg.split(",")]
 CONFIGS = [("N", int(_parsed[0][0]), _parsed[0][1]),
            ("4N", int(_parsed[1][0]), _parsed[1][1])]
@@ -91,7 +93,7 @@ def ensure_input(turns: int, path: str) -> None:
         return
     from ocrflow.session import build_session
     from ocrflow.synth import synth_dataframe
-    spark = build_session(master="local[32]", app="ocrflow-gen")
+    spark = build_session(master=f"local[{NPROC}]", app="ocrflow-gen")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.perf_counter()
     synth_dataframe(spark, turns, seed=42, partitions=128) \

@@ -16,11 +16,32 @@ Batch size is governed by ``spark.sql.execution.arrow.maxRecordsPerBatch``
 — the graft analog of the reference's inference batch size
 (BASELINE.json north_star: "inference batches sized per Arrow record
 batch to keep the classify kernel saturated").
+
+Each task first drops the zip importers from the worker's import cache
+(``_drop_zip_importers``). Executors load pyspark from
+``$SPARK_HOME/python/lib/pyspark.zip``, and a reused Python worker
+calls ``importlib.invalidate_caches()`` at the start of every task
+(``pyspark.worker_util.setup_spark_files``). On CPython 3.11 that makes
+every cached ``zipimport.zipimporter`` re-read its archive's whole
+central directory: 16 importers once the kernel has run (12 for the
+1,328-entry pyspark.zip and the subpackages imported from it, 2 each
+for py4j and the spark-core jar). On a 4-vCPU host, cProfile put 30.9 of
+50.8 s of 52 reused-worker tasks in those re-reads, and the median gap
+from task launch to a UDF's first line was ~280 ms. With the drop it is
+~30 ms, and in a traced ``extract_skewed`` pass the kernel stage's
+median task fell from 0.34 to 0.20 s. Dropping the entries is safe:
+the path finder makes a new importer on the next lookup, and zipimport
+keeps each parsed directory in its module cache, so that does not
+re-read the archive either. The first task of each worker still pays
+once; where nothing is imported from a zip the helper finds nothing to
+drop.
 """
 
 from __future__ import annotations
 
+import sys
 import time
+import zipimport
 
 import numpy as np
 import pyarrow as pa
@@ -139,6 +160,19 @@ def extract_batch(batch: pa.RecordBatch, weights: dict) -> pa.RecordBatch:
         schema=_OUT_SCHEMA)
 
 
+def _drop_zip_importers() -> None:
+    """Delete every ``zipimporter`` from ``sys.path_importer_cache``.
+
+    The next ``importlib.invalidate_caches()`` then re-reads no zip
+    archive (see the module docstring); a later import through a zip
+    path entry gets a fresh importer from zipimport's directory cache.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[path]
+
+
 def make_kernel(broadcast_weights, lineage_acc=None, input_file_col: str | None = None):
     """Build the mapInArrow function.
 
@@ -147,9 +181,14 @@ def make_kernel(broadcast_weights, lineage_acc=None, input_file_col: str | None 
     list accumulator) is given, the kernel emits one lineage record per
     task: (partition_id, input_file, rows_in, rows_out, turn_lo,
     turn_hi, wall_ms) — zero extra Spark jobs (SURVEY.md §2.A A11).
+    ``wall_ms`` times the kernel generator only, from just after the
+    broadcast lookup to the end of its last batch. It does not include
+    the Python worker's per-task set-up before the kernel starts, which
+    was once about half of each task (see the module docstring).
     """
 
     def kernel(batches):
+        _drop_zip_importers()
         from pyspark import TaskContext
         weights = broadcast_weights.value
         t0 = time.perf_counter()

@@ -21,8 +21,8 @@ Scale design (BASELINE.json north_rule; SURVEY.md §4):
 - **One shuffle total, no sort**: the kernel is stateless per turn and
   the ordering CONTRACT is enforced where it is semantic — the A8
   reassembly array_sort — so the pipeline does not pay a
-  within-partition sort it does not need (measured ~30% of 32-core
-  wall).
+  within-partition sort it does not need (32-core history, not
+  re-measured since: the sort was ~30% of wall).
 - **Broadcast model state (A9)**: weights dict broadcast once;
   executors deserialize once per process.
 - **Zero per-row Python at the Spark API level**: the only Python is

@@ -14,7 +14,10 @@ Lineage rows (BASELINE.json north_star: "per-partition lineage rows
 (partition id, input file, turn-range, rows-in/out, wall-time) written
 to a metrics table") come from the kernel's list accumulator — zero
 extra Spark jobs; per-input-file completion comes from a cheap
-column-pruned scan of the just-written output.
+column-pruned scan of the just-written output. The wall-time column
+``wall_ms`` times the kernel generator only, not the whole task: the
+Python worker's per-task set-up before the kernel starts is not in it
+(``kernel.make_kernel``).
 """
 
 from __future__ import annotations

@@ -44,7 +44,8 @@ def _export_pythonpath() -> str:
         os.environ["PYTHONPATH"] = f"{pkg_dir}:{cur}" if cur else pkg_dir
     # one BLAS thread per python worker: N workers × M BLAS threads
     # oversubscribes cores catastrophically on tiny kernel matvecs
-    # (measured 15× per-turn slowdown at local[32] before pinning)
+    # (32-core history, not re-measured since: a 15× per-turn slowdown
+    # at local[32] before pinning)
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
                 "NUMEXPR_NUM_THREADS", "VECLIB_MAXIMUM_THREADS"):
         os.environ.setdefault(var, "1")
