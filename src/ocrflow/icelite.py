@@ -467,24 +467,18 @@ class IceliteTable:
                                         + [del_entry]))
 
     def compact(self, spark, target_file_bytes: int = 128 << 20,
-                partition_by: tuple[str, ...] = (),
                 derive: dict | None = None,
                 sort_by: tuple[str, ...] = (),
                 stats_cols: tuple[str, ...] = ()) -> int:
         """Rewrite the current snapshot's files into ~target-sized files
-        (icelite's rewrite_data_files). Bucketed commit layouts multiply
-        files by (tasks × buckets) per commit (runner.py documents the
-        blowup) — at 100 TB with thousands of commits this is the first
-        operational wall; compaction periodically collapses them. Old
-        snapshots remain time-travelable (commit_replace keeps them).
+        (icelite's rewrite_data_files). Every append commits at least one
+        file per writing task, so a table that takes thousands of small
+        commits accumulates thousands of small files; compaction
+        periodically collapses them. Old snapshots remain
+        time-travelable (commit_replace keeps them).
 
-        With ``partition_by`` the hive layout (and manifest path
-        pruning over it) is preserved — sizing is then per output task
-        within each partition value. Hive partition columns live in
-        the directory names, not the data files, so a leaf-file read
-        doesn't see them — pass ``derive`` to rebuild them (e.g.
-        ``{"_cb": F.col("conv_bucket")}`` for the runner's bucketed
-        layout, which keeps the bucket as a regular column too).
+        ``derive`` = {name: Column} adds computed columns before the
+        rewrite, e.g. a Z-order key to cluster on (``zorder_expr``).
 
         ``sort_by`` clusters the rewrite (range-partition + sort within
         files — Iceberg's rewrite sort strategy): each output file then
@@ -503,12 +497,9 @@ class IceliteTable:
         if sort_by:
             shuffled = (df.repartitionByRange(n_out, *sort_by)
                         .sortWithinPartitions(*sort_by))
-        elif partition_by:
-            shuffled = df.repartition(n_out, *partition_by)
         else:
             shuffled = df.repartition(n_out)
-        new_files = write_dataframe_files(shuffled, out_dir,
-                                          partition_by=partition_by)
+        new_files = write_dataframe_files(shuffled, out_dir)
         return self.commit_replace(new_files, props={
             "compaction_of": src,
             "files_before": len(files), "files_after": len(new_files)},
@@ -670,7 +661,7 @@ class IceliteTable:
         ref via ref_snapshot_id).
 
         ``path_filter`` prunes files whose relative path does not
-        contain the given substring (e.g. "conv_bucket=3/") BEFORE any
+        contain the given substring (e.g. "_day=2024-01-01/") BEFORE any
         scan — manifest-level partition pruning, the icelite analog of
         Iceberg's partition stats.
 
@@ -882,7 +873,7 @@ def write_dataframe_files(df, out_dir: str,
     manifest entries. With ``partition_by``, files land under
     partition=value/ subdirs (hive layout) — the manifest keeps the
     relative paths, so the partition value is recoverable from the path
-    for file-level pruning (see IceliteTable.read bucket filter).
+    for file-level pruning (see IceliteTable.read path_filter).
     """
     w = df.write.mode("overwrite")
     if partition_by:

@@ -4636,10 +4636,12 @@ def tpch_q21_shape(spark, sf):
     # stats the planner falls back to sort-merge for these
     # extra-condition joins, sorting all three 6M-row legs; the hint
     # pins shuffled-hash (no sorts — the per-partition build is
-    # lineitem/N_partitions, bounded at any scale by partition sizing
-    # and AQE skew-split). Measured at the 10× replica: median
-    # 1.64 → 1.44 s interleaved, and the executed plan's three Sort
-    # nodes disappear.
+    # lineitem/N_partitions, so it is bounded only by partition sizing:
+    # a shuffled-hash build has no sort-merge spill fallback, and AQE's
+    # skew-split cannot split a semi/anti join's build side, so a hot
+    # l_orderkey lands whole in one task's hash map). Measured at the
+    # 10× replica: median 1.64 → 1.44 s interleaved, and the executed
+    # plan's three Sort nodes disappear.
     l2 = li.select(F.col("l_orderkey").alias("k2"),
                    F.col("l_suppkey").alias("s2")).hint("shuffle_hash")
     l3 = li.select(F.col("l_orderkey").alias("k3"),

@@ -78,9 +78,6 @@ def completed_input_files(spark: SparkSession, lineage_table: IceliteTable) -> s
     return {r["input_file"] for r in rows}
 
 
-N_CONV_BUCKETS = 16
-
-
 def _lineage_confirmed_snapshots(lineage: IceliteTable) -> set[int]:
     """Data snapshot ids that have a paired lineage commit (read from
     lineage snapshot props — pure metadata, no Spark scan)."""
@@ -125,21 +122,6 @@ def _dedup_lineage_rows(rows: list) -> list:
     return list(seen.values())
 
 
-def compact_output(spark: SparkSession, out_table_path: str,
-                   target_file_bytes: int = 128 << 20) -> int:
-    """One-call compaction for run_extract's bucketed output layout:
-    rewrites the (tasks × buckets) small files into ~target-sized files
-    per conv_bucket, preserving the hive layout (and manifest path
-    pruning) by re-deriving the _cb partition column from the
-    conv_bucket data column. Run it every N commits; follow with
-    expire_snapshots + remove_orphan_files to reclaim the old files.
-    """
-    tbl = IceliteTable(out_table_path)
-    return tbl.compact(spark, target_file_bytes=target_file_bytes,
-                       partition_by=("_cb",),
-                       derive={"_cb": F.col("conv_bucket")})
-
-
 def run_extract(spark: SparkSession, input_path: str, out_table_path: str,
                 run_id: str | None = None, partitions: int | None = None,
                 salt_buckets: int = DEFAULT_SALT_BUCKETS,
@@ -173,19 +155,7 @@ def run_extract(spark: SparkSession, input_path: str, out_table_path: str,
 
     t0 = time.time()
     commit_dir = out.new_commit_dir(f"{run_id}-{uuid.uuid4().hex[:6]}")
-    # output layout partitioned by conv_bucket (SURVEY.md §4):
-    # downstream conversation-level reads prune to their buckets at
-    # the manifest level. Kept as a regular column too, so reading
-    # leaf files directly (no basePath) still sees it. Trade-off:
-    # files multiply by (tasks x buckets); at small inputs that is
-    # many tiny files — compact with a pre-write repartition("_cb")
-    # when commit sizes warrant it.
-    extracted = extracted.withColumn(
-        "conv_bucket",
-        F.pmod(F.xxhash64("conv_id"), F.lit(N_CONV_BUCKETS)).cast("int"))
-    files = write_dataframe_files(
-        extracted.withColumn("_cb", F.col("conv_bucket")),
-        commit_dir, partition_by=("_cb",))
+    files = write_dataframe_files(extracted, commit_dir)
     wall_s = time.time() - t0
 
     sid_guess = (out.current_snapshot_id() or 0) + 1
@@ -214,8 +184,7 @@ def run_extract(spark: SparkSession, input_path: str, out_table_path: str,
     # default readers never accumulate duplicate rows, and resume
     # stays exactly-once end to end.
     # conv_id min/max per file ride the manifest (read(stats_filter=)
-    # then skips files at the manifest level for conv-range reads —
-    # complements the conv_bucket hive pruning)
+    # then skips files at the manifest level for conv-range reads)
     sid = out.commit_append(files, props={"run_id": run_id,
                                           "input_files": len(pending)},
                             stats_cols=("conv_id",))

@@ -366,39 +366,37 @@ def test_expire_and_gc_reclaim_precompaction_files(spark, tmp_path):
         tbl.snapshot(2)                            # time travel released
 
 
-def test_compaction_preserves_bucketed_layout(spark, input_dir, tmp_path):
+def test_run_extract_writes_flat_layout(spark, input_dir, tmp_path):
+    """run_extract commits the flat layout streaming.commit_epoch
+    writes: no hive directories, the kernel's schema, conv_id stats on
+    every manifest entry, and compact() shrinks the file count."""
+    from pyspark.sql import functions as F
+
+    from ocrflow.kernel import EXTRACTED_DDL
+
     out = str(tmp_path / "extracted")
     run_extract(spark, input_dir, out, run_id="r1", partitions=4, max_files=2)
     run_extract(spark, input_dir, out, run_id="r2", partitions=4)
     tbl = IceliteTable(out)
-    files_before = len(tbl.file_list())
-    from ocrflow.runner import compact_output
-    compact_output(spark, out, target_file_bytes=1 << 30)
-    files_after = tbl.file_list()
-    assert len(files_after) < files_before
-    assert all("_cb=" in f for f in files_after)   # hive layout preserved
-    full = tbl.read(spark)
-    assert full.count() == 300
-    # manifest path pruning still works over the compacted layout
-    some = full.select("conv_bucket").first()["conv_bucket"]
-    pruned = tbl.read(spark, path_filter=f"_cb={some}/")
-    assert 0 < pruned.count() < 300
-
-
-def test_bucketed_output_layout_and_pruning(spark, input_dir, tmp_path):
-    out = str(tmp_path / "extracted")
-    run_extract(spark, input_dir, out, run_id="run-b", partitions=4)
-    tbl = IceliteTable(out)
     files = tbl.file_list()
-    assert any("_cb=" in f for f in files)  # hive-partitioned layout
+    # no hive partition directories (key=value path segments)
+    assert not any("=" in os.path.relpath(f, out) for f in files)
     full = tbl.read(spark)
-    assert "conv_bucket" in full.columns    # recoverable without basePath
+    want = spark.createDataFrame([], EXTRACTED_DDL).schema
+    assert ([(f.name, f.dataType) for f in full.schema]
+            == [(f.name, f.dataType) for f in want])
     assert full.count() == 300
-    # manifest-level pruning: one bucket reads strictly fewer files
-    some = full.select("conv_bucket").first()["conv_bucket"]
-    pruned = tbl.read(spark, path_filter=f"_cb={some}/")
-    assert 0 < pruned.count() < 300
-    assert pruned.select("conv_bucket").distinct().count() == 1
+    assert all("conv_id" in e.get("stats", {})
+               for e in tbl.snapshot()["files"])
+    # manifest stats pruning keeps every row of the conversation
+    c = full.select("conv_id").first()["conv_id"]
+    pruned = tbl.read(spark, stats_filter={"conv_id": (c, c)})
+    n_c = full.filter(F.col("conv_id") == c).count()
+    assert pruned.filter(F.col("conv_id") == c).count() == n_c
+
+    tbl.compact(spark, target_file_bytes=1 << 30, stats_cols=("conv_id",))
+    assert len(tbl.file_list()) < len(files)
+    assert tbl.read(spark).count() == 300
 
 
 # -- round 3: delete_where, timestamp travel, validated rewrites ----------
