@@ -2,8 +2,9 @@
 """Round-6 equivalence fingerprint: order-insensitive result hash for
 queries() keys, to prove a rewrite computes the identical result.
 
-Usage: python bench/r06_equiv.py KEY [KEY...] [--sf DIR ...]
-Prints one JSON line {key: {sf: {"n": rows, "hash": md5}}}.
+Usage: python bench/r06_equiv.py KEY [KEY...] [--sf DIR ...] [--cpus N]
+Prints one JSON line {key: {sf: {"n": rows, "hash": md5}}}. --cpus
+defaults to $SPARK_GRAFT_CPUS, else the CPUs this process may run on.
 
 Hashing: every row formatted with repr (floats via repr -> exact bit
 pattern), rows sorted lexicographically, md5 over the joined bytes —
@@ -25,7 +26,9 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("keys", nargs="+")
     ap.add_argument("--sf", action="append", default=None)
-    ap.add_argument("--cpus", type=int, default=16)
+    ap.add_argument("--cpus", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS")
+                                or len(os.sched_getaffinity(0))))
     args = ap.parse_args()
     sfs = args.sf or ["/root/testdata/sf0.001", "/root/testdata/sf0.01",
                       "/root/testdata/sf0.1"]

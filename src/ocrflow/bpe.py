@@ -32,7 +32,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F, types as T
 
-from .queries import q, t
+from .queries import q, t, words
 
 WORD_END = "</w>"
 MAX_WORD_CHARS = 24  # bounds the per-word merge loop; longer tokens
@@ -109,8 +109,7 @@ def _corpus_word_counts(spark, sf, num_words_cap: int | None = None):
     hash-agg counts (map-side combinable). Returns the collected
     frequency table."""
     d = t(spark, sf, "documents").filter(F.col("text").isNotNull())
-    wc = (d.select(F.explode(F.split(F.lower(F.trim("text")), r"\s+"))
-                   .alias("w"))
+    wc = (d.select(F.explode(words(lower=True)).alias("w"))
           .filter((F.col("w") != "") &
                   (F.length("w") <= MAX_WORD_CHARS))
           .groupBy("w").agg(F.count("*").alias("n")))

@@ -22,7 +22,8 @@ import pandas as pd
 from pyspark.sql import functions as F, types as T
 from pyspark.sql import Window as W
 
-from .queries import ORACLE, QUERIES, pin, q, t, widen
+from .queries import (ORACLE, QUERIES, n_stop, n_word, pin, q, quality_gate,
+                      spaced, t, widen, word_ngrams, words)
 
 # =========================================================================
 # Deduplication
@@ -615,16 +616,14 @@ def text_quality_score(spark, sf):
     d = widen(spark, t(spark, sf, "documents")).filter(
         F.col("text").isNotNull() & (F.length("text") > 0))
     n_char = F.length("text")
-    n_word = F.size(F.regexp_extract_all("text", F.lit("[A-Za-z0-9]+"), 0))
+    nw = n_word()
     n_punct = F.size(F.regexp_extract_all("text", F.lit("[.,;:!?]"), 0))
-    n_stop = F.size(F.regexp_extract_all(
-        F.lower("text"), F.lit(r"\b(the|a|an|and|or|of|to|in|is|it)\b"), 0))
     return d.select(
-        "doc_id", n_char.alias("n_char"), n_word.alias("n_word"),
+        "doc_id", n_char.alias("n_char"), nw.alias("n_word"),
         F.round(n_punct.cast("double") / n_char, 6).alias("punct_ratio"),
-        F.round(n_stop.cast("double") / F.greatest(n_word, F.lit(1)), 6)
+        F.round(n_stop().cast("double") / F.greatest(nw, F.lit(1)), 6)
          .alias("stopword_ratio"),
-        F.round(n_char.cast("double") / F.greatest(n_word, F.lit(1)), 6)
+        F.round(n_char.cast("double") / F.greatest(nw, F.lit(1)), 6)
          .alias("avg_word_len"))
 
 
@@ -642,7 +641,7 @@ def text_token_count(spark, sf):
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
     return d.select(
         "doc_id",
-        F.size(F.split(F.trim("text"), r"\s+")).alias("ws_tokens"),
+        F.size(words()).alias("ws_tokens"),
         F.size(F.regexp_extract_all(
             "text", F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0))
          .alias("bpe_ish_tokens"))
@@ -682,13 +681,8 @@ def corpus_quality_filter(spark, sf):
     # scan (no materialized score table needed)
     d = t(spark, sf, "documents").filter(
         F.col("text").isNotNull() & (F.length("text") > 0))
-    n_word = F.size(F.regexp_extract_all("text", F.lit("[A-Za-z0-9]+"), 0))
-    n_stop = F.size(F.regexp_extract_all(
-        F.lower("text"), F.lit(r"\b(the|a|an|and|or|of|to|in|is|it)\b"), 0))
-    cpw = F.col("n_chars").cast("double") / F.greatest(n_word, F.lit(1))
-    return (d.withColumn("n_word", n_word).withColumn("n_stop", n_stop)
-            .filter((F.col("n_word") >= 5) & cpw.between(3, 15)
-                    & ((F.col("lang") != "en") | (F.col("n_stop") > 0)))
+    return (quality_gate(d.withColumn("n_word", n_word())
+                         .withColumn("n_stop", n_stop()))
             .select("doc_id", "lang", "n_chars"))
 
 
@@ -726,7 +720,7 @@ def corpus_stats(spark, sf):
     # oracle string-identical at test scale).
     d = t(spark, sf, "documents").filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-    toks = F.size(F.split(F.trim("text"), r"\s+"))
+    toks = F.size(words())
     return (d.groupBy("lang")
             .agg(F.count("*").alias("n_docs"),
                  F.sum(toks).cast("long").alias("total_tokens"),
@@ -760,7 +754,7 @@ def doc_chunking(spark, sf):
     (kept: truncating it would drop document tails)."""
     d = (t(spark, sf, "documents")
          .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-         .select("doc_id", F.split(F.trim("text"), r"\s+").alias("w")))
+         .select("doc_id", words().alias("w")))
     s = d.select(
         "doc_id", "w",
         F.explode(F.sequence(F.lit(1), F.size("w"), F.lit(24))).alias("s"))
@@ -838,10 +832,8 @@ def tfidf_top_terms(spark, sf):
     """
     d = (t(spark, sf, "documents")
          .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)))
-    words = d.select(
-        "doc_id", F.explode(F.split(F.lower(F.trim("text")), r"\s+"))
-        .alias("term"))
-    terms = words.filter(F.col("term").rlike("^[a-z]{3,}$"))
+    toks = d.select("doc_id", F.explode(words(lower=True)).alias("term"))
+    terms = toks.filter(F.col("term").rlike("^[a-z]{3,}$"))
     tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dft = (terms.select("doc_id", "term").distinct()
            .groupBy("term").agg(F.count("*").alias("df")))
@@ -1467,8 +1459,7 @@ def _doc_fingerprints(spark, sf):
     """
     d = t(spark, sf, "documents").filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-    prefix = F.lower(F.concat_ws(
-        " ", F.slice(F.split(F.trim("text"), r"\s+"), 1, 2)))
+    prefix = F.lower(F.concat_ws(" ", F.slice(words(), 1, 2)))
     return d.select("doc_id", "n_chars", F.md5(prefix).alias("fingerprint"))
 
 
@@ -1574,8 +1565,7 @@ def dedup_keep_best(spark, sf):
     the corpus shuffles once on the 16-byte key; text never moves after
     the hash."""
     d = t(spark, sf, "documents").filter(F.col("text").isNotNull())
-    key = F.md5(F.array_join(
-        F.slice(F.split(F.lower(F.trim("text")), r"\s+"), 1, 8), " "))
+    key = F.md5(F.array_join(F.slice(words(lower=True), 1, 8), " "))
     wk = W.partitionBy("dup_key")
     keyed = d.select("doc_id", "n_chars", key.alias("dup_key"))
     return (keyed
@@ -1653,11 +1643,7 @@ def text_ngram_top(spark, sf):
     dominates (same recipe as join_salted_skew)."""
     d = t(spark, sf, "documents").filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-    # overlapping bigrams via zero-width-lookahead regex, not an
-    # interpreted lambda (the decontaminate_fuzzy lesson)
-    bg = d.select("lang", F.explode(F.expr(
-        r"regexp_extract_all(concat(' ', regexp_replace(trim(text), "
-        r"'\\s+', ' ')), ' (?=([^ ]+ [^ ]+))', 1)")).alias("bigram"))
+    bg = d.select("lang", F.explode(word_ngrams(spaced(), 2)).alias("bigram"))
     cnt = bg.groupBy("lang", "bigram").agg(F.count("*").alias("n"))
     w = W.partitionBy("lang").orderBy(F.col("n").desc(), "bigram")
     return (cnt.withColumn("r", F.row_number().over(w))
@@ -1831,9 +1817,8 @@ def text_repetition_filter(spark, sf):
     ints are IEEE-identical across engines, rounded to 6 dp."""
     d = t(spark, sf, "documents").filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-    words = d.select("doc_id",
-                     F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
-    wc = words.groupBy("doc_id", "w").agg(F.count("*").alias("n"))
+    toks = d.select("doc_id", F.explode(words()).alias("w"))
+    wc = toks.groupBy("doc_id", "w").agg(F.count("*").alias("n"))
     tot = F.sum("n").cast("double")
     mx = F.max("n").cast("double")
     dst = F.count("*").cast("double")
@@ -1880,14 +1865,7 @@ def decontaminate_overlap(spark, sf):
     by distinct-gram multiplicity, not raw repetition."""
     d = t(spark, sf, "documents").filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-    # overlapping 4-grams via zero-width-lookahead regex — no
-    # interpreted lambda in the hot path and nothing expensive for
-    # InferFiltersFromGenerate to inline below the exchange (the
-    # decontaminate_fuzzy lesson; verified gram-equal to the lambda
-    # form). Sub-4-token docs yield no matches — no size guard.
-    grams = d.select("doc_id", F.explode(F.expr(
-        r"regexp_extract_all(concat(' ', regexp_replace(trim(text), "
-        r"'\\s+', ' ')), ' (?=([^ ]+ [^ ]+ [^ ]+ [^ ]+))', 1)")).alias("g"))
+    grams = d.select("doc_id", F.explode(word_ngrams(spaced(), 4)).alias("g"))
     bench = (grams.filter(F.col("doc_id") % 11 == 0)
              .select(F.col("doc_id").alias("bench_id"), "g").distinct())
     corpus = (grams.filter(F.col("doc_id") % 11 != 0)
@@ -1957,8 +1935,7 @@ def pack_sequences_nextfit(spark, sf):
     d = (t(spark, sf, "documents")
          .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
          .select("source", "doc_id",
-                 F.size(F.split(F.trim("text"), r"\s+")).cast("bigint")
-                 .alias("n_tokens")))
+                 F.size(words()).cast("bigint").alias("n_tokens")))
     out_schema = T.StructType([
         T.StructField("source", T.StringType()),
         T.StructField("doc_id", T.LongType()),
@@ -2037,22 +2014,13 @@ def corpus_curation_e2e(spark, sf):
     exchanges."""
     d = (widen(spark, t(spark, sf, "documents"))
          .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-         .select("doc_id", "lang", "n_chars", "text",
-                 F.split(F.trim("text"), r"\s+").alias("w")))
+         .select("doc_id", "lang", "n_chars", "text", words().alias("w")))
     # stage 1: quality gate. pin() keeps each gate regex at one eval
     # per row above the widen() exchange; unpinned, the gate filter
     # pulled all of them below it, 3x each (10x replica median 3.7 ->
     # 1.67 s with the barrier)
-    n_word = pin(F.size(F.expr(
-        r"regexp_extract_all(text, '[A-Za-z0-9]+', 0)")))
-    n_stop = pin(F.size(F.expr(
-        r"regexp_extract_all(lower(text),"
-        r" '\\b(the|a|an|and|or|of|to|in|is|it)\\b', 0)")))
-    gated = (d.withColumn("n_word", n_word).withColumn("n_stop", n_stop)
-             .filter((F.col("n_word") >= 5)
-                     & (F.col("n_chars").cast("double")
-                        / F.greatest("n_word", F.lit(1))).between(3, 15)
-                     & ((F.col("lang") != "en") | (F.col("n_stop") > 0))))
+    gated = quality_gate(d.withColumn("n_word", pin(n_word()))
+                         .withColumn("n_stop", pin(n_stop())))
     # stage 2: exact dedup. The survivor table feeds THREE branches
     # (bench grams, corpus grams, the clean anti-join left side); the
     # quality-gate regexes + md5 window above are the expensive part
@@ -2064,13 +2032,10 @@ def corpus_curation_e2e(spark, sf):
     deduped = (gated.withColumn("rn", F.row_number().over(wd))
                .filter(F.col("rn") == 1).select("doc_id", "w")
                .localCheckpoint(eager=False))
-    # stage 3: decontamination — 4-grams via the zero-width-lookahead
-    # regex over the re-joined token array (concat_ws(' ', w) IS the
-    # space-normalized text), not an interpreted lambda (the
-    # decontaminate_fuzzy lesson; verified gram-equal)
-    grams = deduped.select("doc_id", F.explode(F.expr(
-        "regexp_extract_all(concat(' ', concat_ws(' ', w)), "
-        "' (?=([^ ]+ [^ ]+ [^ ]+ [^ ]+))', 1)")).alias("g"))
+    # stage 3: decontamination — 4-grams over the re-joined token array
+    # (text was dropped at the checkpoint)
+    grams = deduped.select(
+        "doc_id", F.explode(word_ngrams(F.concat_ws(" ", "w"), 4)).alias("g"))
     bench = grams.filter(F.col("doc_id") % 11 == 0).select("g").distinct()
     contaminated = (grams.filter(F.col("doc_id") % 11 != 0)
                     .join(F.broadcast(bench), "g")
@@ -2122,7 +2087,7 @@ def heavy_hitters_mg(spark, sf):
     # scan-parallelism guard a one-row-group input runs it on ONE core
     d = widen(spark, t(spark, sf, "documents")).filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-    words = d.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
+    toks = d.select(F.explode(words()).alias("w"))
 
     out_schema = T.StructType([T.StructField("w", T.StringType()),
                                T.StructField("est", T.LongType())])
@@ -2139,14 +2104,13 @@ def heavy_hitters_mg(spark, sf):
         if counts:
             yield pd.DataFrame({"w": list(counts), "est": list(counts.values())})
 
-    candidates = (words.mapInPandas(mg_summarize, out_schema)
+    candidates = (toks.mapInPandas(mg_summarize, out_schema)
                   .select("w").distinct())
     # total word count WITHOUT a third explode pass: count of exploded
     # tokens == sum of per-doc token-array sizes (guide §2.3 — shuffle
     # /scan metadata, not payloads); integer-identical by construction
-    total = d.agg(F.sum(F.size(F.split(F.trim("text"), r"\s+")))
-                  .cast("long").alias("n_total"))
-    return (words.join(F.broadcast(candidates), "w")
+    total = d.agg(F.sum(F.size(words())).cast("long").alias("n_total"))
+    return (toks.join(F.broadcast(candidates), "w")
             .groupBy("w").agg(F.count("*").cast("bigint").alias("n_occ"))
             .crossJoin(F.broadcast(total))
             .filter(F.col("n_occ") >= _HH_PHI * F.col("n_total"))
@@ -2186,13 +2150,11 @@ def text_lm_score(spark, sf):
     the established float-parity discipline."""
     d = t(spark, sf, "documents").filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-    toks = d.select("doc_id", F.split(F.trim("text"), r"\s+").alias("tk"))
-    # bigram strings via the zero-width-lookahead regex; w1 falls out
-    # of the exploded row with substring_index (JVM, codegen) instead
-    # of building structs in an interpreted lambda
-    bg = (toks.select("doc_id", F.explode(F.expr(
-              r"regexp_extract_all(concat(' ', concat_ws(' ', tk)), "
-              r"' (?=([^ ]+ [^ ]+))', 1)")).alias("bigram"))
+    toks = d.select("doc_id", words().alias("tk"))
+    # w1 falls out of the exploded bigram with substring_index (JVM,
+    # codegen) instead of building structs in an interpreted lambda
+    bg = (toks.select("doc_id", F.explode(
+              word_ngrams(F.concat_ws(" ", "tk"), 2)).alias("bigram"))
           .select("doc_id", "bigram",
                   F.substring_index("bigram", " ", 1).alias("w1")))
     bc = bg.groupBy("bigram").agg(F.count("*").alias("nb"))
@@ -2631,9 +2593,8 @@ def vocab_growth_curve(spark, sf):
     inventing tokens (OCR noise, IDs) and needs cleaning."""
     d = (t(spark, sf, "documents")
          .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)))
-    words = d.select("doc_id",
-                     F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
-    firsts = words.groupBy("w").agg(F.min("doc_id").alias("first_doc"))
+    toks = d.select("doc_id", F.explode(words()).alias("w"))
+    firsts = toks.groupBy("w").agg(F.min("doc_id").alias("first_doc"))
     spine = t(spark, sf, "documents").sparkSession.range(1, 11) \
         .select(F.col("id").cast("bigint").alias("decile"))
     mx = firsts.agg(F.max("first_doc").alias("m"))
@@ -2689,8 +2650,8 @@ def tfidf_cosine_pairs(spark, sf, df_cap=50):
     docs like its siblings."""
     d = (t(spark, sf, "documents")
          .filter(F.col("text").isNotNull() & (F.col("n_chars") < 150)))
-    toks = d.select("doc_id", F.explode(
-        F.array_distinct(F.split(F.trim("text"), r"\s+"))).alias("w"))
+    toks = d.select("doc_id",
+                    F.explode(F.array_distinct(words())).alias("w"))
     dfreq = toks.groupBy("w").agg(F.count("*").alias("dfreq"))
     if df_cap is not None:
         dfreq = dfreq.filter(F.col("dfreq") <= df_cap)
@@ -2725,7 +2686,7 @@ def _vocab_signature():
     reordered) share it where the exact content hash differs — the
     cheap blocking key between exact dedup and MinHash."""
     return F.md5(F.encode(F.array_join(
-        F.array_sort(F.array_distinct(F.split(F.trim("text"), r"\s+"))),
+        F.array_sort(F.array_distinct(words())),
         " "), "utf-8"))
 
 
@@ -2855,21 +2816,13 @@ def ngram_novelty_curve(spark, sf):
     # the scan via pushdown, below the round-robin exchange
     d = widen(spark, t(spark, sf, "documents")).filter(
         F.col("text").isNotNull())
-    # Overlapping trigrams via zero-width-lookahead regex (verified
-    # set-equal to the transform/slice lambda form): the lambda is
-    # interpreted (~0.8 ms/row) AND InferFiltersFromGenerate inlines
-    # it into scan-stage filters below the exchange — the regex is
-    # ~50x cheaper per eval, 3.75 s -> 0.64 s at sf0.1 (the same
-    # lesson as decontaminate_fuzzy; see its docstring). Short docs
-    # (<3 tokens) simply yield no matches — no size guard needed.
-    gram_arr = F.expr(
-        r"regexp_extract_all(concat(' ', regexp_replace(trim(text), "
-        r"'\\s+', ' ')), ' (?=([^ ]+ [^ ]+ [^ ]+))', 1)")
+    # word_ngrams instead of a transform/slice lambda: 3.75 s -> 0.64 s
+    # at sf0.1
     grams = d.select(
         F.regexp_extract("source", r"src(\d+)", 1).cast("int")
         .alias("src_rank"),
         "source",
-        F.explode(gram_arr).alias("gram"))
+        F.explode(word_ngrams(spaced(), 3)).alias("gram"))
     # ONE wide exchange on the gram key: min-rank and the distinct
     # (source, rank) member set fold in the same hash aggregate (the
     # collect_set dedups map-side, replacing the old explicit
@@ -2920,8 +2873,8 @@ def text_zipf_fit(spark, sf):
     carries |vocab| rows per lang, rounding absorbs summation-order
     ULP drift."""
     d = t(spark, sf, "documents").filter(F.col("text").isNotNull())
-    tok = d.select("lang", F.explode(
-        F.split(F.trim("text"), r"\s+")).alias("w")).filter(F.col("w") != "")
+    tok = (d.select("lang", F.explode(words()).alias("w"))
+           .filter(F.col("w") != ""))
     freq = tok.groupBy("lang", "w").agg(F.count("*").alias("f"))
     r = F.row_number().over(
         W.partitionBy("lang").orderBy(F.col("f").desc(), "w"))
@@ -3178,7 +3131,7 @@ def observed_gate(spark, sf):
                        F.count(F.lit(1)).alias("rows_seen"),
                        F.sum("n_chars").alias("chars_seen"))
              .filter((F.col("n_chars").between(20, 5000))
-                     & (F.size(F.split(F.trim("text"), r"\s+")) >= 5))
+                     & (F.size(words()) >= 5))
              .select("doc_id", "lang", "n_chars"))
     return gated
 
@@ -3316,7 +3269,7 @@ def dedup_incremental_exact(spark, sf):
     d = (t(spark, sf, "documents")
          .filter(F.col("text").isNotNull() & (F.col("n_chars") < 300))
          .select("doc_id",
-                 F.array_distinct(F.split(F.trim("text"), r"\s+")).alias("tk"),
+                 F.array_distinct(words()).alias("tk"),
                  (F.col("doc_id") % 10 == 0).alias("incoming")))
     n = d.filter("incoming").select(F.col("doc_id").alias("new_id"),
                                     F.col("tk").alias("tkn"))
@@ -3350,7 +3303,7 @@ def dedup_incremental_scan(spark, sf):
     tests; precision is 1.0 by construction (exact verify)."""
     d = (t(spark, sf, "documents")
          .filter(F.col("text").isNotNull() & (F.col("n_chars") < 300))
-         .select("doc_id", F.split(F.trim("text"), r"\s+").alias("w"),
+         .select("doc_id", words().alias("w"),
                  (F.col("doc_id") % 10 == 0).alias("incoming")))
     # minhash over TOKENS, not shingles: the decision metric downstream
     # is token-set Jaccard, and banding recall only tracks the metric
@@ -4197,7 +4150,7 @@ def sft_loss_mask_spans(spark, sf):
         ti.alias("turn_idx"),
         F.when(ti % 2 == 0, F.lit("user")).otherwise(F.lit("assistant"))
         .alias("role"),
-        F.size(F.split(F.trim("text"), r"\s+")).alias("tok_n"))
+        F.size(words()).alias("tok_n"))
     w = W.partitionBy("conv_id").orderBy("turn_idx")
     pos = tr.withColumn("tok_end",
                         F.sum("tok_n").over(w).cast("bigint"))
@@ -4959,17 +4912,14 @@ def dedup_kgram_exact(spark, sf):
     d = (widen(spark, t(spark, sf, "documents"))
          .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
          .select("doc_id",
-                 F.split(F.lower(F.trim("text")), r"\s+").alias("tk")))
-    # overlapping k-gram strings via the zero-width-lookahead regex
-    # (the decontaminate_fuzzy lesson); md5 is applied per EXPLODED
-    # row — codegen'd — instead of per array element in an
-    # interpreted lambda. array_distinct on gram strings == distinct
-    # hashes (md5 is injective on distinct inputs here by assumption
-    # of no collisions, and both engines hash the same string set).
-    gram_rx = " ".join(["[^ ]+"] * k)
-    grams = (d.select("doc_id", F.explode(F.array_distinct(F.expr(
-                 f"regexp_extract_all(concat(' ', concat_ws(' ', tk)), "
-                 f"' (?=({gram_rx}))', 1)"))).alias("g"))
+                 words(lower=True).alias("tk")))
+    # md5 is applied per EXPLODED row — codegen'd — instead of per
+    # array element in an interpreted lambda. array_distinct on gram
+    # strings == distinct hashes (md5 is injective on distinct inputs
+    # here by assumption of no collisions, and both engines hash the
+    # same string set).
+    grams = (d.select("doc_id", F.explode(F.array_distinct(
+                 word_ngrams(F.concat_ws(" ", "tk"), k))).alias("g"))
              .select("doc_id", F.md5("g").alias("gh")))
     wn = F.count("*").over(W.partitionBy("gh"))
     banded = (grams.withColumn("n", wn)
@@ -5026,9 +4976,7 @@ def text_hashed_linear_score(spark, sf):
         [(b, (b % 7) - 3) for b in range(16)], "bucket int, wt int")
     d = (t(spark, sf, "documents")
          .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-         .select("doc_id",
-                 F.explode(F.split(F.lower(F.trim("text")), r"\s+"))
-                 .alias("w")))
+         .select("doc_id", F.explode(words(lower=True)).alias("w")))
     feat = d.select(
         "doc_id",
         F.expr("instr('0123456789abcdef', substring(md5(w), 1, 1)) - 1")
@@ -6564,9 +6512,7 @@ def search_bm25_topk(spark, sf):
     # identical contrib expression — scores bit-equal (oracle-pinned).
     d = (widen(spark, t(spark, sf, "documents"))
          .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)))
-    tk = (d.select("doc_id",
-                   F.explode(F.split(F.lower(F.trim("text")), r"\s+"))
-                   .alias("term"))
+    tk = (d.select("doc_id", F.explode(words(lower=True)).alias("term"))
           .filter(F.col("term").rlike("^[a-z]{3,}$")))
     per_doc = tk.groupBy("doc_id").agg(
         F.count("*").alias("dl"),
@@ -6641,8 +6587,7 @@ def search_phrase_match(spark, sf):
          .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)))
     pos = d.select(
         "doc_id",
-        F.posexplode(F.split(F.lower(F.trim("text")), r"\s+"))
-        .alias("p0", "term")).select(
+        F.posexplode(words(lower=True)).alias("p0", "term")).select(
         "doc_id", "term", (F.col("p0") + 1).cast("bigint").alias("pos"))
     a = pos.filter(F.col("term") == "data").select("doc_id", "pos")
     b = (pos.filter(F.col("term") == "line")
@@ -7635,17 +7580,11 @@ def decontaminate_fuzzy(spark, sf):
 
     Two hard-won execution lessons live here (both found when the
     one-exchange rework silently went 1.5 s -> 17.5 s at sf0.1):
-    (1) Gram construction is a REGEX, not a higher-order transform.
-    The interpreted lambda form (transform(sequence(...), i ->
-    concat(tk[i-1],...))) costs ~0.8 ms/row, and Catalyst's
-    InferFiltersFromGenerate inlines the whole gram expression into
-    inferred `size(ga)>0 / isnotnull(ga)` filters that predicate
-    pushdown drops BELOW any exchange — i.e. into the scan stage,
-    evaluated 2-3x per row at the SCAN's parallelism. A zero-width-
-    lookahead regexp_extract_all over space-normalized text yields
-    the IDENTICAL overlapping-trigram set (verified set-equal on the
-    full sf0.1 corpus) ~50x cheaper per eval, so even the duplicated
-    inferred-filter evals are noise. (2) Map-parallelism guard: with
+    (1) Grams come from word_ngrams, not a higher-order transform
+    (see its docstring): the lambda's inferred `size(ga)>0 /
+    isnotnull(ga)` filters ran 2-3x per row in the scan stage; the
+    regex yields the identical trigram set (verified on the full
+    sf0.1 corpus). (2) Map-parallelism guard: with
     no pre-join exchange, explode parallelism equals the SCAN's, and
     a one-row-group input file serializes the whole pipeline. When
     the scan has fewer row groups than the cluster has slots, a
@@ -7659,9 +7598,7 @@ def decontaminate_fuzzy(spark, sf):
     d = (widen(spark, t(spark, sf, "documents"))
          .filter(F.col("text").isNotNull()
                  & (F.length(F.trim("text")) > 0)))
-    ga = F.array_distinct(F.expr(
-        r"regexp_extract_all(concat(' ', regexp_replace(trim(text), "
-        r"'\\s+', ' ')), ' (?=([^ ]+ [^ ]+ [^ ]+))', 1)"))
+    ga = F.array_distinct(word_ngrams(spaced(), 3))
     # no size(ga) > 0 filter: explode() drops empty arrays anyway, and
     # the explicit filter was sliding below the round-robin exchange
     # (PushDownPredicates), re-running the gram regex on the scan's
@@ -8027,8 +7964,7 @@ def pack_sequences_ffd(spark, sf):
     d = (t(spark, sf, "documents")
          .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
          .select("source", "doc_id",
-                 F.size(F.split(F.trim("text"), r"\s+")).cast("bigint")
-                 .alias("n_tokens")))
+                 F.size(words()).cast("bigint").alias("n_tokens")))
     out_schema = T.StructType([
         T.StructField("source", T.StringType()),
         T.StructField("doc_id", T.LongType()),
@@ -8157,11 +8093,9 @@ def eval_rouge1_f1(spark, sf):
                  & (F.length(F.trim("text")) > 0)))
     a = (d.filter(F.col("doc_id") % 10 == 0)
          .select(F.col("doc_id").alias("cand_id"),
-                 F.array_distinct(F.split(F.trim("text"), r"\s+"))
-                 .alias("ca")))
+                 F.array_distinct(words()).alias("ca")))
     b = d.select(F.col("doc_id").alias("ref_id"),
-                 F.array_distinct(F.split(F.trim("text"), r"\s+"))
-                 .alias("rf"))
+                 F.array_distinct(words()).alias("rf"))
     j = a.join(b, F.col("ref_id") == F.col("cand_id") + 1)
     inter = F.size(F.array_intersect("ca", "rf")).cast("bigint")
     nc = F.size("ca").cast("bigint")
@@ -8209,8 +8143,7 @@ def text_nb_train(spark, sf):
          .filter(F.col("text").isNotNull() & F.col("lang").isNotNull()
                  & (F.length(F.trim("text")) > 0))
          .select("doc_id", "lang",
-                 F.array_distinct(F.split(F.trim("text"), r"\s+"))
-                 .alias("tk")))
+                 F.array_distinct(words()).alias("tk")))
     nc = d.groupBy("lang").agg(F.count("*").cast("bigint").alias("n_c"))
     tok = d.select("doc_id", "lang", F.explode("tk").alias("t"))
     dfreq = (tok.groupBy("lang", "t")
@@ -8276,8 +8209,7 @@ def text_nb_classify(spark, sf):
          .filter(F.col("text").isNotNull() & F.col("lang").isNotNull()
                  & (F.length(F.trim("text")) > 0))
          .select("doc_id", "lang",
-                 F.array_distinct(F.split(F.trim("text"), r"\s+"))
-                 .alias("tk")))
+                 F.array_distinct(words()).alias("tk")))
     nc = d.groupBy("lang").agg(F.count("*").cast("bigint").alias("n_c"))
     n = d.agg(F.count("*").cast("bigint").alias("n"))
     prior = (nc.crossJoin(F.broadcast(n))
@@ -8343,8 +8275,7 @@ def eval_cer(spark, sf):
          .filter(F.col("text").isNotNull()
                  & (F.length(F.trim("text")) > 0)
                  & (F.octet_length("text") == F.length("text")))
-         .select("doc_id",
-                 F.regexp_replace(F.trim("text"), r"\s+", " ").alias("nt")))
+         .select("doc_id", spaced().alias("nt")))
     a = d.select(F.col("doc_id").alias("cand_id"), F.col("nt").alias("ca"))
     b = d.select(F.col("doc_id").alias("ref_id"), F.col("nt").alias("rf"))
     j = (a.filter(F.col("cand_id") % 10 == 0)
@@ -8399,9 +8330,9 @@ def eval_token_f1(spark, sf):
                  & (F.length(F.trim("text")) > 0)))
     a = (d.filter(F.col("doc_id") % 10 == 0)
          .select(F.col("doc_id").alias("cand_id"),
-                 F.split(F.trim("text"), r"\s+").alias("ca")))
+                 words().alias("ca")))
     b = d.select(F.col("doc_id").alias("ref_id"),
-                 F.split(F.trim("text"), r"\s+").alias("rf"))
+                 words().alias("rf"))
     pairs = a.join(b, F.col("ref_id") == F.col("cand_id") + 1)
     ct = (pairs.select("cand_id", F.explode("ca").alias("t"))
           .groupBy("cand_id", "t")
@@ -8490,37 +8421,34 @@ def eval_bleu2(spark, sf):
     precision for unigrams and bigrams summed over the whole corpus,
     geometric mean, brevity penalty exp(1 - r/c) when the candidate
     corpus is shorter. Pairing is the adjacent-doc_id convention the
-    rest of the eval family uses. Bigrams come from the zero-width-
-    lookahead regex (the decontaminate_fuzzy lesson — no interpreted
-    lambda), clip counts fold in per-(pair, gram) hash aggregates,
-    and the corpus totals are three scalar aggregates — at 100 TB
-    everything partial-aggregates map-side and the final reduce is a
-    handful of scalars. exp/ln on identical IEEE doubles computed
+    rest of the eval family uses. Bigrams come from word_ngrams (no
+    interpreted lambda), clip counts fold in per-(pair, gram) hash
+    aggregates, and the corpus totals are three scalar aggregates — at
+    100 TB everything partial-aggregates map-side and the final reduce
+    is a handful of scalars. exp/ln on identical IEEE doubles computed
     from exact bigint ratios, written in the same expression order in
     both engines, so the rounded strings agree."""
     d = (t(spark, sf, "documents")
          .filter(F.col("text").isNotNull()
                  & (F.length(F.trim("text")) > 0))
-         .select("doc_id",
-                 F.regexp_replace(F.trim("text"), r"\s+", " ").alias("nt")))
+         .select("doc_id", spaced().alias("nt")))
     pairs = (d.filter(F.col("doc_id") % 10 == 0)
              .select(F.col("doc_id").alias("cand_id"),
                      F.col("nt").alias("ct"))
              .join(d.select((F.col("doc_id") - 1).alias("cand_id"),
                             F.col("nt").alias("rt")), "cand_id"))
-    bg = " (?=([^ ]+ [^ ]+))"
     cu = (pairs.select("cand_id", F.explode(F.split("ct", " ")).alias("t"))
           .groupBy("cand_id", "t")
           .agg(F.count("*").cast("bigint").alias("cc")))
     ru = (pairs.select("cand_id", F.explode(F.split("rt", " ")).alias("t"))
           .groupBy("cand_id", "t")
           .agg(F.count("*").cast("bigint").alias("cr")))
-    cb = (pairs.select("cand_id", F.explode(F.expr(
-              f"regexp_extract_all(concat(' ', ct), '{bg}', 1)")).alias("g"))
+    cb = (pairs.select("cand_id",
+                       F.explode(word_ngrams(F.col("ct"), 2)).alias("g"))
           .groupBy("cand_id", "g")
           .agg(F.count("*").cast("bigint").alias("cc")))
-    rb = (pairs.select("cand_id", F.explode(F.expr(
-              f"regexp_extract_all(concat(' ', rt), '{bg}', 1)")).alias("g"))
+    rb = (pairs.select("cand_id",
+                       F.explode(word_ngrams(F.col("rt"), 2)).alias("g"))
           .groupBy("cand_id", "g")
           .agg(F.count("*").cast("bigint").alias("cr")))
     tot = pairs.agg(
@@ -8593,9 +8521,7 @@ def text_ocr_confusion_dedup(spark, sf):
     base = (t(spark, sf, "documents")
             .filter(F.col("text").isNotNull()
                     & (F.length(F.trim("text")) > 0))
-            .select("doc_id",
-                    F.lower(F.regexp_replace(F.trim("text"), r"\s+", " "))
-                    .alias("nt")))
+            .select("doc_id", F.lower(spaced()).alias("nt")))
     planted = (base.filter(F.col("doc_id") % 7 == 0)
                .select((F.col("doc_id") + 1000000).alias("doc_id"),
                        F.translate("nt", "olsb", "0158").alias("nt")))
@@ -8794,8 +8720,7 @@ def corpus_dsir_weights(spark, sf):
     d = (t(spark, sf, "documents")
          .filter(F.col("text").isNotNull()
                  & (F.length(F.trim("text")) > 0)))
-    toks = (d.select("doc_id",
-                     F.explode(F.split(F.trim("text"), r"\s+")).alias("t"))
+    toks = (d.select("doc_id", F.explode(words()).alias("t"))
             .select("doc_id", F.lower("t").alias("w"),
                     (F.col("doc_id") % 13 == 0).alias("is_tgt")))
     vocab = (toks.groupBy("w")
@@ -10138,8 +10063,7 @@ def conv_template_turn_dedup(spark, sf):
         F.concat(F.lit("conv-"),
                  F.lpad((F.col("doc_id") % 50).cast("string"), 8, "0"))
         .alias("conv_id"),
-        F.md5(F.lower(F.regexp_replace(F.trim("text"), r"\s+", " ")))
-        .alias("h"))
+        F.md5(F.lower(spaced())).alias("h"))
     return (tr.groupBy(F.col("h").alias("template_hash"))
             .agg(F.count("*").cast("bigint").alias("n_occurrences"),
                  F.countDistinct("conv_id").cast("bigint")
@@ -10193,8 +10117,7 @@ def conv_context_overflow(spark, sf):
                  F.lpad((F.col("doc_id") % 50).cast("string"), 8, "0"))
         .alias("conv_id"),
         (F.col("doc_id") / 50).cast("bigint").alias("turn_idx"),
-        F.size(F.split(F.trim("text"), r"\s+")).cast("bigint")
-        .alias("tok"))
+        F.size(words()).cast("bigint").alias("tok"))
     w = (W.partitionBy("conv_id").orderBy("turn_idx")
          .rowsBetween(W.unboundedPreceding, W.currentRow))
     c = tr.withColumn("cum", F.sum("tok").over(w))

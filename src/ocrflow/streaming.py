@@ -21,6 +21,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from .queries import ORACLE, n_stop, n_word, quality_gate
+
 EVENTS_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
     T.StructField("ts", T.TimestampType()),
@@ -43,7 +45,6 @@ def sq(name: str, sql: str | None = None):
     def deco(fn):
         STREAM_QUERIES[name] = fn
         if sql is not None:
-            from .queries import ORACLE
             ORACLE[name] = sql.strip()
         return fn
     return deco
@@ -480,25 +481,15 @@ def stream_curation(spark, sf):
     (availableNow, bounded input); a production run bounds it with a
     watermark on an ingest-time column, or swaps to
     dropDuplicatesWithinWatermark — same plan otherwise."""
-    from pyspark.sql import functions as F
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     s = (spark.readStream.schema(
             "doc_id bigint, text string, lang string, source string,"
             " n_chars bigint")
          .option("pathGlobFilter", "documents*.parquet")
          .parquet(sf))
-    n_word = F.size(F.expr(r"regexp_extract_all(text, '[A-Za-z0-9]+', 0)"))
-    n_stop = F.size(F.expr(
-        r"regexp_extract_all(lower(text),"
-        r" '\\b(the|a|an|and|or|of|to|in|is|it)\\b', 0)"))
-    gated = (s.filter(F.col("text").isNotNull() & (F.length("text") > 0))
-             .withColumn("n_word", n_word).withColumn("n_stop", n_stop)
-             .filter((F.col("n_word") >= 5)
-                     & (F.col("n_chars").cast("double")
-                        / F.greatest("n_word", F.lit(1))).between(3, 15)
-                     & ((F.col("lang") != "en") | (F.col("n_stop") > 0)))
-             .withColumn("h", F.md5("text"))
+    scored = (s.filter(F.col("text").isNotNull() & (F.length("text") > 0))
+              .withColumn("n_word", n_word()).withColumn("n_stop", n_stop()))
+    gated = (quality_gate(scored).withColumn("h", F.md5("text"))
              .dropDuplicates(["h"]))
     agg = (gated.groupBy("lang", "source")
            .agg(F.count("*").alias("n_docs"),

@@ -1,6 +1,9 @@
 """Behavioral tests for the training-data ops (planted fixtures)."""
 
+import itertools
 import os
+import re
+import string
 import tempfile
 
 import pytest
@@ -1360,3 +1363,86 @@ def test_connected_components_deep_chain_converges_fast(spark):
             for r in connected_components(edges).collect()}
     assert set(comp.values()) == {1000}
     assert len(comp) == 121
+
+
+#: edge inputs for the shared text features: empty, one token, fewer
+#: tokens than n, space/tab/newline runs at either end, every ASCII
+#: whitespace Java's \s knows, spaces it does not (NBSP, U+3000),
+#: mixed case, CJK without spaces, underscores and digits
+_TEXT_EDGES = [
+    "", "word", "two words", "  lead and trail  ", "\ttab\tled\twords here",
+    "lines\n\n\nof\ntext\n", "Mixed CASE The Words AND More",
+    "日本語のテキストです", "日本語　テキスト and more", "a b c",
+    " \t mixed \n whitespace\r\n runs \x0b\x0c here ",
+    "the a an and or of to in is it x", "snake_case the_end 42 is A1b2",
+    "one two three four five six seven",
+]
+_JAVA_WS = "[ \t\n\x0b\f\r]+"  # Java's \s is ASCII whitespace only
+_STOP = {"the", "a", "an", "and", "or", "of", "to", "in", "is", "it"}
+
+
+def _runs(s, inside):
+    """Maximal runs of characters for which ``inside`` holds."""
+    return ["".join(g) for k, g in itertools.groupby(s, inside) if k]
+
+
+def _grams(spaced_text, n):
+    """Every n consecutive non-empty fields of " " + text split on " "."""
+    f = (" " + spaced_text).split(" ")
+    return [" ".join(f[i:i + n]) for i in range(1, len(f) - n + 1)
+            if all(f[i:i + n])]
+
+
+def test_text_feature_helpers(spark):
+    """words / spaced / word_ngrams / n_word / n_stop against a Python
+    model of Spark's trim (strips U+0020 only) and Java's split, and
+    against the inline expressions they replaced."""
+    from ocrflow.queries import n_stop, n_word, spaced, word_ngrams, words
+
+    ns = (2, 3, 4, 6)
+    df = spark.createDataFrame(list(enumerate(_TEXT_EDGES)),
+                               "id int, text string")
+    inline = {
+        "w": r"split(trim(text), '\\s+')",
+        "wl": r"split(lower(trim(text)), '\\s+')",
+        "sp": r"regexp_replace(trim(text), '\\s+', ' ')",
+        "nw": r"size(regexp_extract_all(text, '[A-Za-z0-9]+', 0))",
+        "nst": r"size(regexp_extract_all(lower(text),"
+               r" '\\b(the|a|an|and|or|of|to|in|is|it)\\b', 0))",
+    }
+    for n in ns:
+        rx = " ".join(["[^ ]+"] * n)
+        inline[f"g{n}"] = (
+            r"regexp_extract_all(concat(' ', regexp_replace(trim(text), "
+            rf"'\\s+', ' ')), ' (?=({rx}))', 1)")
+        inline[f"t{n}"] = (
+            r"regexp_extract_all(concat(' ', concat_ws(' ', "
+            rf"split(trim(text), '\\s+'))), ' (?=({rx}))', 1)")
+    helper = {"w": words(), "wl": words(lower=True), "sp": spaced(),
+              "nw": n_word(), "nst": n_stop()}
+    for n in ns:
+        helper[f"g{n}"] = word_ngrams(spaced(), n)
+        helper[f"t{n}"] = word_ngrams(F.concat_ws(" ", words()), n)
+    rows = df.select(
+        "id", *[c.alias(k) for k, c in helper.items()],
+        *[F.expr(e).alias("i_" + k) for k, e in inline.items()]).collect()
+    assert len(rows) == len(_TEXT_EDGES)
+
+    alnum = set(string.ascii_letters + string.digits)
+    for r in rows:
+        text = _TEXT_EDGES[r["id"]]
+        trimmed = text.strip(" ")
+        sp = re.sub(_JAVA_WS, " ", trimmed)
+        want = {
+            "w": re.split(_JAVA_WS, trimmed),
+            "wl": re.split(_JAVA_WS, trimmed.lower()),
+            "sp": sp,
+            "nw": len(_runs(text, alnum.__contains__)),
+            "nst": sum(w in _STOP for w in _runs(
+                text.lower(), lambda c: c == "_" or c.isalnum())),
+        }
+        for n in ns:
+            want[f"g{n}"] = want[f"t{n}"] = _grams(sp, n)
+        for k, v in want.items():
+            assert r[k] == v, (text, k, r[k], v)
+            assert r["i_" + k] == v, (text, "inline " + k, r["i_" + k], v)

@@ -845,8 +845,9 @@ def test_partition_evolution_daily_to_monthly_layouts(spark, tmp_path):
     commits land hive-partitioned by DAY, era-2 commits by MONTH, in
     the SAME table. Reads must (a) return the union transparently and
     (b) prune across BOTH layouts for a time predicate — via the
-    commit-time ts stats, which are layout-independent (the runner's
-    derived-partition-column pattern keeps ts in the data files)."""
+    commit-time ts stats, which are layout-independent (each era
+    partitions on a column derived from ts, so ts itself stays in the
+    data files)."""
     from pyspark.sql import functions as F
 
     from ocrflow.icelite import IceliteTable, write_dataframe_files
