@@ -1350,17 +1350,21 @@ def connected_components(edges, src: str = "src", dst: str = "dst",
     reachable from ``id``; vertices not in any edge are absent (their
     component is themselves — callers left-join and coalesce).
 
-    Scale notes: each round is a neighbor-min step (join + min-agg on
-    the vertex key) followed by a POINTER-JUMPING step (comp ←
-    comp[comp]) that halves the remaining label depth — convergence in
-    O(log diameter) rounds rather than O(diameter), the property that
+    Each round is a neighbor-min step (join + min-agg on the vertex
+    key) followed by a POINTER-JUMPING step (comp ← comp[comp]) that
+    compresses the remaining label depth, so the round count grows
+    with O(log diameter) rather than O(diameter) — the property that
     makes iterative CC viable on deep chains (same effect as
     large-star/small-star, Kiveris et al., "Connected Components in
-    MapReduce and Beyond"). Without the jump, a 16-deep chain took 15
-    rounds (~1s of fixed job cost each at sf0.1); with it, 4.
-    localCheckpoint after every round truncates the plan (the
-    iterative lineage trap, same pattern as iter_pagerank) and
-    materializes the labels the convergence check reuses.
+    MapReduce and Beyond"). From round 2 on, the loop stops at the
+    first neighbor-min step that changes no label: labels that are
+    final after k rounds cost k + 1 neighbor-min steps and k jump
+    passes (k = 1 for chains of up to 5 nodes, k = 2 for the up-to-14-
+    node fingerprint chains of sf0.1). ``max_iter`` bounds the
+    neighbor-min steps; reaching it without that fixpoint raises
+    RuntimeError instead of returning labels that may not be final.
+    localCheckpoint after every step truncates the plan (the iterative
+    lineage trap, same pattern as iter_pagerank).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # pre-partition the (static) edge list on the per-round join key
@@ -1381,28 +1385,35 @@ def connected_components(edges, src: str = "src", dst: str = "dst",
     labels = (und.select(F.col("src").alias("id")).distinct()
               .withColumn("comp", F.col("id"))
               .localCheckpoint(eager=False))
-    # Convergence probe WITHOUT the per-round join+count job: labels
-    # only ever DECREASE (neighbor-min + least() jump), so
-    # sum(comp) is strictly monotone decreasing until fixpoint and
-    # "sum unchanged" <=> "no label changed". The sum is a single
-    # aggregation over the just-checkpointed labels (exact decimal —
-    # ids can be any long, int64 sums would overflow at scale).
-    def _label_sum(lbls):
-        return lbls.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)"))).first()[0]
-    prev_sum = None
     for i in range(max_iter):
         # neighbor-min: every vertex absorbs the smallest label adjacent
         msgs = (und.join(labels, und.src == labels.id)
                 .select(F.col("dst").alias("id"), "comp"))
-        # stepped feeds BOTH sides of the pointer-jump join; the lazy
-        # checkpoint persists it on first computation inside the next
-        # materializing job, so the neighbor-min aggregate runs once
-        # per round instead of twice (ReuseExchange is not guaranteed
-        # under AQE — the engine's own round-5 lesson)
+        # stepped feeds the fixpoint probe and BOTH sides of the
+        # pointer-jump join; the checkpoint makes the neighbor-min
+        # aggregate run once per round instead of once per reader
+        # (ReuseExchange is not guaranteed under AQE — the engine's own
+        # round-5 lesson). Under AQE even eager=False runs the plan's
+        # shuffle stages inside the call; only its last stage waits for
+        # the next action, the probe.
         stepped = (labels.unionByName(msgs)
                    .groupBy("id").agg(F.min("comp").alias("comp"))
                    .localCheckpoint(eager=False))
+        # Fixpoint probe, one aggregate job: stepped ≤ labels id by id
+        # over the same ids, so sum(labels) - sum(stepped) is 0 exactly
+        # when no neighbor offers a smaller label. Then every edge
+        # joins equal labels, and each component carries one label that
+        # is a member's id ≤ every member's id: its minimum. Exact
+        # decimal, since ids can be any long. Round 1 is not probed:
+        # its labels are the identity, which any edge changes.
+        if i > 0:
+            dec = F.col("comp").cast("decimal(38,0)")
+            gap = (labels.select(dec.alias("d"))
+                   .unionByName(stepped.select((-dec).alias("d")))
+                   .agg(F.sum("d")).first()[0])
+            if not gap:  # 0, or NULL when there are no edges at all
+                und.unpersist()
+                return labels
         # pointer jump ×3, all against stepped's OWN parent map:
         # composing the parent map k times compresses pointer depth to
         # ~d/4 per round (s∘s∘s∘s — composition is associative, so
@@ -1421,10 +1432,6 @@ def connected_components(edges, src: str = "src", dst: str = "dst",
         # Measured, interleaved: 197-deep-chain 10× corpus 8 → 5
         # rounds, CC wall median 6.1 → 4.4 s (the per-jump-checkpoint
         # double-jump variant measured 4.7); sf0.1 median 2.33 → 1.90.
-        # lazy checkpoints (round 6): still truncate lineage at first
-        # materialization, but rounds between convergence probes
-        # collapse into the probe's job instead of paying one eager
-        # materialization job per round.
         parent = stepped.select(F.col("id").alias("comp"),
                                 F.col("comp").alias("pcomp"))
         new_labels = stepped
@@ -1434,22 +1441,9 @@ def connected_components(edges, src: str = "src", dst: str = "dst",
                                   F.coalesce(F.least("comp", "pcomp"),
                                              F.col("comp")).alias("comp")))
         labels = new_labels.localCheckpoint(eager=False)
-        # probe EVERY round from round 3 (rounds 1-2 skipped: a probe
-        # there costs a job and essentially never fires — depth must be
-        # ≤ 2). Probing each round stops the loop at fixpoint+1 instead
-        # of fixpoint+2/3 under the old alternate-round cadence; at any
-        # scale a wasted round is a full neighbor-min + jump pass over
-        # the graph while a probe is one map-combinable agg over the
-        # just-checkpointed label table, so per-round probing is the
-        # cheaper side of the trade everywhere (measured at sf0.1:
-        # 6 → 4 rounds, CC wall median 2.26 → 1.52 s interleaved).
-        if i >= 2 or i == max_iter - 1:
-            cur_sum = _label_sum(labels)
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
     und.unpersist()
-    return labels
+    raise RuntimeError(f"connected_components: no fixpoint within "
+                       f"max_iter={max_iter} neighbor-min steps")
 
 
 def _doc_fingerprints(spark, sf):

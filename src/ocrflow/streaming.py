@@ -16,6 +16,8 @@ executors like any keyed shuffle.
 
 from __future__ import annotations
 
+import contextlib
+import shutil
 import tempfile
 import uuid
 
@@ -58,15 +60,29 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sf_dir))
 
 
+@contextlib.contextmanager
+def _checkpoint_dir():
+    """A checkpointLocation for a query that runs to completion inside
+    the ``with`` block. Nothing reads it once the query has terminated
+    (the memory table, file sink and icelite table hold the results),
+    so it is removed on the way out."""
+    path = tempfile.mkdtemp(prefix="ocrflow_ckpt_")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def _run_to_memory(stream_df: DataFrame, output_mode: str = "append") -> DataFrame:
     """Drive the streaming query to completion; return the materialized
     result as a batch DataFrame (so queries() callables stay uniform)."""
     name = f"s_{uuid.uuid4().hex[:10]}"
-    q = (stream_df.writeStream.outputMode(output_mode)
-         .format("memory").queryName(name)
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="ocrflow_ckpt_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    with _checkpoint_dir() as ckpt:
+        q = (stream_df.writeStream.outputMode(output_mode)
+             .format("memory").queryName(name)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
     spark = stream_df.sparkSession
     return spark.table(name)
 
@@ -343,11 +359,12 @@ def stream_sink(spark, sf):
     checkpointLocation, then read the sink back (exactly-once files)."""
     out_dir = tempfile.mkdtemp(prefix="ocrflow_sink_")
     s = _events_stream(spark, sf).select("event_id", "user_id", "value")
-    q = (s.writeStream.format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="ocrflow_ckpt_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    with _checkpoint_dir() as ckpt:
+        q = (s.writeStream.format("parquet")
+             .option("path", out_dir)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
     return spark.read.parquet(out_dir)
 
 
@@ -439,7 +456,6 @@ def stream_upsert_sink(spark, sf):
     merge_upsert's scale note) and the table compacts on a schedule.
     """
     import os
-    import shutil
 
     from .icelite import IceliteTable
 
@@ -462,10 +478,11 @@ def stream_upsert_sink(spark, sf):
 
     stream = (spark.readStream.schema(EVENTS_SCHEMA)
               .option("maxFilesPerTrigger", 1).parquet(stage))
-    q = (stream.writeStream.foreachBatch(upsert_batch)
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="ocrflow_ckpt_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    with _checkpoint_dir() as ckpt:
+        q = (stream.writeStream.foreachBatch(upsert_batch)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
     return (tbl.read(spark)
             .select("user_id", "event_id", "ts", "event_type", "value"))
 

@@ -1365,6 +1365,43 @@ def test_connected_components_deep_chain_converges_fast(spark):
     assert len(comp) == 121
 
 
+def test_connected_components_raises_without_fixpoint(spark):
+    # one neighbor-min step cannot confirm a fixpoint on a 10-node path
+    # (its labels are not final either): raise, never return them
+    from ocrflow.dataops import connected_components
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)
+
+
+def test_connected_components_stops_at_first_unchanged_round(
+        spark, monkeypatch):
+    # chains of <= 5 nodes are final after one round (neighbor-min +
+    # three jumps compose the parent map 4 times), so the loop runs 2
+    # neighbor-min steps and 1 jump pass: the initial labels, 2 stepped
+    # tables and 1 jumped table are the only checkpoints taken
+    from pyspark.sql.classic.dataframe import DataFrame
+    from ocrflow.dataops import connected_components
+
+    real = DataFrame.localCheckpoint
+    calls = []
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    chains = [(100, 2), (200, 3), (300, 4), (400, 5), (500, 5)]
+    edges = spark.createDataFrame(
+        [(s + k, s + k + 1) for s, n in chains for k in range(n - 1)],
+        "src long, dst long")
+    comp = {r["id"]: r["comp"]
+            for r in connected_components(edges).collect()}
+    assert comp == {s + k: s for s, n in chains for k in range(n)}
+    assert len(calls) == 4
+
+
 #: edge inputs for the shared text features: empty, one token, fewer
 #: tokens than n, space/tab/newline runs at either end, every ASCII
 #: whitespace Java's \s knows, spaces it does not (NBSP, U+3000),
@@ -1439,7 +1476,7 @@ def test_text_feature_helpers(spark):
             "sp": sp,
             "nw": len(_runs(text, alnum.__contains__)),
             "nst": sum(w in _STOP for w in _runs(
-                text.lower(), lambda c: c == "_" or c.isalnum())),
+                text.lower(), lambda c: c == "_" or c in alnum)),
         }
         for n in ns:
             want[f"g{n}"] = want[f"t{n}"] = _grams(sp, n)

@@ -136,6 +136,26 @@ def _assert_matches_oracle(spark, duck, name):
                 f"{name}: value mismatch at sorted row {i}: spark={sr} duck={dr}")
 
 
+#: stopwords next to non-ASCII letters (where Java's Unicode-aware \b
+#: and RE2's ASCII \b disagree), an underscore and a digit
+_STOP_EDGES = ["the日本 and", "Theα the_end", "éthe and", "a the an", "the1 of"]
+
+
+def test_n_stop_matches_duckdb_next_to_non_ascii(spark, duck):
+    from ocrflow.queries import n_stop
+
+    df = spark.createDataFrame(list(enumerate(_STOP_EDGES)),
+                               "id int, text string")
+    got = [r["n"] for r in
+           df.select("id", n_stop().alias("n")).orderBy("id").collect()]
+    want = [duck.execute(
+        r"SELECT array_length(regexp_extract_all(lower(?),"
+        r" '\b(the|a|an|and|or|of|to|in|is|it)\b'))", [t]).fetchone()[0]
+        for t in _STOP_EDGES]
+    assert want == [2, 1, 2, 3, 1]
+    assert got == want
+
+
 def test_rows_only_queries_run(spark):
     for name in sorted(set(QUERIES) - set(ORACLE)):
         df = QUERIES[name](spark, SF_DIR)

@@ -29,6 +29,16 @@ def test_stream_tumbling_parity(spark, events):
         _rows(batch, "w_start", "event_type", "n")
 
 
+def test_stream_key_leaves_no_checkpoint_dir(spark):
+    import glob
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "ocrflow_ckpt_*")
+    before = set(glob.glob(pattern))
+    assert STREAM_QUERIES["stream_tumbling"](spark, SF_DIR).count() > 0
+    assert set(glob.glob(pattern)) - before == set()
+
+
 def test_stream_sliding_parity(spark, events):
     got = STREAM_QUERIES["stream_sliding"](spark, SF_DIR)
     batch = (events.groupBy(F.window("ts", "5 minutes", "1 minute").alias("w"))
