@@ -148,7 +148,7 @@ def main() -> None:
     ap.add_argument("--queries", default=",".join(QUERIES))
     ap.add_argument("--sf-dir", default=None,
                     help="override input dir (e.g. a replicated x16 dir "
-                         "from bench/join_scale_bench.replicate)")
+                         "from bench/growth.replicate)")
     ap.add_argument("--out", default="query_scaling.json")
     args = ap.parse_args()
     plan = args.queries.split(",")

@@ -66,12 +66,8 @@ def dedup_ngram_jaccard(spark, sf):
          .select("doc_id", F.array_distinct(F.split("text", r"\s+")).alias("tk")))
     a = d.alias("a")
     b = d.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.tk"), F.col("b.tk"))).cast("double")
-    union = (F.size(F.col("a.tk")) + F.size(F.col("b.tk"))
-             - F.size(F.array_intersect(F.col("a.tk"), F.col("b.tk"))))
-    jac = inter / union
     return (a.join(F.broadcast(b), F.col("a.doc_id") < F.col("b.doc_id"))
-            .withColumn("jaccard", jac)
+            .withColumn("jaccard", jaccard(F.col("a.tk"), F.col("b.tk")))
             .filter(F.col("jaccard") >= 0.5)
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"),
@@ -118,6 +114,140 @@ LSH_BANDS = 4           # bands of 4 rows each
 SHINGLE_K = 3           # word shingles
 LSH_MAX_BUCKET = 64     # hot-bucket cap: drop degenerate band buckets
 
+# Similarity primitives shared by the near-dup and ANN operators. Each
+# is written once so every operator builds the same expression (and the
+# same executed plan) for the same idea.
+
+
+def emb_double():
+    """``embeddings.embedding`` cast element-wise to double."""
+    return F.transform("embedding", lambda x: x.cast("double"))
+
+
+def dot(a, b):
+    """Dot product of two double arrays as a left fold from 0.0 in index
+    order — the order of DuckDB's sequential list kernels, so results
+    match its list_cosine_similarity bit for bit."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                       F.lit(0.0), lambda acc, x: acc + x)
+
+
+def l2norm(v):
+    """Euclidean norm of a double array, folded like ``dot``."""
+    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def jaccard(a, b):
+    """Token-set Jaccard |a ∩ b| / |a ∪ b| of two distinct-token arrays."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter.cast("double") / (F.size(a) + F.size(b) - inter)
+
+
+def capped_gather(df, keys, item, max_bucket):
+    """Gather ``item`` per bucket ``keys`` into ``ids``, keeping buckets of
+    2..max_bucket rows (``max_bucket=None``: no upper cap).
+
+    The cap acts BEFORE the gather: a window ``count(*)`` over the
+    bucket key tags every row with its bucket size on the same exchange
+    the gather needs (WindowExec buffers a partition in a spillable row
+    buffer — a mega-bucket goes to disk, never into a single
+    aggregation buffer), the filter drops singleton and hot-bucket rows,
+    and only then does ``collect_list`` run, so its per-group buffer is
+    ≤ max_bucket items by construction. One shuffle total: the window's
+    hashpartitioning satisfies the groupBy's required distribution.
+    """
+    df = (df.withColumn("bsz", F.count("*").over(W.partitionBy(*keys)))
+          .filter(F.col("bsz") >= 2))
+    if max_bucket is not None:
+        df = df.filter(F.col("bsz") <= max_bucket)
+    return df.groupBy(*keys).agg(F.collect_list(item).alias("ids"))
+
+
+def expand_pairs(grouped):
+    """One row ``p = struct(a, b)``, a < b, per two ids of each ``ids``
+    array: the i<j combinations, emitted JVM-side with higher-order
+    functions instead of a bucket self-join."""
+    return grouped.select(F.explode(F.expr("""
+        flatten(transform(ids, (x, i) ->
+            transform(slice(ids, i + 2, size(ids)),
+                      y -> struct(least(x, y) AS a, greatest(x, y) AS b))))
+    """)).alias("p"))
+
+
+def minhash_bands(sh, *keys):
+    """MinHash signature → LSH band buckets over a ``(keys…, shingle)``
+    frame: N_MINHASH xxhash64 "permutations" (min per key per seed),
+    banded into LSH_BANDS buckets of N_MINHASH // LSH_BANDS rows each.
+    Returns (keys…, band, bucket)."""
+    hashes = sh.select(
+        *keys,
+        *[F.xxhash64("shingle", F.lit(s)).alias(f"h{s}") for s in range(N_MINHASH)])
+    sig = hashes.groupBy(*keys).agg(
+        *[F.min(f"h{s}").alias(f"m{s}") for s in range(N_MINHASH)])
+    rpb = N_MINHASH // LSH_BANDS
+    return sig.select(
+        *keys,
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"),
+                     F.xxhash64(*[F.col(f"m{b * rpb + r}")
+                                  for r in range(rpb)]).alias("bucket"))
+            for b in range(LSH_BANDS)])).alias("bb")
+    ).select(*keys, F.col("bb.band").alias("band"),
+             F.col("bb.bucket").alias("bucket"))
+
+
+def sign_buckets(n_tables: int, n_bits: int, seed: int):
+    """Random-hyperplane LSH as a pandas UDF: embedding → one bucket id
+    per table (``n_tables`` tables of ``n_bits`` sign bits, ids
+    table-qualified so tables never collide).
+
+    The hyperplanes are derived inside the UDF from (seed, dim) per
+    batch — deterministic, identical on every worker, no driver-side
+    action to learn the embedding dim and nothing to broadcast (the A9
+    broadcast-state idiom without the broadcast).
+    """
+    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    def buckets_of(embs: pd.Series) -> pd.Series:
+        if len(embs) == 0:
+            return pd.Series([], dtype=object)
+        dim = len(embs.iloc[0])
+        p = np.random.default_rng(seed).standard_normal((n_tables * n_bits, dim))
+        m = np.vstack([np.asarray(e, dtype=np.float64) for e in embs])
+        bits = (m @ p.T) > 0                       # N × (L*b)
+        bits = bits.reshape(len(m), n_tables, n_bits)
+        codes = (bits @ (1 << np.arange(n_bits))).astype(np.int32)  # N × L
+        codes = codes + (np.arange(n_tables, dtype=np.int32) << n_bits)
+        return pd.Series(list(codes))
+    return buckets_of
+
+
+def cosine_topk(cand, k: int):
+    """Exact-cosine re-rank of ANN candidates ``(query_id, qe, vec_id, e)``:
+    the k nearest per query (ties to the lower vec_id), as
+    (query_id, neighbor_id, rank, cos rounded to 4 places)."""
+    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "vec_id")
+    return (cand.withColumn("cos", dot("qe", "e") / (l2norm("qe") * l2norm("e")))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                    "rank", F.round("cos", 4).alias("cos")))
+
+
+def label_cosine_pairs(spark, sf, tau: float):
+    """Embedding pairs of one label (the blocking key) at exact cosine
+    ≥ tau: (vec_a < vec_b, cosine). Zero vectors are dropped."""
+    em = (t(spark, sf, "embeddings")
+          .select("vec_id", "label", emb_double().alias("v")))
+    em = em.withColumn("n", l2norm("v")).filter(F.col("n") > 0)
+    a, b = em.alias("a"), em.alias("b")
+    cos = dot(F.col("a.v"), F.col("b.v")) / (F.col("a.n") * F.col("b.n"))
+    return (a.join(b, (F.col("a.label") == F.col("b.label"))
+                   & (F.col("a.vec_id") < F.col("b.vec_id")))
+            .withColumn("cosine", cos)
+            .filter(F.col("cosine") >= tau)
+            .select(F.col("a.vec_id").alias("vec_a"),
+                    F.col("b.vec_id").alias("vec_b"), "cosine"))
+
 
 def minhash_lsh_pairs(docs, max_bucket: int = LSH_MAX_BUCKET):
     """Candidate near-dup pairs via MinHash + LSH banding over
@@ -131,16 +261,9 @@ def minhash_lsh_pairs(docs, max_bucket: int = LSH_MAX_BUCKET):
     ``max_bucket`` caps degenerate buckets: a boilerplate-heavy corpus
     puts millions of docs in one band bucket, re-creating the
     all-pairs blowup (size² pairs from a single key). The cap is
-    applied BEFORE the gather: a window ``count(*)`` over
-    (band, bucket) tags every row with its bucket size on the same
-    exchange the gather needs (WindowExec buffers a partition in a
-    spillable row buffer — a mega-bucket goes to disk, never into a
-    single aggregation buffer), the filter drops hot-bucket rows, and
-    only then does ``collect_list`` run — its per-group buffer is
-    therefore ≤ max_bucket ids by construction. One shuffle total: the
-    window's hashpartitioning(band, bucket) satisfies the groupBy's
-    required distribution, so no second exchange and no recompute of
-    the shingle→minhash pipeline. Docs in dropped buckets are
+    applied BEFORE the gather (see capped_gather), on the gather's own
+    exchange, so there is no second exchange and no recompute of the
+    shingle→minhash pipeline. Docs in dropped buckets are
     near-identical to so many others that exact-hash dedup or a
     per-bucket sample handles them; the cap bounds the pair output
     (≤ buckets × max_bucket²/2). Pass max_bucket=None to disable
@@ -154,50 +277,23 @@ def minhash_lsh_pairs(docs, max_bucket: int = LSH_MAX_BUCKET):
             F.sequence(F.lit(0), F.greatest(F.size("w") - SHINGLE_K, F.lit(0))),
             lambda i: F.concat_ws(" ", F.slice("w", i + 1, SHINGLE_K)))
         ).alias("shingle")).filter(F.col("shingle") != "")
-    # 16 hash "permutations": xxhash64(shingle, seed) — min per doc per seed
-    hashes = sh.select(
-        "doc_id",
-        *[F.xxhash64("shingle", F.lit(s)).alias(f"h{s}") for s in range(N_MINHASH)])
-    sig = hashes.groupBy("doc_id").agg(
-        *[F.min(f"h{s}").alias(f"m{s}") for s in range(N_MINHASH)])
-    rows_per_band = N_MINHASH // LSH_BANDS
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(*[F.col(f"m{b * rows_per_band + r}")
-                                  for r in range(rows_per_band)]).alias("bucket"))
-            for b in range(LSH_BANDS)])).alias("bb")
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    bands = minhash_bands(sh, "doc_id")
     # pair generation WITHOUT a self-join: gather each bucket's doc ids
-    # and emit the i<j combinations JVM-side with higher-order
-    # functions. One computation of the shingle→minhash pipeline and
-    # one exchange — the plan-identical self-join computed the whole
-    # pipeline TWICE (ReuseExchange does not fire under AQE) plus a
-    # join shuffle. The hot-bucket cap acts BEFORE collect_list: the
-    # window count shares the gather's exchange, its partition buffer
-    # spills, and hot-bucket rows never reach an aggregation buffer.
-    wn = F.count("*").over(W.partitionBy("band", "bucket"))
-    bands = bands.withColumn("bsz", wn).filter(F.col("bsz") >= 2)
-    if max_bucket is not None:
-        bands = bands.filter(F.col("bsz") <= max_bucket)
-    grouped = (bands.groupBy("band", "bucket")
-               .agg(F.collect_list("doc_id").alias("ids")))
-    pair_expr = F.expr("""
-        flatten(transform(ids, (x, i) ->
-            transform(slice(ids, i + 2, size(ids)),
-                      y -> struct(least(x, y) AS a, greatest(x, y) AS b))))
-    """)
-    return (grouped.select(F.explode(pair_expr).alias("p"))
+    # and expand the i<j combinations JVM-side. One computation of the
+    # shingle→minhash pipeline and one exchange — the plan-identical
+    # self-join computed the whole pipeline TWICE (ReuseExchange does
+    # not fire under AQE) plus a join shuffle.
+    grouped = capped_gather(bands, ["band", "bucket"], "doc_id", max_bucket)
+    return (expand_pairs(grouped)
             .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
             .distinct())
 
 
-def _docs_tokenized(spark, sf, max_chars: int = 300):
+def _docs_tokenized(spark, sf):
     # scan-parallelism guard: the shingle+minhash stage downstream is
     # the expensive part; never let a one-row-group scan serialize it
     return (widen(spark, t(spark, sf, "documents"))
-            .filter(F.col("text").isNotNull() & (F.col("n_chars") < max_chars))
+            .filter(F.col("text").isNotNull() & (F.col("n_chars") < 300))
             .select("doc_id", F.split("text", r"\s+").alias("w")))
 
 
@@ -225,15 +321,12 @@ def dedup_lsh_verified(spark, sf):
                            F.col("tk").alias("tk_a")), "doc_a")
          .join(toks.select(F.col("doc_id").alias("doc_b"),
                            F.col("tk").alias("tk_b")), "doc_b"))
-    inter = F.size(F.array_intersect("tk_a", "tk_b")).cast("double")
-    union = (F.size("tk_a") + F.size("tk_b")
-             - F.size(F.array_intersect("tk_a", "tk_b")))
-    return (j.withColumn("jaccard", F.round(inter / union, 6))
+    return (j.withColumn("jaccard", F.round(jaccard("tk_a", "tk_b"), 6))
             .filter(F.col("jaccard") >= 0.5)
             .select("doc_a", "doc_b", "jaccard"))
 
 
-def simhash_df(docs, text_col: str = "text"):
+def simhash_df(docs):
     """64-bit SimHash per doc: tokenize + xxhash64 JVM-side (codegen'd),
     then bit votes + sign packing in ONE vectorized numpy pass over the
     Arrow-delivered hash arrays — no per-token Python loop anywhere.
@@ -265,7 +358,7 @@ def simhash_df(docs, text_col: str = "text"):
         out[nonempty] = packed.astype(np.int64)
         return pd.Series(out)
 
-    toks = f"filter(split(trim({text_col}), '\\\\s+'), x -> x <> '')"
+    toks = "filter(split(trim(text), '\\\\s+'), x -> x <> '')"
     return (docs
             .withColumn("_hs", F.expr(f"transform({toks}, x -> xxhash64(x))"))
             .withColumn("simhash", pack_votes("_hs"))
@@ -292,22 +385,7 @@ def dedup_embedding_cosine(spark, sf):
     """Embedding near-dup pairs: label-blocked cosine ≥ τ. The label
     acts as the blocking key (the honest 100 TB shape: block or LSH
     first, exact cosine within the block)."""
-    em = (t(spark, sf, "embeddings")
-          .select("vec_id", "label",
-                  F.transform("embedding", lambda x: x.cast("double")).alias("v")))
-    norm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
-    em = em.withColumn("n", norm).filter(F.col("n") > 0)
-    a, b = em.alias("a"), em.alias("b")
-    dot = F.aggregate(F.zip_with(F.col("a.v"), F.col("b.v"),
-                                 lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    cos = dot / (F.col("a.n") * F.col("b.n"))
-    return (a.join(b, (F.col("a.label") == F.col("b.label"))
-                   & (F.col("a.vec_id") < F.col("b.vec_id")))
-            .withColumn("cosine", cos)
-            .filter(F.col("cosine") >= 0.95)
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("b.vec_id").alias("vec_b")))
+    return label_cosine_pairs(spark, sf, 0.95).select("vec_a", "vec_b")
 
 
 @q("emb_cosine_block_pairs", """
@@ -333,23 +411,8 @@ def emb_cosine_block_pairs(spark, sf):
     similarity range (max 0.475), where τ=0.95 on this corpus is
     vacuously empty and an empty result can't anchor an oracle. Margin
     to the nearest pair is ~1e-3, 12 orders above ULP flip risk."""
-    em = (t(spark, sf, "embeddings")
-          .select("vec_id", "label",
-                  F.transform("embedding", lambda x: x.cast("double")).alias("v")))
-    norm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
-    em = em.withColumn("n", norm).filter(F.col("n") > 0)
-    a, b = em.alias("a"), em.alias("b")
-    dot = F.aggregate(F.zip_with(F.col("a.v"), F.col("b.v"),
-                                 lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    cos = dot / (F.col("a.n") * F.col("b.n"))
-    return (a.join(b, (F.col("a.label") == F.col("b.label"))
-                   & (F.col("a.vec_id") < F.col("b.vec_id")))
-            .withColumn("cosine", cos)
-            .filter(F.col("cosine") >= 0.4)
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("b.vec_id").alias("vec_b"),
-                    F.round("cosine", 6).alias("cosine")))
+    return label_cosine_pairs(spark, sf, 0.4).select(
+        "vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
 
 
 # =========================================================================
@@ -381,61 +444,32 @@ def ann_bruteforce_cosine(spark, sf):
     # scan-parallelism guard: the per-row dot products are interpreted
     # higher-order folds — one scan task would serialize them all
     em = (widen(spark, t(spark, sf, "embeddings"))
-          .select("vec_id",
-                  F.transform("embedding", lambda x: x.cast("double")).alias("e")))
+          .select("vec_id", emb_double().alias("e")))
     qs = (em.filter(F.col("vec_id") < ANN_QUERIES)
           .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe")))
     j = em.join(F.broadcast(qs), F.col("vec_id") != F.col("query_id"))
-    dot = F.aggregate(F.zip_with("qe", "e", lambda x, y: x * y),
-                      F.lit(0.0), lambda a, x: a + x)
-    qn = F.sqrt(F.aggregate("qe", F.lit(0.0), lambda a, x: a + x * x))
-    vn = F.sqrt(F.aggregate("e", F.lit(0.0), lambda a, x: a + x * x))
-    scored = j.withColumn("cos", dot / (qn * vn))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= ANN_K)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank"))
+    return cosine_topk(j, ANN_K).drop("cos")
 
 
-def ann_lsh_bucketed_with(spark, sf, n_tables: int = 8, n_bits: int = 3,
-                          seed: int = 42):
-    """Random-hyperplane LSH ANN (the scale path): L hash tables of
-    b sign bits each; candidates = union over tables of same-bucket
-    vectors; exact cosine re-rank.
+@q("ann_lsh_bucketed")  # rows-only: hyperplane seeds have no SQL twin
+def ann_lsh_bucketed(spark, sf):
+    """Random-hyperplane LSH ANN (the scale path): 8 hash tables of
+    3 sign bits each (sign_buckets, seed 42); candidates = union over
+    tables of same-bucket vectors; exact cosine re-rank.
 
-    Tuning (parameters, not constants): more bits → smaller buckets
-    (fewer candidates, lower recall); more tables → higher recall at
-    more shuffle. At 100 TB set n_bits ≈ log2(corpus / bucket_target)
-    — 3 bits is sized for the small testdata corpus. Recall vs the
-    brute-force twin measured in tests (≥0.6 at the defaults).
-
-    The hyperplanes are derived inside the UDF from (seed, dim) on
-    first batch — per-worker deterministic, identical everywhere, no
-    driver-side action to learn the embedding dim and nothing to
-    broadcast (the A9 broadcast-state idiom without the broadcast).
+    Tuning: more bits → smaller buckets (fewer candidates, lower
+    recall); more tables → higher recall at more shuffle. At 100 TB set
+    the bits ≈ log2(corpus / bucket_target) — 3 bits is sized for the
+    small testdata corpus. Recall vs the brute-force twin measured in
+    tests (≥0.6).
     """
     # scan-parallelism guard: buckets_of is a pandas UDF directly over
     # the scan — see dedup_simhash
     em = widen(spark, t(spark, sf, "embeddings"))
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def buckets_of(embs: pd.Series) -> pd.Series:
-        if len(embs) == 0:
-            return pd.Series([], dtype=object)
-        dim = len(embs.iloc[0])
-        p = np.random.default_rng(seed).standard_normal((n_tables * n_bits, dim))
-        m = np.vstack([np.asarray(e, dtype=np.float64) for e in embs])
-        bits = (m @ p.T) > 0                       # N × (L*b)
-        bits = bits.reshape(len(m), n_tables, n_bits)
-        weights = 1 << np.arange(n_bits)
-        codes = (bits @ weights).astype(np.int32)  # N × L
-        # table-qualified bucket ids so tables never collide
-        codes = codes + (np.arange(n_tables, dtype=np.int32) << n_bits)
-        return pd.Series(list(codes))
-
+    buckets_of = sign_buckets(n_tables=8, n_bits=3, seed=42)
     emb = em.select(
         "vec_id", buckets_of("embedding").alias("buckets"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"))
+        emb_double().alias("e"))
     flat = emb.select("vec_id", "e", F.explode("buckets").alias("bucket"))
     qs = (flat.filter(F.col("vec_id") < ANN_QUERIES)
           .select(F.col("vec_id").alias("query_id"),
@@ -445,21 +479,7 @@ def ann_lsh_bucketed_with(spark, sf, n_tables: int = 8, n_bits: int = 3,
                       & (F.col("vec_id") != F.col("query_id")))
             .select("query_id", "qe", "vec_id", "e")
             .dropDuplicates(["query_id", "vec_id"]))
-    dot = F.aggregate(F.zip_with("qe", "e", lambda x, y: x * y),
-                      F.lit(0.0), lambda a, x: a + x)
-    qn = F.sqrt(F.aggregate("qe", F.lit(0.0), lambda a, x: a + x * x))
-    vn = F.sqrt(F.aggregate("e", F.lit(0.0), lambda a, x: a + x * x))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (cand.withColumn("cos", dot / (qn * vn))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= ANN_K)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    "rank", F.round("cos", 4).alias("cos")))
-
-
-@q("ann_lsh_bucketed")  # rows-only: hyperplane seeds have no SQL twin
-def ann_lsh_bucketed(spark, sf):
-    return ann_lsh_bucketed_with(spark, sf)
+    return cosine_topk(cand, ANN_K)
 
 
 @q("ann_lsh_recall", f"""
@@ -480,7 +500,7 @@ def ann_lsh_recall(spark, sf):
     the dedup scanner/verifier twins."""
     truth = (ann_bruteforce_cosine(spark, sf)
              .select("query_id", "neighbor_id"))
-    lsh = (ann_lsh_bucketed_with(spark, sf)
+    lsh = (ann_lsh_bucketed(spark, sf)
            .select("query_id", "neighbor_id", F.lit(1).alias("_hit")))
     marked = truth.join(lsh, ["query_id", "neighbor_id"], "left")
     return marked.agg(
@@ -490,77 +510,44 @@ def ann_lsh_recall(spark, sf):
 
 
 @q("dedup_embedding_lsh")  # rows-only: hyperplane seeds have no SQL twin
-def dedup_embedding_lsh(spark, sf, n_tables: int = 6, n_bits: int = 4,
-                        seed: int = 7, tau: float = 0.95,
-                        max_bucket: int | None = LSH_MAX_BUCKET):
-    """Embedding near-dup SCANNER at scale: sign-LSH buckets (same
-    hyperplane machinery as ann_lsh_bucketed) → within-bucket pairs →
-    exact cosine ≥ τ re-check. Subquadratic where
+def dedup_embedding_lsh(spark, sf, max_bucket: int | None = LSH_MAX_BUCKET):
+    """Embedding near-dup SCANNER at scale: sign-LSH buckets (6 tables
+    of 4 bits, seed 7; same sign_buckets machinery as ann_lsh_bucketed)
+    → within-bucket pairs → exact cosine ≥ 0.95 re-check. Subquadratic where
     dedup_embedding_cosine (the label-blocked exact verifier) is not:
     the only wide exchange is the bucket shuffle, and pair candidates
     are bounded by bucket sizes, not corpus². Bits scale with
     log2(corpus / bucket_target) exactly as the ANN twin documents.
 
     ``max_bucket`` bounds the gather the same way minhash_lsh_pairs
-    does: a window count over the bucket key (spillable partition
-    buffer, same exchange) drops hot-bucket rows BEFORE collect_list,
-    so one dense embedding cluster (e.g. a near-constant-vector
-    corpus) can never accumulate an unbounded id array in a single
-    aggregation buffer. Dropped buckets mean "this vector is near-dup
-    to huge numbers of others" — exact-hash dedup or per-bucket
-    sampling is the right tool there, not pair expansion.
+    does (capped_gather), so one dense embedding cluster (e.g. a
+    near-constant-vector corpus) can never accumulate an unbounded id
+    array in a single aggregation buffer. Dropped buckets mean "this
+    vector is near-dup to huge numbers of others" — exact-hash dedup or
+    per-bucket sampling is the right tool there, not pair expansion.
     """
     em = t(spark, sf, "embeddings")
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def buckets_of(embs: pd.Series) -> pd.Series:
-        if len(embs) == 0:
-            return pd.Series([], dtype=object)
-        dim = len(embs.iloc[0])
-        p = np.random.default_rng(seed).standard_normal((n_tables * n_bits, dim))
-        m = np.vstack([np.asarray(e, dtype=np.float64) for e in embs])
-        bits = (m @ p.T) > 0
-        bits = bits.reshape(len(m), n_tables, n_bits)
-        codes = (bits @ (1 << np.arange(n_bits))).astype(np.int32)
-        codes = codes + (np.arange(n_tables, dtype=np.int32) << n_bits)
-        return pd.Series(list(codes))
-
+    buckets_of = sign_buckets(n_tables=6, n_bits=4, seed=7)
     # candidate ids WITHOUT a bucket self-join: the self-join would run
     # the hyperplane UDF pipeline once per side — gather ids per bucket
     # (8-byte ids only, never the vectors) and expand i<j combinations
     # JVM-side, then join the small pair list back to the PLAIN vector
     # scan (no UDF) for the exact re-rank.
     flat = (em.select("vec_id", F.explode(buckets_of("embedding")).alias("bucket")))
-    # cap BEFORE the gather (see docstring): window count over the
-    # bucket key shares the gather's exchange and spills, collect_list
-    # buffers are ≤ max_bucket by construction
-    flat = flat.withColumn("bsz", F.count("*").over(W.partitionBy("bucket")))
-    flat = flat.filter(F.col("bsz") >= 2)
-    if max_bucket is not None:
-        flat = flat.filter(F.col("bsz") <= max_bucket)
-    grouped = flat.groupBy("bucket").agg(F.collect_list("vec_id").alias("ids"))
-    pair_expr = F.expr("""
-        flatten(transform(ids, (x, i) ->
-            transform(slice(ids, i + 2, size(ids)),
-                      y -> struct(least(x, y) AS a, greatest(x, y) AS b))))
-    """)
-    pairs = (grouped.select(F.explode(pair_expr).alias("p"))
+    grouped = capped_gather(flat, ["bucket"], "vec_id", max_bucket)
+    pairs = (expand_pairs(grouped)
              .select(F.col("p.a").alias("vec_a"), F.col("p.b").alias("vec_b"))
              .distinct())
-    vec = (em.select("vec_id",
-                     F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-           .withColumn("n", F.sqrt(F.aggregate("v", F.lit(0.0),
-                                               lambda a, x: a + x * x)))
+    vec = (em.select("vec_id", emb_double().alias("v"))
+           .withColumn("n", l2norm("v"))
            .filter(F.col("n") > 0))
     j = (pairs
          .join(vec.select(F.col("vec_id").alias("vec_a"),
                           F.col("v").alias("va"), F.col("n").alias("na")), "vec_a")
          .join(vec.select(F.col("vec_id").alias("vec_b"),
                           F.col("v").alias("vb"), F.col("n").alias("nb")), "vec_b"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    return (j.withColumn("cosine", dot / (F.col("na") * F.col("nb")))
-            .filter(F.col("cosine") >= tau)
+    return (j.withColumn("cosine", dot("va", "vb") / (F.col("na") * F.col("nb")))
+            .filter(F.col("cosine") >= 0.95)
             .select("vec_a", "vec_b", F.round("cosine", 4).alias("cosine")))
 
 
@@ -1691,10 +1678,16 @@ def udf_cogrouped_map(spark, sf):
                                           "price_cents long")))
 
 
-def ann_ivf_with(spark, sf, n_cells: int = 8, n_probe: int = 3):
+IVF_CELLS = 8            # coarse-quantizer cells (K)
+IVF_PROBE = 3            # cells searched per query
+
+
+@q("ann_ivf_coarse")  # rows-only: centroid means are float-fold-dependent
+def ann_ivf_coarse(spark, sf):
     """IVF (inverted-file) ANN — the coarse-quantizer scale path next to
-    ann_lsh_bucketed: train K centroids, assign every vector to its
-    nearest cell, search only the n_probe cells nearest each query.
+    ann_lsh_bucketed: train K = IVF_CELLS centroids, assign every vector
+    to its nearest cell, search only the IVF_PROBE cells nearest each
+    query.
 
     Training is deterministic and cheap: seeds = the K lowest vec_ids
     (one bounded driver fetch of K×dim floats), then ONE Lloyd step
@@ -1704,18 +1697,17 @@ def ann_ivf_with(spark, sf, n_cells: int = 8, n_probe: int = 3):
     again K×dim scalars on the driver and ride to executors in the UDF
     closure (A9 broadcast-state idiom).
 
-    Query path: each query probes its n_probe nearest cells, candidates
-    come from an equi-join on cell id (hash join, never all-pairs), and
-    the exact cosine re-rank runs on candidates only — at 100 TB the
-    scan fraction is ~n_probe/K of the corpus per query batch. Recall
-    vs the brute-force twin is measured in tests. Rows-only: centroid
-    means are float-fold-dependent in the last ULP, so there is no
-    engine-portable SQL twin.
+    Query path: each query probes its IVF_PROBE nearest cells,
+    candidates come from an equi-join on cell id (hash join, never
+    all-pairs), and the exact cosine re-rank runs on candidates only —
+    at 100 TB the scan fraction is ~IVF_PROBE/K of the corpus per query
+    batch. Recall vs the brute-force twin is measured in tests.
+    Rows-only: centroid means are float-fold-dependent in the last ULP,
+    so there is no engine-portable SQL twin.
     """
-    em = t(spark, sf, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e"))
+    em = t(spark, sf, "embeddings").select("vec_id", emb_double().alias("e"))
 
-    seeds = em.orderBy("vec_id").limit(n_cells).collect()
+    seeds = em.orderBy("vec_id").limit(IVF_CELLS).collect()
     c0 = np.array([r["e"] for r in seeds], dtype=np.float64)
     dim = c0.shape[1]
 
@@ -1754,7 +1746,7 @@ def ann_ivf_with(spark, sf, n_cells: int = 8, n_probe: int = 3):
         m = np.vstack([np.asarray(v, dtype=np.float64) for v in es])
         mn = m / np.linalg.norm(m, axis=1, keepdims=True)
         order = np.argsort(-(mn @ c1n.T), axis=1, kind="stable")
-        return pd.Series(list(order[:, :n_probe].astype("int32")))
+        return pd.Series(list(order[:, :IVF_PROBE].astype("int32")))
 
     qs = (em.filter(F.col("vec_id") < ANN_QUERIES)
           .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"),
@@ -1763,21 +1755,7 @@ def ann_ivf_with(spark, sf, n_cells: int = 8, n_probe: int = 3):
                         (F.col("cell") == F.col("qcell"))
                         & (F.col("vec_id") != F.col("query_id")))
             .select("query_id", "qe", "vec_id", "e"))
-    dot = F.aggregate(F.zip_with("qe", "e", lambda x, y: x * y),
-                      F.lit(0.0), lambda a, x: a + x)
-    qn = F.sqrt(F.aggregate("qe", F.lit(0.0), lambda a, x: a + x * x))
-    vn = F.sqrt(F.aggregate("e", F.lit(0.0), lambda a, x: a + x * x))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (cand.withColumn("cos", dot / (qn * vn))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= ANN_K)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    "rank", F.round("cos", 4).alias("cos")))
-
-
-@q("ann_ivf_coarse")  # rows-only: centroid means are float-fold-dependent
-def ann_ivf_coarse(spark, sf):
-    return ann_ivf_with(spark, sf)
+    return cosine_topk(cand, ANN_K)
 
 
 @q("text_repetition_filter", r"""
@@ -2207,9 +2185,8 @@ def dedup_containment(spark, sf):
 CONTAINMENT_MAX_BUCKET = 256    # hot-token posting cap (pre-gather)
 
 
-def containment_candidates(docs, threshold=0.9,
-                           max_bucket: int = CONTAINMENT_MAX_BUCKET):
-    """Subquadratic candidate pairs for containment |A∩B|/|A| ≥ t via
+def containment_candidates(docs, max_bucket: int = CONTAINMENT_MAX_BUCKET):
+    """Subquadratic candidate pairs for containment |A∩B|/|A| ≥ t = 0.9 via
     PREFIX FILTERING (the AllPairs/PPJoin family): sort each doc's
     token set in a fixed order, and post only its first
     p = |A| - ⌈t·|A|⌉ + 1 tokens as "prefix" postings. If
@@ -2239,10 +2216,8 @@ def containment_candidates(docs, threshold=0.9,
     (doc_a=contained, doc_b=container) candidates; containment itself
     is NOT checked here — verify exactly downstream.
     """
-    num = int(round(threshold * 10))
-    assert abs(threshold * 10 - num) < 1e-9, "threshold must be k/10"
     sz = F.size("tk")
-    m = F.floor((F.lit(num) * sz + F.lit(num - 1)) / 10).cast("int")
+    m = F.floor((F.lit(9) * sz + F.lit(8)) / 10).cast("int")   # ⌈0.9·|A|⌉
     p = (sz - m + F.lit(1)).cast("int")
     srt = F.array_sort(F.transform(
         "tk", lambda w: F.struct(F.xxhash64(w).alias("h"), w.alias("w"))))
@@ -2250,13 +2225,8 @@ def containment_candidates(docs, threshold=0.9,
                        F.posexplode(srt).alias("pos", "tw"))
     posts = base.select("doc_id", "sz", F.col("tw.w").alias("w"),
                         (F.col("pos") < F.col("p")).alias("pfx"))
-    bsz = F.count("*").over(W.partitionBy("w"))
-    posts = posts.withColumn("bsz", bsz).filter(F.col("bsz") >= 2)
-    if max_bucket is not None:
-        posts = posts.filter(F.col("bsz") <= max_bucket)
-    grouped = (posts.groupBy("w")
-               .agg(F.collect_list(F.struct("doc_id", "sz", "pfx"))
-                    .alias("ids")))
+    grouped = capped_gather(posts, ["w"], F.struct("doc_id", "sz", "pfx"),
+                            max_bucket)
     pair_expr = F.expr("""
         flatten(transform(filter(ids, x -> x.pfx), x ->
             transform(filter(ids, y -> y.doc_id != x.doc_id
@@ -2284,7 +2254,7 @@ def dedup_containment_scanner(spark, sf):
          .filter(F.col("text").isNotNull() & (F.col("n_chars") < 150))
          .select("doc_id",
                  F.array_distinct(F.split("text", r"\s+")).alias("tk")))
-    cands = containment_candidates(d, threshold=0.9)
+    cands = containment_candidates(d)
     j = (cands
          .join(d.select(F.col("doc_id").alias("doc_a"),
                         F.col("tk").alias("tka")), "doc_a")
@@ -2315,21 +2285,21 @@ WHERE a.text IS NOT NULL AND b.text IS NOT NULL
 """
 
 
-def edit_candidates(docs, d: int = EDIT_D, qw: int = EDIT_Q,
-                    max_bucket: int | None = EDIT_MAX_BUCKET):
-    """Subquadratic candidate pairs for edit distance ≤ d via CHARACTER
-    q-GRAM prefix filtering (Gravano et al., q-gram count filter +
-    AllPairs-style prefix): one edit operation destroys at most q
-    positional q-grams, so lev(A,B) ≤ d leaves at most d·q DISTINCT
-    grams of A absent from B's gram set. Sorting A's distinct grams in
-    a consistent per-doc order (array_sort over (xxhash64(g), g)
-    structs, computed INSIDE the array — zero exchanges, no df join)
-    and posting only the first d·q+1 as "prefix" postings while every
-    doc posts all its grams as container postings guarantees, by
-    pigeonhole, that every true pair shares ≥1 bucket — the same
-    asymmetric posting scheme as containment_candidates, and the same
-    single wide exchange (hashpartitioning on the gram) with zero
-    joins in candidate generation.
+def edit_candidates(docs, max_bucket: int | None = EDIT_MAX_BUCKET):
+    """Subquadratic candidate pairs for edit distance ≤ d = EDIT_D via
+    CHARACTER q-GRAM (q = EDIT_Q) prefix filtering (Gravano et al.,
+    q-gram count filter + AllPairs-style prefix): one edit operation
+    destroys at most q positional q-grams, so lev(A,B) ≤ d leaves at
+    most d·q DISTINCT grams of A absent from B's gram set. Sorting A's
+    distinct grams in a consistent per-doc order (array_sort over
+    (xxhash64(g), g) structs, computed INSIDE the array — zero
+    exchanges, no df join) and posting only the first d·q+1 as
+    "prefix" postings while every doc posts all its grams as container
+    postings guarantees, by pigeonhole, that every true pair shares ≥1
+    bucket — the same asymmetric posting scheme as
+    containment_candidates, and the same single wide exchange
+    (hashpartitioning on the gram) with zero joins in candidate
+    generation.
 
     The pigeonhole needs A to carry MORE positional grams than d·q,
     i.e. char_length(A) ≥ d·q + q (= 20 here): below that an adversary
@@ -2338,9 +2308,9 @@ def edit_candidates(docs, d: int = EDIT_D, qw: int = EDIT_Q,
     side: ln < 20 posts its own length key; container side: ln < 20+d
     posts every reachable key in [ln-d, ln+d], since the length filter
     |lnA−lnB| ≤ d bounds who a tiny doc can pair with), so
-    tiny-vs-tiny and tiny-vs-near-tiny pairs surface through l_tiny
-    small dedicated buckets. Sentinel pairs are generated by an
-    EQUI-JOIN on the length key, NOT the collect_list gather, and are
+    tiny-vs-tiny and tiny-vs-near-tiny pairs surface through
+    EDIT_L_TINY small dedicated buckets. Sentinel pairs are generated by
+    an EQUI-JOIN on the length key, NOT the collect_list gather, and are
     exempt from the max_bucket cap — so losslessness is unconditional,
     not data-dependent, AND a dense tiny-doc population can never
     blow up a single aggregation buffer: the sentinel candidate set
@@ -2370,30 +2340,29 @@ def edit_candidates(docs, d: int = EDIT_D, qw: int = EDIT_Q,
     # '.' matching newlines inside documents.
     grams = F.expr(
         f"array_distinct(regexp_extract_all(text, "
-        f"'(?s)(?=(.{{{qw}}}))', 1))")
+        f"'(?s)(?=(.{{{EDIT_Q}}}))', 1))")
     srt = F.array_sort(F.transform(
         grams, lambda g: F.struct(F.xxhash64(g).alias("h"), g.alias("w"))))
-    pfx_n = F.lit(d * qw + 1)
     base = docs.select("doc_id", "ln", F.posexplode(srt).alias("pos", "tw"))
     posts = base.select("doc_id", F.col("tw.w").alias("w"),
-                        (F.col("pos") < pfx_n).alias("pfx"))
-    l_tiny = d * qw + qw
+                        (F.col("pos") < F.lit(EDIT_PFX)).alias("pfx"))
     # Sentinel buckets are keyed by the PREFIX doc's exact length so a
-    # degenerate all-tiny corpus splits into l_tiny small buckets
-    # instead of one quadratic one: a tiny prefix doc (ln < l_tiny)
+    # degenerate all-tiny corpus splits into EDIT_L_TINY small buckets
+    # instead of one quadratic one: a tiny prefix doc (ln < EDIT_L_TINY)
     # posts pfx=true at its own length key; every near-tiny container
-    # doc (ln < l_tiny + d) posts pfx=false at each reachable key in
-    # [ln-d, ln+d] ∩ [0, l_tiny) — the |lnA-lnB| ≤ d levenshtein lower
-    # bound guarantees the true container is among them, so
+    # doc (ln < EDIT_L_TINY + d) posts pfx=false at each reachable key
+    # in [ln-d, ln+d] ∩ [0, EDIT_L_TINY) — the |lnA-lnB| ≤ d levenshtein
+    # lower bound guarantees the true container is among them, so
     # losslessness is unconditional. 2d+1 extra postings per tiny doc.
-    sent_pfx = (docs.filter(F.col("ln") < l_tiny)
+    sent_pfx = (docs.filter(F.col("ln") < EDIT_L_TINY)
                 .select(F.col("doc_id").alias("pa"),
                         F.col("ln").alias("k")))
-    sent_cont = (docs.filter(F.col("ln") < l_tiny + d)
+    sent_cont = (docs.filter(F.col("ln") < EDIT_L_TINY + EDIT_D)
                  .select(F.col("doc_id").alias("pb"),
                          F.explode(F.expr(
-                             f"sequence(greatest(0, ln - {d}), "
-                             f"least(ln + {d}, {l_tiny - 1}))")).alias("k")))
+                             f"sequence(greatest(0, ln - {EDIT_D}), "
+                             f"least(ln + {EDIT_D}, {EDIT_L_TINY - 1}))"))
+                         .alias("k")))
     # join-based sentinel pairs: the quadratic output STREAMS through
     # a shuffle join (each side hashpartitioned on the length key)
     # instead of materializing per-bucket pair arrays — no cap, no
@@ -2402,17 +2371,13 @@ def edit_candidates(docs, d: int = EDIT_D, qw: int = EDIT_Q,
                   .filter(F.col("pa") != F.col("pb"))
                   .select(F.least("pa", "pb").alias("doc_a"),
                           F.greatest("pa", "pb").alias("doc_b")))
-    bsz = F.count("*").over(W.partitionBy("w"))
-    posts = posts.withColumn("bsz", bsz).filter(F.col("bsz") >= 2)
-    if max_bucket is not None:
-        # The hot-gram cap applies only to REAL gram buckets (the
-        # sentinel path above is join-based and uncapped — capping it
-        # would silently lose tiny-doc pairs). Capping real grams is
-        # the same documented recall/scale tradeoff as the
-        # LSH/containment scanners; it never engages at test SF.
-        posts = posts.filter(F.col("bsz") <= max_bucket)
-    grouped = (posts.groupBy("w")
-               .agg(F.collect_list(F.struct("doc_id", "pfx")).alias("ids")))
+    # The hot-gram cap applies only to REAL gram buckets (the sentinel
+    # path above is join-based and uncapped — capping it would silently
+    # lose tiny-doc pairs). Capping real grams is the same documented
+    # recall/scale tradeoff as the LSH/containment scanners; it never
+    # engages at test SF.
+    grouped = capped_gather(posts, ["w"], F.struct("doc_id", "pfx"),
+                            max_bucket)
     pair_expr = F.expr("""
         flatten(transform(filter(ids, x -> x.pfx), x ->
             transform(filter(ids, y -> y.doc_id != x.doc_id), y ->
@@ -3269,9 +3234,7 @@ def dedup_incremental_exact(spark, sf):
                                     F.col("tk").alias("tkn"))
     b = d.filter(~F.col("incoming")).select(F.col("doc_id").alias("base_id"),
                                             F.col("tk").alias("tkb"))
-    inter = F.size(F.array_intersect("tkn", "tkb")).cast("double")
-    j = inter / (F.size("tkn") + F.size("tkb")
-                 - F.size(F.array_intersect("tkn", "tkb")))
+    j = jaccard("tkn", "tkb")
     pairs = (n.crossJoin(b).withColumn("j", j).filter(F.col("j") >= 0.5)
              .select("new_id", "base_id", "j"))
     w = W.partitionBy("new_id").orderBy(F.col("j").desc(), "base_id")
@@ -3308,21 +3271,7 @@ def dedup_incremental_scan(spark, sf):
         "doc_id", "incoming",
         F.explode(F.array_distinct("w")).alias("shingle")
     ).filter(F.col("shingle") != "")
-    hashes = sh.select(
-        "doc_id", "incoming",
-        *[F.xxhash64("shingle", F.lit(s)).alias(f"h{s}")
-          for s in range(N_MINHASH)])
-    sig = hashes.groupBy("doc_id", "incoming").agg(
-        *[F.min(f"h{s}").alias(f"m{s}") for s in range(N_MINHASH)])
-    rpb = N_MINHASH // LSH_BANDS
-    bands = sig.select(
-        "doc_id", "incoming",
-        F.explode(F.array(*[
-            F.struct(F.lit(bb).alias("band"),
-                     F.xxhash64(*[F.col(f"m{bb * rpb + r}")
-                                  for r in range(rpb)]).alias("bucket"))
-            for bb in range(LSH_BANDS)])).alias("bb")
-    ).select("doc_id", "incoming", "bb.band", "bb.bucket")
+    bands = minhash_bands(sh, "doc_id", "incoming")
     probe = (bands.filter("incoming")
              .select(F.col("doc_id").alias("new_id"), "band", "bucket"))
     index = (bands.filter(~F.col("incoming"))
@@ -3335,10 +3284,7 @@ def dedup_incremental_scan(spark, sf):
                             F.col("tk").alias("tkn")), "new_id")
           .join(toks.select(F.col("doc_id").alias("base_id"),
                             F.col("tk").alias("tkb")), "base_id"))
-    inter = F.size(F.array_intersect("tkn", "tkb")).cast("double")
-    j = inter / (F.size("tkn") + F.size("tkb")
-                 - F.size(F.array_intersect("tkn", "tkb")))
-    pairs = jn.withColumn("j", j).filter(F.col("j") >= 0.5)
+    pairs = jn.withColumn("j", jaccard("tkn", "tkb")).filter(F.col("j") >= 0.5)
     w_ = W.partitionBy("new_id").orderBy(F.col("j").desc(), "base_id")
     best = (pairs.withColumn("rn", F.row_number().over(w_))
             .filter(F.col("rn") == 1).select("new_id", "base_id", "j"))
@@ -4920,12 +4866,7 @@ def dedup_kgram_exact(spark, sf):
               .filter((F.col("n") >= 2) & (F.col("n") <= 20)))
     grouped = (banded.groupBy("gh")
                .agg(F.collect_list("doc_id").alias("ids")))
-    pair_expr = F.expr("""
-        flatten(transform(ids, (x, i) ->
-            transform(slice(ids, i + 2, size(ids)),
-                      y -> struct(least(x, y) AS a, greatest(x, y) AS b))))
-    """)
-    return (grouped.select(F.explode(pair_expr).alias("p"))
+    return (expand_pairs(grouped)
             .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
             .agg(F.count("*").cast("bigint").alias("shared_grams")))
 
@@ -5403,9 +5344,14 @@ def text_markdown_strip(spark, sf):
                     F.length(clean).cast("bigint").alias("n_clean_chars"))
 
 
+PQ_M = 4                 # subspaces (one code each)
+PQ_K = 16                # codes per subspace codebook
+PQ_POOL = 50             # ADC candidates re-ranked exactly per query
+PQ_TOPK = 10             # neighbours returned per query
+
+
 @q("ann_pq_adc")  # rows-only: PQ codebooks/means are float-fold-dependent
-def ann_pq_adc(spark, sf, m_sub: int = 4, k_codes: int = 16,
-               adc_pool: int = 50, topk: int = 10):
+def ann_pq_adc(spark, sf):
     """PRODUCT-QUANTIZATION ANN with ADC (asymmetric distance
     computation) — the memory-compression leg of the ANN family next
     to brute force (exact baseline), sign-LSH (bucketed), and IVF
@@ -5417,7 +5363,7 @@ def ann_pq_adc(spark, sf, m_sub: int = 4, k_codes: int = 16,
     (M x K) lookup table of subspace distances to every codebook
     entry is built once per Arrow batch, and a candidate's
     approximate distance is M table lookups — no vector arithmetic in
-    the scan loop. The ADC top-`adc_pool` then re-ranks EXACTLY on
+    the scan loop. The ADC top-PQ_POOL then re-ranks EXACTLY on
     the true vectors (the standard two-stage recipe), so the
     compression only has to get the pool right, not the final order.
     Codebooks are trained deterministically: the K lowest vec_ids
@@ -5435,15 +5381,13 @@ def ann_pq_adc(spark, sf, m_sub: int = 4, k_codes: int = 16,
     touching only pool-sized row groups fetched by vec_id join.
     Composes with the IVF cell join (ann_ivf_coarse) for the full
     IVF-PQ layout: cell equi-join first, ADC inside the cell."""
-    em = t(spark, sf, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"))
+    em = t(spark, sf, "embeddings").select("vec_id", emb_double().alias("e"))
 
-    seeds = em.orderBy("vec_id").limit(k_codes).collect()
+    seeds = em.orderBy("vec_id").limit(PQ_K).collect()
     s0 = np.array([r["e"] for r in seeds], dtype=np.float64)
     dim = s0.shape[1]
-    sub = dim // m_sub
-    cb0 = np.stack([s0[:, m * sub:(m + 1) * sub] for m in range(m_sub)])
+    sub = dim // PQ_M
+    cb0 = np.stack([s0[:, m * sub:(m + 1) * sub] for m in range(PQ_M)])
 
     def encoder(cb):
         @F.pandas_udf(T.ArrayType(T.IntegerType()))
@@ -5451,8 +5395,8 @@ def ann_pq_adc(spark, sf, m_sub: int = 4, k_codes: int = 16,
             if len(es) == 0:
                 return pd.Series([], dtype=object)
             mat = np.vstack([np.asarray(v, dtype=np.float64) for v in es])
-            codes = np.empty((mat.shape[0], m_sub), dtype=np.int32)
-            for m in range(m_sub):
+            codes = np.empty((mat.shape[0], PQ_M), dtype=np.int32)
+            for m in range(PQ_M):
                 sv = mat[:, m * sub:(m + 1) * sub]
                 # ||x - c||^2 argmin, vectorized over the batch
                 d2 = (np.sum(sv * sv, axis=1, keepdims=True)
@@ -5497,9 +5441,9 @@ def ann_pq_adc(spark, sf, m_sub: int = 4, k_codes: int = 16,
             if lut is None:
                 lut = np.stack([
                     np.sum((cb1[m] - qv[m * sub:(m + 1) * sub]) ** 2, axis=1)
-                    for m in range(m_sub)])
+                    for m in range(PQ_M)])
                 luts[key] = lut
-            out[i] = lut[np.arange(m_sub), cmat[i]].sum()
+            out[i] = lut[np.arange(PQ_M), cmat[i]].sum()
         return pd.Series(out)
 
     cand = (corpus.join(F.broadcast(qs), F.col("vec_id") != F.col("query_id"))
@@ -5507,21 +5451,11 @@ def ann_pq_adc(spark, sf, m_sub: int = 4, k_codes: int = 16,
                     adc_dist("qe", "codes").alias("adc")))
     wpool = W.partitionBy("query_id").orderBy("adc", "vec_id")
     pool = (cand.withColumn("r", F.row_number().over(wpool))
-            .filter(F.col("r") <= adc_pool)
+            .filter(F.col("r") <= PQ_POOL)
             .select("query_id", "vec_id", "qe"))
     # exact cosine re-rank on the pool only
-    rer = pool.join(em, "vec_id")
-    dot = F.aggregate(F.zip_with("qe", "e", lambda x, y: x * y),
-                      F.lit(0.0), lambda a, x: a + x)
-    qn = F.sqrt(F.aggregate("qe", F.lit(0.0), lambda a, x: a + x * x))
-    vn = F.sqrt(F.aggregate("e", F.lit(0.0), lambda a, x: a + x * x))
-    scored = rer.select("query_id", "vec_id",
-                        (dot / (qn * vn)).alias("cos"))
-    wf = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "vec_id")
-    return (scored.withColumn("rank", F.row_number().over(wf))
-            .filter(F.col("rank") <= topk)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    "rank", F.round("cos", 4).alias("cos")))
+    rer = pool.join(em, "vec_id").select("query_id", "vec_id", "qe", "e")
+    return cosine_topk(rer, PQ_TOPK)
 
 
 @q("sql_session_variable", """

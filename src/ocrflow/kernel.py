@@ -198,9 +198,8 @@ def make_kernel(broadcast_weights, lineage_acc=None, input_file_col: str | None 
         for batch in batches:
             if input_file_col is not None:
                 idx = batch.schema.get_field_index(input_file_col)
-                col = batch.column(idx)
-                if len(col):
-                    files.add(col[0].as_py())
+                # after the salted exchange a batch mixes rows of many files
+                files.update(pa.compute.unique(batch.column(idx)).to_pylist())
                 batch = batch.drop_columns([input_file_col])
             out = extract_batch(batch, weights)
             rows += out.num_rows

@@ -73,6 +73,16 @@ def _checkpoint_dir():
         shutil.rmtree(path, ignore_errors=True)
 
 
+def _materialized(df: DataFrame, *dirs: str) -> DataFrame:
+    """``df`` copied eagerly into executor memory (``localCheckpoint``),
+    after which ``dirs`` — the scratch directories it was read from —
+    are removed."""
+    out = df.localCheckpoint()
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
+    return out
+
+
 def _run_to_memory(stream_df: DataFrame, output_mode: str = "append") -> DataFrame:
     """Drive the streaming query to completion; return the materialized
     result as a batch DataFrame (so queries() callables stay uniform)."""
@@ -365,7 +375,7 @@ def stream_sink(spark, sf):
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
         q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return _materialized(spark.read.parquet(out_dir), out_dir)
 
 
 def commit_epoch(tbl, batch_df, epoch_id: int,
@@ -404,10 +414,10 @@ def stream_extract(spark: SparkSession, input_dir: str, out_table_path: str,
     plan inside foreachBatch, and every batch commits one icelite
     snapshot tagged with the epoch. At ingest scale the source is Kafka
     and the checkpoint lives on durable storage; the plan is identical.
-    Runs with availableNow (drain-everything-then-stop).
+    Runs with availableNow (drain-everything-then-stop). Without a
+    ``checkpoint_dir`` the offsets live in a scratch directory that is
+    removed once the query ends; pass one to resume across calls.
     """
-    import tempfile
-
     from pyspark.sql import types as T
 
     from .icelite import IceliteTable, write_dataframe_files
@@ -428,11 +438,12 @@ def stream_extract(spark: SparkSession, input_dir: str, out_table_path: str,
                      partitions=partitions, salt_buckets=salt_buckets)
 
     stream = (spark.readStream.schema(schema).parquet(input_dir))
-    q = (stream.writeStream.foreachBatch(commit_batch)
-         .option("checkpointLocation",
-                 checkpoint_dir or tempfile.mkdtemp(prefix="ocrflow_sx_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    with (contextlib.nullcontext(checkpoint_dir) if checkpoint_dir
+          else _checkpoint_dir()) as ckpt:
+        q = (stream.writeStream.foreachBatch(commit_batch)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
     return tbl
 
 
@@ -483,8 +494,10 @@ def stream_upsert_sink(spark, sf):
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
         q.awaitTermination()
-    return (tbl.read(spark)
-            .select("user_id", "event_id", "ts", "event_type", "value"))
+    return _materialized(
+        tbl.read(spark).select("user_id", "event_id", "ts", "event_type",
+                               "value"),
+        stage, tbl_dir)
 
 
 @sq("stream_curation")

@@ -354,9 +354,9 @@ def test_ann_ivf_probes_fraction_of_corpus(spark):
     # the IVF contract: candidates per query ≤ the probed cells' share
     # of the corpus (here 3 of 8 cells) plus cluster skew — far below
     # the brute-force N-per-query
-    from ocrflow.dataops import ANN_QUERIES, ann_ivf_with
+    from ocrflow.dataops import ANN_QUERIES, ann_ivf_coarse
     n_corpus = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
-    out = ann_ivf_with(spark, SF_DIR, n_cells=8, n_probe=3)
+    out = ann_ivf_coarse(spark, SF_DIR)
     # rank column exists for every query → each query produced a top-k
     per_q = {r["query_id"] for r in out.collect()}
     assert per_q == set(range(ANN_QUERIES))
@@ -1483,3 +1483,55 @@ def test_text_feature_helpers(spark):
         for k, v in want.items():
             assert r[k] == v, (text, k, r[k], v)
             assert r["i_" + k] == v, (text, "inline " + k, r["i_" + k], v)
+
+
+def test_similarity_helpers(spark):
+    """dot / l2norm / jaccard / expand_pairs / capped_gather against
+    Python models: the folds bit-exact left to right, the pair expansion
+    as itertools.combinations, the gather as a size filter."""
+    import math
+
+    vecs = [([], []), ([3.0], [-2.5]), ([0.1, 0.2, 0.3], [0.7, -0.11, 1e-3]),
+            ([1e16, 1.0, -1e16], [1.0, 1.0, 1.0]),
+            ([1e8, 1.0, 1e-8], [1e8, -3.0, 7.0])]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(vecs)],
+        "id int, a array<double>, b array<double>")
+    got = df.select("id", D.dot("a", "b").alias("d"),
+                    D.l2norm("a").alias("n")).orderBy("id").collect()
+    for (a, b), r in zip(vecs, got):
+        d = n = 0.0
+        for x, y in zip(a, b):
+            d = d + x * y
+        for x in a:
+            n = n + x * x
+        assert (r["d"], r["n"]) == (d, math.sqrt(n)), (a, b)
+
+    toks = [(["a", "b", "c"], ["a", "b", "c"]), (["a", "b"], ["c", "d"]),
+            (["a", "b", "c"], ["b", "c", "d"]), (["x"], ["x", "y", "z", "w"])]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(toks)],
+        "id int, a array<string>, b array<string>")
+    got = [r["j"] for r in df.select("id", D.jaccard("a", "b").alias("j"))
+           .orderBy("id").collect()]
+    assert got == [len(set(a) & set(b)) / len(set(a) | set(b))
+                   for a, b in toks] == [1.0, 0.0, 0.5, 0.25]
+
+    ids = [[], [4], [9, 2], [5, 3, 9, 1, 7]]
+    grouped = spark.createDataFrame([(i,) for i in ids], "ids array<bigint>")
+    got = sorted((r["p"]["a"], r["p"]["b"])
+                 for r in D.expand_pairs(grouped).collect())
+    want = sorted((min(x, y), max(x, y))
+                  for i in ids for x, y in itertools.combinations(i, 2))
+    assert got == want and len(want) == 1 + 10
+
+    # bucket b holds b rows: 1 is a singleton, 4 is above the cap of 3
+    rows = [(b, 10 * b + k) for b in (1, 2, 3, 4) for k in range(b)]
+    df = spark.createDataFrame(rows, "bucket int, id int")
+
+    def gathered(cap):
+        return {r["bucket"]: sorted(r["ids"]) for r in
+                D.capped_gather(df, ["bucket"], "id", cap).collect()}
+    model = {b: [10 * b + k for k in range(b)] for b in (2, 3, 4)}
+    assert gathered(3) == {b: model[b] for b in (2, 3)}
+    assert gathered(None) == model

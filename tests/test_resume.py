@@ -86,6 +86,24 @@ def test_lineage_rows(spark, input_dir, tmp_path):
     assert len(files) == 4
 
 
+def test_task_lineage_names_every_input_file(spark, input_dir, tmp_path):
+    """After the salted exchange a task's batches mix rows of every input
+    file: the task rows' input_file lists must together name each file
+    the run's completion markers name, not just each batch's first."""
+    from urllib.parse import urlparse
+
+    out = str(tmp_path / "extracted")
+    run_extract(spark, input_dir, out, run_id="run-f", partitions=4)
+    lin = IceliteTable(os.path.join(out, "lineage")).read(spark)
+    named = {urlparse(f).path
+             for r in lin.filter("partition_id >= 0").collect()
+             for f in r["input_file"].split(",")}
+    markers = {r["input_file"]
+               for r in lin.filter("partition_id = -1").collect()}
+    assert len(markers) == 4
+    assert named == markers
+
+
 def test_failed_write_leaves_table_untouched(spark, input_dir, tmp_path):
     out = str(tmp_path / "extracted")
     run_extract(spark, input_dir, out, run_id="ok", partitions=2, max_files=1)

@@ -39,6 +39,37 @@ def test_stream_key_leaves_no_checkpoint_dir(spark):
     assert set(glob.glob(pattern)) - before == set()
 
 
+def test_stream_data_keys_leave_no_scratch_dir(spark, events, tmp_path):
+    """The file sink, the upsert key and stream_extract (with no
+    checkpoint_dir) remove their scratch directories, and the frames
+    the two keys return still read after the removal."""
+    import glob
+    import tempfile
+
+    from ocrflow import synth
+    from ocrflow.streaming import stream_extract
+
+    prefixes = ("ocrflow_sink_", "ocrflow_upsert_src_", "ocrflow_upsert_tbl_",
+                "ocrflow_sx_", "ocrflow_ckpt_")
+
+    def scratch():
+        return {p for pre in prefixes for p in
+                glob.glob(os.path.join(tempfile.gettempdir(), pre + "*"))}
+
+    before = scratch()
+    n_events = events.count()
+    assert STREAM_QUERIES["stream_sink"](spark, SF_DIR).count() == n_events
+    n_users = events.select("user_id").distinct().count()
+    assert STREAM_QUERIES["stream_upsert_sink"](spark, SF_DIR).count() == n_users
+    rows = synth.gen_rows(20, seed=7, monster_every=0)
+    spark.createDataFrame(rows, schema=synth.TRANSCRIPTS_DDL) \
+        .coalesce(1).write.parquet(str(tmp_path / "in"))
+    tbl = stream_extract(spark, str(tmp_path / "in"), str(tmp_path / "out"),
+                         partitions=2)
+    assert tbl.read(spark).count() == len(rows)
+    assert scratch() - before == set()
+
+
 def test_stream_sliding_parity(spark, events):
     got = STREAM_QUERIES["stream_sliding"](spark, SF_DIR)
     batch = (events.groupBy(F.window("ts", "5 minutes", "1 minute").alias("w"))
