@@ -23,6 +23,8 @@ sys.path.insert(0, os.path.join(
 
 
 def main() -> None:
+    from ocrflow.pipeline import DEFAULT_SALT_BUCKETS
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="transcripts parquet dir (omit to synthesize)")
     ap.add_argument("--turns", type=int, default=5000,
@@ -30,9 +32,8 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="output icelite table dir")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--salt-buckets", type=int, default=64,
-                    help="match pipeline.DEFAULT_SALT_BUCKETS; salt 8 "
-                         "measured 50s straggler cells on monster convs")
+    ap.add_argument("--salt-buckets", type=int, default=DEFAULT_SALT_BUCKETS,
+                    help="salt 8 measured 50s straggler cells on monster convs")
     ap.add_argument("--max-files", type=int, default=None,
                     help="cap pending input files per commit (resume granularity)")
     ap.add_argument("--master", default=None)

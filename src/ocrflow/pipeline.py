@@ -49,11 +49,9 @@ def salted_key(salt_buckets: int = DEFAULT_SALT_BUCKETS):
 def extract_df(spark: SparkSession, transcripts: DataFrame,
                partitions: int | None = None,
                salt_buckets: int = DEFAULT_SALT_BUCKETS,
-               weights: dict | None = None,
                lineage_acc=None, input_file_col: str | None = None) -> DataFrame:
     """Build the extraction plan over a transcripts DataFrame (lazy)."""
-    weights = weights or ct.default_weights()
-    b = spark.sparkContext.broadcast(weights)
+    b = spark.sparkContext.broadcast(ct.default_weights())
 
     cols = ["conv_id", "turn_idx", "text"]
     if "role" in transcripts.columns:

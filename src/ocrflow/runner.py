@@ -58,8 +58,10 @@ def list_input_files(input_path: str) -> list[str]:
     read the file list from a manifest/catalog (the icelite snapshot of
     the upstream table). Everything downstream (resume accounting,
     per-file lineage, skip sets) keys on the returned paths and is
-    listing-agnostic.
+    listing-agnostic. The path is resolved first, so two spellings of
+    one directory yield the same keys and resume skips the same files.
     """
+    input_path = os.path.realpath(input_path)
     if os.path.isdir(input_path):
         return sorted(
             os.path.join(input_path, n) for n in os.listdir(input_path)
@@ -93,8 +95,9 @@ def expire_orphan_data_commits(out: IceliteTable, lineage: IceliteTable) -> int:
     same input files and append them AGAIN — duplicates. Expire such
     orphan heads (roll CURRENT back) before resuming; the redo commit
     reuses the freed snapshot-id slot. Only run_extract commits (those
-    tagged with run_id) are candidates — streaming epoch commits have
-    their own idempotency key. Returns how many heads were expired.
+    tagged with run_id) are candidates: a ``compact()`` replace snapshot
+    on the output table never gets a lineage pair, and rolling it back
+    would drop the compaction. Returns how many heads were expired.
     """
     confirmed = _lineage_confirmed_snapshots(lineage)
     n = 0

@@ -378,75 +378,6 @@ def stream_sink(spark, sf):
     return _materialized(spark.read.parquet(out_dir), out_dir)
 
 
-def commit_epoch(tbl, batch_df, epoch_id: int,
-                 partitions: int = 8, salt_buckets: int = 64) -> int | None:
-    """Extract one micro-batch and commit it as an icelite snapshot,
-    idempotently per epoch. foreachBatch is AT-LEAST-once: after a
-    crash between the snapshot commit and the streaming checkpoint
-    write, restart replays the epoch — without the guard the replay
-    would overwrite data/epoch-N (breaking the manifest's old file
-    names) and append the same rows a second time. The committed-epoch
-    check runs BEFORE any file write, so a replayed epoch is a no-op
-    and every snapshot holds each epoch exactly once.
-    """
-    from .icelite import write_dataframe_files
-    from .pipeline import extract_df
-
-    committed = {s.get("props", {}).get("epoch") for s in tbl.snapshots()}
-    if epoch_id in committed:
-        return None
-    extracted = extract_df(batch_df.sparkSession, batch_df,
-                           partitions=partitions, salt_buckets=salt_buckets)
-    d = tbl.new_commit_dir(f"epoch-{epoch_id}")
-    files = write_dataframe_files(extracted, d)
-    return tbl.commit_append(files, props={"epoch": epoch_id})
-
-
-def stream_extract(spark: SparkSession, input_dir: str, out_table_path: str,
-                   checkpoint_dir: str | None = None,
-                   partitions: int = 8, salt_buckets: int = 64):
-    """Incremental extraction: transcripts file-stream → Arrow kernel →
-    icelite append per micro-batch (exactly-once via the streaming
-    checkpoint + atomic snapshot commits).
-
-    The streaming twin of runner.run_extract: new transcript files are
-    picked up incrementally, each micro-batch runs the same extract_df
-    plan inside foreachBatch, and every batch commits one icelite
-    snapshot tagged with the epoch. At ingest scale the source is Kafka
-    and the checkpoint lives on durable storage; the plan is identical.
-    Runs with availableNow (drain-everything-then-stop). Without a
-    ``checkpoint_dir`` the offsets live in a scratch directory that is
-    removed once the query ends; pass one to resume across calls.
-    """
-    from pyspark.sql import types as T
-
-    from .icelite import IceliteTable, write_dataframe_files
-    from .pipeline import extract_df
-
-    schema = T.StructType([
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    tbl = IceliteTable(out_table_path)
-
-    def commit_batch(batch_df, epoch_id: int):
-        commit_epoch(tbl, batch_df, epoch_id,
-                     partitions=partitions, salt_buckets=salt_buckets)
-
-    stream = (spark.readStream.schema(schema).parquet(input_dir))
-    with (contextlib.nullcontext(checkpoint_dir) if checkpoint_dir
-          else _checkpoint_dir()) as ckpt:
-        q = (stream.writeStream.foreachBatch(commit_batch)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    return tbl
-
-
 @sq("stream_upsert_sink")
 def stream_upsert_sink(spark, sf):
     """Streaming MERGE INTO: foreachBatch reduces each micro-batch to

@@ -68,6 +68,57 @@ def test_run_commit_resume_byte_identical(spark, input_dir, tmp_path):
     assert [s["snapshot_id"] for s in tbl.snapshots()] == [1, 2]
 
 
+def test_run_extract_picks_up_a_later_drop(spark, tmp_path):
+    """Incremental ingest is a re-run over the same directory: a second
+    file drop landing after a compact() is processed alone, once, and
+    the compaction's replace snapshot (no lineage pair) is not rolled
+    back as an orphan head."""
+    rows = synth.gen_rows(200, seed=42, monster_every=0)
+    half = len(rows) // 2
+    in_dir, out = str(tmp_path / "in"), str(tmp_path / "extracted")
+
+    def drop(part):
+        spark.createDataFrame(part, schema=synth.TRANSCRIPTS_DDL) \
+            .coalesce(1).write.mode("append").parquet(in_dir)
+
+    drop(rows[:half])
+    r1 = run_extract(spark, in_dir, out, partitions=4)
+    assert (r1["files_processed"], r1["skipped"]) == (1, 0)
+    tbl = IceliteTable(out)
+    tbl.compact(spark, stats_cols=("conv_id",))
+    drop(rows[half:])
+    r2 = run_extract(spark, in_dir, out, partitions=4)
+    assert (r2["files_processed"], r2["skipped"]) == (1, 1)
+
+    got = tbl.read(spark).collect()
+    keys = [(r["conv_id"], r["turn_idx"]) for r in got]
+    assert len(keys) == len(set(keys)) == len(rows)
+    by_key = dict(zip(keys, got))
+    for row in rows:
+        g = by_key[(row["conv_id"], row["turn_idx"])]
+        want = R.extract_turn(row["text"], role=row["role"])
+        assert g["extracted_text"] == want.extracted_text
+        assert g["payload_kind"] == want.payload_kind
+        assert [(s["start"], s["end"], R.SPAN_KINDS[s["kind_code"]],
+                 s["score"]) for s in g["spans"]] == want.spans
+    # append, replace (compaction), append
+    assert len(tbl.snapshots()) == 3
+    assert run_extract(spark, in_dir, out, partitions=4)["files_processed"] == 0
+
+
+def test_run_extract_resumes_across_input_path_spellings(spark, input_dir,
+                                                         tmp_path):
+    """Completion markers key on the resolved input path: a re-run that
+    names the same directory another way processes nothing."""
+    out = str(tmp_path / "extracted")
+    (tmp_path / "x").mkdir()
+    detour = str(tmp_path / "x" / ".." / os.path.basename(input_dir))
+    run_extract(spark, detour, out, partitions=4)
+    r2 = run_extract(spark, input_dir, out, partitions=4)
+    assert r2["files_processed"] == 0
+    assert IceliteTable(out).read(spark).count() == 300
+
+
 def test_lineage_rows(spark, input_dir, tmp_path):
     out = str(tmp_path / "extracted")
     run_extract(spark, input_dir, out, run_id="run-l", partitions=4)
@@ -154,27 +205,6 @@ def test_lineage_dedup_on_task_retry():
     row_p1 = (1, "f2", 20, 20, 0, 19, 7.0)
     deduped = _dedup_lineage_rows([row_p0, row_p1, row_p0, row_p1, row_p0])
     assert sorted(deduped) == [row_p0, row_p1]
-
-
-def test_stream_epoch_replay_is_noop(spark, tmp_path):
-    """foreachBatch is at-least-once: a replayed epoch must not
-    re-append (ADVICE round-1 medium)."""
-    from ocrflow import synth
-    from ocrflow.streaming import commit_epoch
-
-    tbl = IceliteTable(str(tmp_path / "stream_tbl"))
-    rows = synth.gen_rows(50, seed=7, monster_every=0)
-    df = spark.createDataFrame(rows, schema=synth.TRANSCRIPTS_DDL)
-
-    assert commit_epoch(tbl, df, epoch_id=0, partitions=2) == 1
-    n1 = tbl.read(spark).count()
-    files_1 = tbl.file_list()
-    # replay the same epoch (crash after commit, before checkpoint)
-    assert commit_epoch(tbl, df, epoch_id=0, partitions=2) is None
-    assert tbl.read(spark).count() == n1
-    assert tbl.file_list() == files_1          # old files untouched
-    assert commit_epoch(tbl, df, epoch_id=1, partitions=2) == 2
-    assert tbl.read(spark).count() == 2 * n1
 
 
 def test_compaction_reduces_files_keeps_rows_and_history(spark, tmp_path):
@@ -385,9 +415,9 @@ def test_expire_and_gc_reclaim_precompaction_files(spark, tmp_path):
 
 
 def test_run_extract_writes_flat_layout(spark, input_dir, tmp_path):
-    """run_extract commits the flat layout streaming.commit_epoch
-    writes: no hive directories, the kernel's schema, conv_id stats on
-    every manifest entry, and compact() shrinks the file count."""
+    """run_extract commits a flat layout: no hive directories, the
+    kernel's schema, conv_id stats on every manifest entry, and
+    compact() shrinks the file count."""
     from pyspark.sql import functions as F
 
     from ocrflow.kernel import EXTRACTED_DDL

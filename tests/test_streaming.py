@@ -39,18 +39,15 @@ def test_stream_key_leaves_no_checkpoint_dir(spark):
     assert set(glob.glob(pattern)) - before == set()
 
 
-def test_stream_data_keys_leave_no_scratch_dir(spark, events, tmp_path):
-    """The file sink, the upsert key and stream_extract (with no
-    checkpoint_dir) remove their scratch directories, and the frames
-    the two keys return still read after the removal."""
+def test_stream_data_keys_leave_no_scratch_dir(spark, events):
+    """The file sink and the upsert key remove their scratch
+    directories, and the frames they return still read after the
+    removal."""
     import glob
     import tempfile
 
-    from ocrflow import synth
-    from ocrflow.streaming import stream_extract
-
     prefixes = ("ocrflow_sink_", "ocrflow_upsert_src_", "ocrflow_upsert_tbl_",
-                "ocrflow_sx_", "ocrflow_ckpt_")
+                "ocrflow_ckpt_")
 
     def scratch():
         return {p for pre in prefixes for p in
@@ -61,12 +58,6 @@ def test_stream_data_keys_leave_no_scratch_dir(spark, events, tmp_path):
     assert STREAM_QUERIES["stream_sink"](spark, SF_DIR).count() == n_events
     n_users = events.select("user_id").distinct().count()
     assert STREAM_QUERIES["stream_upsert_sink"](spark, SF_DIR).count() == n_users
-    rows = synth.gen_rows(20, seed=7, monster_every=0)
-    spark.createDataFrame(rows, schema=synth.TRANSCRIPTS_DDL) \
-        .coalesce(1).write.parquet(str(tmp_path / "in"))
-    tbl = stream_extract(spark, str(tmp_path / "in"), str(tmp_path / "out"),
-                         partitions=2)
-    assert tbl.read(spark).count() == len(rows)
     assert scratch() - before == set()
 
 
@@ -140,42 +131,6 @@ def test_stream_sink_exactly_once_rows(spark, events):
     got = STREAM_QUERIES["stream_sink"](spark, SF_DIR)
     assert got.count() == events.count()
     assert set(got.columns) == {"event_id", "user_id", "value"}
-
-
-def test_stream_extract_incremental(spark, tmp_path):
-    """Incremental extraction: two file drops → two snapshot commits,
-    union byte-equal to the golden extractor (streaming twin of the
-    resume test)."""
-    from ocrflow import reference as R
-    from ocrflow import synth
-    from ocrflow.streaming import stream_extract
-
-    rows = synth.gen_rows(200, seed=42, monster_every=0)
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "extracted")
-
-    half = len(rows) // 2
-    spark.createDataFrame(rows[:half], schema=synth.TRANSCRIPTS_DDL) \
-        .coalesce(1).write.mode("append").parquet(str(in_dir))
-    tbl = stream_extract(spark, str(in_dir), out, checkpoint_dir=ckpt,
-                         partitions=4)
-    n1 = tbl.read(spark).count()
-    assert n1 == half
-
-    # second drop: only the new file is processed (checkpoint offsets)
-    spark.createDataFrame(rows[half:], schema=synth.TRANSCRIPTS_DDL) \
-        .coalesce(1).write.mode("append").parquet(str(in_dir))
-    tbl = stream_extract(spark, str(in_dir), out, checkpoint_dir=ckpt,
-                         partitions=4)
-    got = {(r["conv_id"], r["turn_idx"]): r["extracted_text"]
-           for r in tbl.read(spark).collect()}
-    assert len(got) == len(rows)
-    for row in rows:
-        assert got[(row["conv_id"], row["turn_idx"])] == \
-            R.extract_turn(row["text"], role=row["role"]).extracted_text
-    assert len(tbl.snapshots()) == 2
 
 
 # -- round 3: transformWithStateInPandas (environment-gated) --------------
