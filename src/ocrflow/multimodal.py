@@ -4,8 +4,8 @@ The Spark-side plumbing is real — schemas, Arrow batch shapes,
 mapInPandas iterator signatures, partitioning — while the codec step is
 STUBBED (this container has no cv2/PIL/ffmpeg): ``_decode_image`` and
 ``_decode_audio`` produce a deterministic fake decode from the payload
-bytes, and raise ``NotImplementedError`` if a real codec is requested.
-Swapping in a real decoder changes one function, not the pipeline.
+bytes. Swapping in a real decoder changes one function, not the
+pipeline.
 
 Assets are synthesized deterministically from the documents table (no
 external data): payload = the doc's utf-8 bytes repeated/truncated to
@@ -47,18 +47,12 @@ def make_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 30 + 2).cast("int").alias("n_frames"))
 
 
-def _decode_image(payload: bytes, width: int, height: int,
-                  real_codec: bool = False) -> np.ndarray:
+def _decode_image(payload: bytes, width: int, height: int) -> np.ndarray:
     """STUB decode: deterministic fake image from payload bytes.
 
     A real implementation would be ``cv2.imdecode(np.frombuffer(payload,
     np.uint8), cv2.IMREAD_GRAYSCALE)`` — unavailable in this container.
     """
-    if real_codec:
-        raise NotImplementedError(
-            "real image codecs (cv2/PIL) are not installed in this "
-            "environment; the deterministic fake below exercises the "
-            "identical batch plumbing")
     n = width * height
     buf = np.frombuffer(payload, dtype=np.uint8)
     reps = int(np.ceil(n / max(len(buf), 1))) if len(buf) else 1
@@ -67,11 +61,8 @@ def _decode_image(payload: bytes, width: int, height: int,
     return np.tile(buf, reps)[:n].reshape(height, width)
 
 
-def _decode_audio(payload: bytes, sample_rate: int,
-                  real_codec: bool = False) -> np.ndarray:
+def _decode_audio(payload: bytes, sample_rate: int) -> np.ndarray:
     """STUB decode: deterministic fake PCM (int16) from payload bytes."""
-    if real_codec:
-        raise NotImplementedError("real audio codecs are not installed")
     buf = np.frombuffer(payload[: (len(payload) // 2) * 2], dtype=np.int16)
     return buf if len(buf) else np.zeros(1, dtype=np.int16)
 

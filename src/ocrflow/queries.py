@@ -106,6 +106,15 @@ def words(*, lower: bool = False) -> Column:
     return F.split(F.lower(trimmed) if lower else trimmed, r"\s+")
 
 
+def conv_id() -> Column:
+    """The transcript ``conv_id`` a documents row belongs to:
+    ``'conv-'`` + ``doc_id % 50`` zero-padded to 8 digits. The corpus
+    maps onto 50 conversations; a row's turn index is ``doc_id / 50``."""
+    return F.concat(F.lit("conv-"),
+                    F.lpad((F.col("doc_id") % 50).cast("string"), 8, "0")
+                    ).alias("conv_id")
+
+
 def spaced() -> Column:
     """``text`` trimmed with every whitespace run collapsed to one
     space: the string ``word_ngrams`` expects."""

@@ -46,22 +46,9 @@ class SynthTranscriptsReader(DataSourceReader):
                 for i in range(self.n_parts) if i * per < self.turns]
 
     def read(self, partition):
-        # executed on executors: derive this slice's (conv, turn) pairs
-        # from the deterministic conversation-size plan and emit tuples
-        import numpy as np
-
-        from ocrflow.synth import _conv_lookup, gen_turn, plan_sizes
-
-        sizes = plan_sizes(self.turns, self.seed,
-                           self.monster_every, self.monster_size)
-        offsets = _conv_lookup(sizes)
-        ids = np.arange(partition.lo, partition.hi)
-        conv = np.searchsorted(offsets, ids, side="right") - 1
-        turn = ids - offsets[conv]
-        for ci, ti in zip(conv.tolist(), turn.tolist()):
-            row = gen_turn(int(ci), int(ti), self.seed)
-            yield (row["conv_id"], row["turn_idx"], row["role"],
-                   row["text"], row["tool"], row["ts"])
+        # executed on executors
+        return _gen_slice(partition.lo, partition.hi, self.seed,
+                          self.monster_every, self.monster_size, self.turns)
 
 
 def _gen_slice(lo: int, hi: int, seed: int, monster_every: int,

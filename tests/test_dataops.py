@@ -287,11 +287,6 @@ def test_multimodal_plumbing(spark):
     n_videos = M.make_assets(spark, SF_DIR).filter("kind = 'video'").count()
     assert len(rows) >= n_videos
 
-    # the stub is honest: asking for a real codec raises NotImplementedError
-    import pytest as _pytest
-    with _pytest.raises(NotImplementedError):
-        M._decode_image(b"xx", 4, 4, real_codec=True)
-
 
 def test_python_datasource_matches_gen_rows(spark):
     # the custom DataSource yields exactly the rows the reference
@@ -574,6 +569,18 @@ def test_python_stream_source_equals_batch(spark):
     assert got == want
 
 
+def test_python_stream_source_leaves_no_checkpoint_dir(spark):
+    """The streaming DataSource key removes its checkpointLocation once
+    the drained query has stopped, and its frame still reads."""
+    import glob
+
+    pattern = os.path.join(tempfile.gettempdir(), "ocrflow_*")
+    before = set(glob.glob(pattern))
+    df = D.QUERIES["source_python_datasource_stream"](spark, "")
+    assert set(glob.glob(pattern)) - before == set()
+    assert sum(r["n_turns"] for r in df.collect()) == 2000
+
+
 def test_hll_sketch_estimates_within_bound(spark):
     rows = D.agg_hll_sketch_merge(spark, SF_DIR).collect()
     assert len(rows) >= 2  # at least one event_type plus the ALL row
@@ -810,18 +817,20 @@ def test_snm_global_rank_has_no_single_partition_window(spark):
     """The data-sized window partitions by pid; the only
     unpartitioned window runs over |partitions| offset rows.
 
-    Round 6: global_rank lazily checkpoints its ranked frame (one
-    compute for its offsets + join consumers), so the rank window now
-    lives in the checkpointed lineage — the window/bucket shape is
-    asserted on the pre-checkpoint builder (_gr_local) over the same
-    input, and the end-to-end plan is still pinned free of sampled
-    range exchanges."""
+    global_rank is a prefix count over global_prefix_sums, which lazily
+    checkpoints its running-sum frame (one compute for its offsets +
+    join consumers), so the rank window lives in the checkpointed
+    lineage — the window/bucket shape is asserted on the
+    pre-checkpoint builder (_pps_local) over the same input and the
+    same column of ones global_rank counts, and the end-to-end plan is
+    still pinned free of sampled range exchanges."""
     from pyspark.sql import functions as F
     from ocrflow.queries import t
     d = (t(spark, SF_DIR, "documents")
          .filter(F.col("lang").isNotNull() & F.col("n_chars").isNotNull())
          .select("doc_id", "lang", "n_chars"))
-    lplan = D._gr_local(d, ["lang", "n_chars", "doc_id"], 8)._jdf \
+    lplan = D._pps_local(d.withColumn(D._ONES, F.lit(1)),
+                         ["lang", "n_chars", "doc_id"], [D._ONES], 8)._jdf \
         .queryExecution().executedPlan().toString()
     assert "partitionBy" not in lplan  # sanity: physical plan text
     wins = [l for l in lplan.splitlines()
