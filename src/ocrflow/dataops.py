@@ -1341,7 +1341,10 @@ def connected_components(edges, src: str = "src", dst: str = "dst",
     with O(log diameter) rather than O(diameter) — the property that
     makes iterative CC viable on deep chains (same effect as
     large-star/small-star, Kiveris et al., "Connected Components in
-    MapReduce and Beyond"). From round 2 on, the loop stops at the
+    MapReduce and Beyond"). Round 1 is computed without a label table:
+    its labels are the identity, so its neighbor-min is
+    least(src, min(dst)) grouped on the edge list's own partitioning,
+    with no join and no exchange. From round 2 on, the loop stops at the
     first neighbor-min step that changes no label: labels that are
     final after k rounds cost k + 1 neighbor-min steps and k jump
     passes (k = 1 for chains of up to 5 nodes, k = 2 for the up-to-14-
@@ -1367,13 +1370,19 @@ def connected_components(edges, src: str = "src", dst: str = "dst",
     # LSH pairs post-.distinct()); duplicate edges would only duplicate
     # min-messages, but the exchange they cost is the largest in CC
     und = und.repartition("src").persist()
-    labels = (und.select(F.col("src").alias("id")).distinct()
-              .withColumn("comp", F.col("id"))
-              .localCheckpoint(eager=False))
-    for i in range(max_iter):
-        # neighbor-min: every vertex absorbs the smallest label adjacent
-        msgs = (und.join(labels, und.src == labels.id)
-                .select(F.col("dst").alias("id"), "comp"))
+    labels = None
+    for _ in range(max_iter):
+        if labels is None:
+            # round 1: identity labels, so no label table and no join
+            stepped = (und.groupBy("src")
+                       .agg(F.least("src", F.min("dst")).alias("comp"))
+                       .withColumnRenamed("src", "id"))
+        else:
+            # neighbor-min: every vertex absorbs the smallest label adjacent
+            msgs = (und.join(labels, und.src == labels.id)
+                    .select(F.col("dst").alias("id"), "comp"))
+            stepped = (labels.unionByName(msgs)
+                       .groupBy("id").agg(F.min("comp").alias("comp")))
         # stepped feeds the fixpoint probe and BOTH sides of the
         # pointer-jump join; the checkpoint makes the neighbor-min
         # aggregate run once per round instead of once per reader
@@ -1381,17 +1390,15 @@ def connected_components(edges, src: str = "src", dst: str = "dst",
         # round-5 lesson). Under AQE even eager=False runs the plan's
         # shuffle stages inside the call; only its last stage waits for
         # the next action, the probe.
-        stepped = (labels.unionByName(msgs)
-                   .groupBy("id").agg(F.min("comp").alias("comp"))
-                   .localCheckpoint(eager=False))
+        stepped = stepped.localCheckpoint(eager=False)
         # Fixpoint probe, one aggregate job: stepped ≤ labels id by id
         # over the same ids, so sum(labels) - sum(stepped) is 0 exactly
         # when no neighbor offers a smaller label. Then every edge
         # joins equal labels, and each component carries one label that
         # is a member's id ≤ every member's id: its minimum. Exact
-        # decimal, since ids can be any long. Round 1 is not probed:
-        # its labels are the identity, which any edge changes.
-        if i > 0:
+        # decimal, since ids can be any long. Round 1 has no labels to
+        # probe against: any edge changes the identity.
+        if labels is not None:
             dec = F.col("comp").cast("decimal(38,0)")
             gap = (labels.select(dec.alias("d"))
                    .unionByName(stepped.select((-dec).alias("d")))
@@ -3877,7 +3884,7 @@ def scan_metadata_columns(spark, sf):
     literal file name; the VALUE verified is that Spark's hidden
     column actually routes every row to its source file (count and
     key range must match the table totals)."""
-    o = spark.read.parquet(f"{sf}/orders.parquet")
+    o = t(spark, sf, "orders")
     return (o.select(F.col("_metadata.file_name").alias("file_name"),
                      "o_orderkey")
             .groupBy("file_name")

@@ -710,9 +710,9 @@ class IceliteTable:
             # pruning-to-zero is a CORRECT outcome (a range holding no
             # data), not an error: return an empty frame with the
             # table's schema (from one unpruned file's footer)
-            schema = spark.read.parquet(
-                os.path.join(self.path, all_entries[0]["path"])).schema
-            return spark.createDataFrame([], schema)
+            from .queries import parquet_schema
+            return spark.createDataFrame([], parquet_schema(
+                spark, os.path.join(self.path, all_entries[0]["path"])))
         reader = spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
@@ -803,9 +803,9 @@ class IceliteTable:
                 "not an append-only range")
         added = sorted(to_paths - from_paths)
         if not added:
-            schema = spark.read.parquet(
-                os.path.join(self.path, to_snap["files"][0]["path"])).schema
-            return spark.createDataFrame([], schema)
+            from .queries import parquet_schema
+            return spark.createDataFrame([], parquet_schema(
+                spark, os.path.join(self.path, to_snap["files"][0]["path"])))
         return spark.read.parquet(
             *[os.path.join(self.path, p) for p in added])
 

@@ -23,7 +23,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .queries import ORACLE, n_stop, n_word, quality_gate
+from .queries import ORACLE, n_stop, n_word, quality_gate, t
 
 EVENTS_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
@@ -186,7 +186,7 @@ def stream_join_static(spark, sf):
     exactly once regardless of micro-batching, so the emitted set
     equals the batch join."""
     s = _events_stream(spark, sf)
-    cust = (spark.read.parquet(f"{sf}/customer.parquet")
+    cust = (t(spark, sf, "customer")
             .select("c_custkey", "c_mktsegment"))
     j = (s.join(cust, s.user_id == cust.c_custkey, "inner")
          .select("event_id", "user_id", "c_mktsegment"))
@@ -404,8 +404,7 @@ def stream_upsert_sink(spark, sf):
     stage = tempfile.mkdtemp(prefix="ocrflow_upsert_src_")
     tbl_dir = tempfile.mkdtemp(prefix="ocrflow_upsert_tbl_")
     shutil.rmtree(tbl_dir)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    (spark.read.parquet(f"{sf}/events.parquet")
+    (t(spark, sf, "events")
      .repartition(3).write.mode("overwrite").parquet(stage))
     tbl = IceliteTable(tbl_dir)
 

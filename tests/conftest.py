@@ -1,3 +1,6 @@
+import time
+import uuid
+
 import pytest
 
 
@@ -8,3 +11,30 @@ def spark():
                       shuffle_partitions=8, arrow_batch=64)
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` calls ``fn()`` and returns ``(result, jobs)``,
+    the number of Spark jobs the call started. The status tracker hears
+    of jobs through the listener bus, in start order, so a marker job
+    in a second group is waited for before the first group is counted."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(fn):
+        group, marker = f"count-{uuid.uuid4().hex}", f"mark-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+            sc.setJobGroup(marker, marker)
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(marker):
+            assert time.monotonic() < deadline, "marker job never seen"
+            time.sleep(0.05)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    return run

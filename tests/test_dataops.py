@@ -1388,8 +1388,9 @@ def test_connected_components_stops_at_first_unchanged_round(
         spark, monkeypatch):
     # chains of <= 5 nodes are final after one round (neighbor-min +
     # three jumps compose the parent map 4 times), so the loop runs 2
-    # neighbor-min steps and 1 jump pass: the initial labels, 2 stepped
-    # tables and 1 jumped table are the only checkpoints taken
+    # neighbor-min steps and 1 jump pass: 2 stepped tables and 1 jumped
+    # table are the only checkpoints taken (round 1 starts from the
+    # identity labels, so it checkpoints no initial label table)
     from pyspark.sql.classic.dataframe import DataFrame
     from ocrflow.dataops import connected_components
 
@@ -1408,7 +1409,38 @@ def test_connected_components_stops_at_first_unchanged_round(
     comp = {r["id"]: r["comp"]
             for r in connected_components(edges).collect()}
     assert comp == {s + k: s for s, n in chains for k in range(n)}
-    assert len(calls) == 4
+    assert len(calls) == 3
+
+
+@pytest.mark.parametrize("edges_distinct", [False, True])
+def test_connected_components_self_loops_duplicates_and_nulls(
+        spark, edges_distinct):
+    # outputs pinned on the implementation whose round 1 joined an
+    # identity label table: a self-loop is its own component, duplicate
+    # edges change nothing, and a NULL endpoint sends no label but is
+    # returned as a vertex (id NULL) holding its smallest neighbor
+    from ocrflow.dataops import connected_components
+    cases = [
+        ([(1, 1), (2, 2), (2, 3), (4, 4)],
+         [(1, 1), (2, 2), (3, 2), (4, 4)]),
+        ([(5, 6), (6, 5), (5, 6), (6, 7), (7, 6), (7, 6), (9, 8), (9, 8)],
+         [(5, 5), (6, 5), (7, 5), (8, 8), (9, 8)]),
+        ([(10, None), (None, 11), (11, 12), (None, None), (13, None),
+          (14, 14)],
+         [(None, 10), (10, 10), (11, 11), (12, 11), (13, 13), (14, 14)]),
+        ([(None, 3), (3, 2), (2, 1), (1, None), (20, 21), (21, None)],
+         [(None, 1), (1, 1), (2, 1), (3, 1), (20, 20), (21, 20)]),
+        ([(None, None)], [(None, None)]),
+        ([(1, 1), (1, 2), (2, 1), (1, 2), (2, None), (None, 5), (5, 6),
+          (6, 6), (7, 8), (8, 7)],
+         [(None, 1), (1, 1), (2, 1), (5, 5), (6, 5), (7, 7), (8, 7)]),
+    ]
+    for edges, want in cases:
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = sorted(((r["id"], r["comp"]) for r in connected_components(
+            df, edges_distinct=edges_distinct).collect()),
+            key=lambda r: (r[0] is not None, r[0] or 0))
+        assert got == want, edges
 
 
 #: edge inputs for the shared text features: empty, one token, fewer

@@ -576,3 +576,67 @@ def test_widen_decides_from_row_groups(spark, tmp_path):
         assert widened(one)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+
+def _footer_cases(spark, tmp_path):
+    """(dir, table name) for every testdata table at every scale next to
+    SF_DIR, perfbench's tables, and Spark-written directories holding
+    each type the footer conversion must get right (INT96 and micros
+    timestamps, never-null columns and elements)."""
+    import datetime
+    import decimal
+    import glob
+    from perfbench import tables as perf_tables
+
+    cases = []
+    for sf in sorted({SF_DIR, *glob.glob(os.path.join(
+            os.path.dirname(SF_DIR), "sf*"))}):
+        cases += [(sf, os.path.basename(p)[:-len(".parquet")])
+                  for p in sorted(glob.glob(f"{sf}/*.parquet"))]
+    perf = str(tmp_path / "perf")
+    perf_tables.write_tables(perf)
+    cases += [(perf, n) for n in sorted(perf_tables.build_tables())]
+    typed = spark.createDataFrame(
+        [(datetime.datetime(2020, 1, 2, 3, 4, 5),
+          datetime.datetime(2020, 1, 2, 3, 4, 5), decimal.Decimal("1.25"),
+          [1, None], {"a": 2}, (1, "x"), datetime.date(2020, 1, 1),
+          bytearray(b"ab"))],
+        "ts timestamp, tsn timestamp_ntz, d decimal(10,2), arr array<int>, "
+        "m map<string,int>, st struct<i:int,s:string>, dt date, b binary")
+    never_null = spark.range(3).selectExpr(
+        "id", "array(id) AS a", "named_struct('x', id) AS s",
+        "map('k', id) AS m")
+    prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    try:
+        for fmt in ("INT96", "TIMESTAMP_MICROS"):
+            spark.conf.set("spark.sql.parquet.outputTimestampType", fmt)
+            typed.repartition(2).write.parquet(
+                str(tmp_path / f"typed_{fmt}.parquet"))
+            cases.append((str(tmp_path), f"typed_{fmt}"))
+        never_null.write.parquet(str(tmp_path / "never_null.parquet"))
+        cases.append((str(tmp_path), "never_null"))
+    finally:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    return cases
+
+
+def test_t_takes_spark_schema_from_footer_and_runs_no_job(
+        spark, tmp_path, count_jobs):
+    # t() reads the schema Spark would infer from one parquet footer on
+    # the driver: equal to spark.read.parquet's, nullability included,
+    # under either timestamp_ntz inference setting, with no Spark job
+    from ocrflow.queries import t
+    cases = _footer_cases(spark, tmp_path)
+    assert len(cases) >= 10 + 10 + 3
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(key)
+    try:
+        for ntz in ("true", "false"):
+            spark.conf.set(key, ntz)
+            for sf, name in cases:
+                df, jobs = count_jobs(lambda: t(spark, sf, name))
+                assert jobs == 0, (sf, name)
+                want = spark.read.parquet(f"{sf}/{name}.parquet").schema
+                assert df.schema == want, (ntz, sf, name)
+    finally:
+        spark.conf.set(key, prev)

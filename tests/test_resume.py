@@ -1026,3 +1026,27 @@ def test_icelite_named_refs(spark, tmp_path):
     # dropping the ref releases it for the next expiry pass
     tbl.drop_ref("published")
     assert tbl.expire_snapshots(keep_last=1) == [2]
+
+
+def test_empty_reads_take_the_table_schema_without_a_job(
+        spark, tmp_path, count_jobs):
+    # a read pruned to zero files and an incremental read that adds no
+    # file build their empty frame from one footer, with no Spark job;
+    # the frame's schema is the table's, nullability included
+    from pyspark.sql import functions as F
+    tbl = IceliteTable(str(tmp_path / "tbl"))
+    df = spark.range(0, 50).select(
+        "id", F.col("id").cast("string").alias("s"),
+        F.lit("2020-01-01 00:00:00").cast("timestamp_ntz").alias("ts"),
+        F.array("id").alias("a"))
+    tbl.commit_append(write_dataframe_files(df.coalesce(1),
+                                            tbl.new_commit_dir("c0")),
+                      stats_cols=("id",))
+    want = tbl.read(spark).schema
+    snap = tbl.current_snapshot_id()
+    for build in (lambda: tbl.read(spark, stats_filter={"id": (100, 200)}),
+                  lambda: tbl.incremental_read(spark, snap, snap)):
+        empty, jobs = count_jobs(build)
+        assert jobs == 0
+        assert empty.schema == want
+        assert empty.count() == 0
