@@ -7741,16 +7741,15 @@ FROM u GROUP BY 1
 def source_icelite_schema_evolution(spark, sf):
     """ADDITIVE SCHEMA EVOLUTION through the table format, oracled:
     commit 1 writes (event_id, user_id); commit 2 ADDS event_type;
-    reading the head snapshot with merge_schema=True yields the union
-    schema with pre-evolution rows null-filled — Iceberg's add-column
-    semantics, which DuckDB predicts relationally (old half → NULL
-    column), so the evolution property itself takes the string-exact
-    gate. The merged scan is planned from MANIFEST column signatures
-    (recorded at commit time): homogeneous file groups scan without
-    mergeSchema and unionByName null-fills — zero footer reads at
-    plan time, the Iceberg model at 10^5-file manifests
-    (icelite.py read(); behavioral tests in test_resume.py cover the
-    legacy-manifest fallback)."""
+    reading the head snapshot yields the union schema with
+    pre-evolution rows null-filled — Iceberg's add-column semantics,
+    which DuckDB predicts relationally (old half → NULL column), so
+    the evolution property itself takes the string-exact gate. The
+    scan is planned from MANIFEST column signatures (recorded at
+    commit time): each homogeneous file group is one scan typed by one
+    footer and unionByName null-fills — no per-file footer read at
+    plan time, the Iceberg model at 10^5-file manifests (icelite.py
+    read())."""
     from .icelite import IceliteTable, write_dataframe_files
     tbl = IceliteTable(_scratch("icelite_schema_evo"))
     e = t(spark, sf, "events")
@@ -7763,7 +7762,7 @@ def source_icelite_schema_evolution(spark, sf):
         .select("event_id", "user_id", "event_type"),
         tbl.new_commit_dir("c2"))
     tbl.commit_append(f2)
-    merged = tbl.read(spark, merge_schema=True)
+    merged = tbl.read(spark)
     return (merged.groupBy(
         F.coalesce("event_type", F.lit("<pre-evolution>"))
         .alias("event_type"))

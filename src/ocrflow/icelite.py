@@ -8,10 +8,11 @@ hard-link claim), time-travel reads by snapshot id, append-only data
 files, optimistic concurrent writers (link-claim CAS + rebase-retry,
 single host — a real deployment swaps the claim seam for the catalog's
 CAS), compaction/expiry/GC (commit_replace, expire_snapshots,
-remove_orphan_files), and additive schema evolution on read
-(merge_schema). What it does NOT emulate: the Iceberg format spec
-itself, multi-host commit coordination, column-level deletes. The
-table API mirrors Iceberg's naming so a real
+remove_orphan_files), and additive schema evolution on read (planned
+from the manifest's column signatures). A snapshot's file list is the
+whole table state. What it does NOT emulate: the Iceberg format spec
+itself, multi-host commit coordination, row- and column-level deletes.
+The table API mirrors Iceberg's naming so a real
 `spark.read.format("iceberg")` catalog can be swapped in where the jar
 exists.
 
@@ -21,17 +22,25 @@ Layout:
     <table>/metadata/CURRENT           pointer file (atomic rename)
 
 Manifest: {"snapshot_id", "parent_id", "committed_at", "files":
-[{"path", "rows"}], "props": {...}} — files are table-relative paths;
+[{"path", "rows", "schema", "stats"?}], "props": {...}} — files are
+table-relative paths, ``schema`` their top-level column names;
 the full file list of a snapshot is the manifest's list (each manifest
 is self-contained, parent chain kept for history/audit).
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import time
 import uuid
+from functools import reduce
+
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 # CURRENT.lock is held for microseconds; anything older than this is a
 # crashed holder and is reclaimed by the next _advance_current waiter.
@@ -119,7 +128,7 @@ class IceliteTable:
         os.rename(tmp, path)
 
     def _commit(self, entries_for_parent, props: dict,
-                max_retries: int = 20, delete_files_for=None) -> int:
+                max_retries: int = 20) -> int:
         """Optimistic-concurrency commit (Iceberg's commit protocol in
         miniature): compute the manifest against the CURRENT parent,
         then CLAIM the snapshot-id slot with os.link (hard-link fails
@@ -146,15 +155,6 @@ class IceliteTable:
         for _ in range(max_retries):
             parent = self._max_committed_id()
             sid = (parent or 0) + 1
-            # MOR delete entries are part of table state: appends
-            # INHERIT the parent's list (appended files are in no
-            # entry's applies_to, so they're unaffected); rewrites pass
-            # delete_files_for to clear or extend it explicitly.
-            parent_snap = self.snapshot(parent) if parent is not None else None
-            if delete_files_for is not None:
-                deletes = delete_files_for(parent_snap)
-            else:
-                deletes = list((parent_snap or {}).get("delete_files", []))
             manifest = {
                 "snapshot_id": sid,
                 "parent_id": parent,
@@ -162,8 +162,6 @@ class IceliteTable:
                 "files": entries_for_parent(parent),
                 "props": props,
             }
-            if deletes:
-                manifest["delete_files"] = deletes
             final = os.path.join(self.meta_dir, f"snap-{sid}.json")
             tmp = final + f".tmp-{uuid.uuid4().hex[:8]}"
             with open(tmp, "w") as fh:
@@ -225,17 +223,16 @@ class IceliteTable:
                      stats_cols: tuple[str, ...] = ()) -> list[dict]:
         out = []
         for f in files:
+            # one footer read per file gives the row count, the column
+            # signature (read() plans additive schema evolution from
+            # the MANIFEST — the Iceberg model: schema lives in table
+            # metadata, not in 10^5 file footers) and the stats
+            md = pq.ParquetFile(f).metadata
             entry = {"path": os.path.relpath(os.path.abspath(f), self.path),
-                     "rows": _parquet_rows(f),
-                     # column signature from the footer (already open
-                     # for the row count): read(merge_schema=True) then
-                     # plans additive schema evolution from the
-                     # MANIFEST — zero footer reads at scan time, the
-                     # Iceberg model (schema lives in table metadata,
-                     # not in 10^5 file footers)
-                     "schema": _parquet_column_names(f)}
+                     "rows": md.num_rows,
+                     "schema": md.schema.to_arrow_schema().names}
             if stats_cols:
-                stats = _parquet_column_stats(f, stats_cols)
+                stats = _column_stats(md, stats_cols)
                 if stats:
                     entry["stats"] = stats
             out.append(entry)
@@ -288,11 +285,8 @@ class IceliteTable:
                     f"was read; committing would drop the concurrent "
                     f"commit's files — re-read and retry the rewrite")
             return new_entries
-        # a rewrite reads THROUGH pending MOR deletes (self.read applies
-        # them), so the result snapshot clears the delete list
         return self._commit(entries, {"operation": "replace",
-                                      **(props or {})},
-                            delete_files_for=lambda s: [])
+                                      **(props or {})})
 
     def expire_head(self) -> int | None:
         """Roll CURRENT back to the head snapshot's parent (crash
@@ -343,129 +337,6 @@ class IceliteTable:
                                    stats_cols=stats_cols,
                                    validate_from=src or 0)
 
-    def delete_where(self, spark, predicate, stats_hint: dict | None = None,
-                     stats_cols: tuple[str, ...] = ()) -> int:
-        """Row-level DELETE as copy-on-write (Iceberg's COW
-        ``DELETE FROM ... WHERE``): rewrite ONLY the data files that
-        may contain matching rows, carry every other file into the new
-        snapshot untouched (stats and all), and validate at commit time
-        that the head didn't move — a concurrent append aborts the
-        delete (CommitConflictError) instead of being silently dropped.
-
-        History is preserved: the pre-delete snapshot still reads the
-        deleted rows (time travel), so a GDPR-style erasure completes
-        only when expire_snapshots + remove_orphan_files reclaim the
-        rewritten files — retention policy decides when.
-
-        ``predicate`` is a Column or SQL string; rows where it is TRUE
-        are deleted, rows where it is NULL are KEPT (SQL DELETE
-        semantics — ``~pred`` alone would wrongly drop null rows).
-        ``stats_hint`` = {col: (lo, hi)}: files whose manifest min/max
-        cannot intersect the range are provably untouched and are
-        neither scanned nor rewritten — at 100 TB this is the
-        difference between rewriting one day's partition and rewriting
-        the table. Files without stats are conservatively rewritten.
-        Returns the new snapshot id (or the current one unchanged when
-        every file was provably untouched).
-        """
-        from pyspark.sql import functions as F
-
-        src = self.current_snapshot_id()
-        snap = self.snapshot(src)
-        if snap is None:
-            raise ValueError(
-                f"icelite table {self.path}: nothing to delete from")
-        if snap.get("delete_files"):
-            # the COW path scans touched data files RAW (bypassing the
-            # MOR anti-join), so rewriting under pending MOR deletes
-            # would resurrect hidden rows in the rewritten files
-            raise ValueError(
-                f"icelite table {self.path} has pending merge-on-read "
-                f"deletes; compact() first to materialize them, then "
-                f"delete_where")
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        touched, kept = [], []
-        for e in snap["files"]:
-            may_match = True
-            for col, (lo, hi) in (stats_hint or {}).items():
-                st = e.get("stats", {}).get(col)
-                if st is not None and (st[1] < lo or st[0] > hi):
-                    may_match = False
-                    break
-            (touched if may_match else kept).append(e)
-        if not touched:
-            return src
-        df = spark.read.parquet(
-            *[os.path.join(self.path, e["path"]) for e in touched])
-        remaining = df.filter(~F.coalesce(pred, F.lit(False)))
-        out_dir = self.new_commit_dir(f"delete-{uuid.uuid4().hex[:8]}")
-        new_entries = self._entries_for(
-            write_dataframe_files(remaining, out_dir), stats_cols)
-        kept_entries = list(kept)
-
-        def entries(parent):
-            if (parent or 0) != (src or 0):
-                raise CommitConflictError(
-                    f"icelite delete on {self.path}: table advanced from "
-                    f"snapshot {src} to {parent} during the rewrite — "
-                    f"re-read and retry the delete")
-            return kept_entries + new_entries
-        return self._commit(entries, {
-            "operation": "delete", "deleted_from": src,
-            "files_rewritten": len(touched), "files_kept": len(kept)})
-
-    def delete_where_mor(self, spark, predicate,
-                         key_cols: tuple[str, ...]) -> int:
-        """Row-level DELETE as MERGE-ON-READ (Iceberg's equality-delete
-        files): instead of rewriting data files (delete_where's COW),
-        write a small DELETE FILE holding the matching keys and record
-        it in the manifest; readers anti-join it at scan time. This is
-        the right cost model for frequent small deletes at 100 TB —
-        O(deleted keys) written per delete instead of O(touched files)
-        — at the price of read-time work, which compact() later
-        materializes away (its rewrite reads through the deletes and
-        commits clean files with no delete entries).
-
-        Each delete entry records ``applies_to`` — the data files
-        present when the delete committed — mirroring Iceberg's
-        sequence-number rule: a row appended AFTER the delete with a
-        previously-deleted key is NOT hidden (read() anti-joins only
-        the applies_to subset). Returns the new snapshot id (a
-        metadata+delete-file commit; data files unchanged).
-        """
-        from pyspark.sql import functions as F
-
-        src = self.current_snapshot_id()
-        snap = self.snapshot(src)
-        if snap is None:
-            raise ValueError(
-                f"icelite table {self.path}: nothing to delete from")
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        keys = (self.read(spark, snapshot_id=src)
-                .filter(F.coalesce(pred, F.lit(False)))
-                .select(*key_cols).distinct())
-        out_dir = self.new_commit_dir(f"mordelete-{uuid.uuid4().hex[:8]}")
-        files = write_dataframe_files(keys.coalesce(1), out_dir)
-        del_entry = {
-            "path": os.path.relpath(os.path.abspath(files[0]), self.path),
-            "rows": _parquet_rows(files[0]),
-            "key_cols": list(key_cols),
-            "applies_to": [e["path"] for e in snap["files"]],
-        }
-
-        def entries(parent):
-            if (parent or 0) != (src or 0):
-                raise CommitConflictError(
-                    f"icelite MOR delete on {self.path}: table advanced "
-                    f"from snapshot {src} to {parent} during key "
-                    f"computation — re-read and retry")
-            return list(snap["files"])
-        return self._commit(
-            entries, {"operation": "delete_mor", "deleted_from": src},
-            delete_files_for=lambda s: (list((s or {}).get("delete_files",
-                                                           []))
-                                        + [del_entry]))
-
     def compact(self, spark, target_file_bytes: int = 128 << 20,
                 derive: dict | None = None,
                 sort_by: tuple[str, ...] = (),
@@ -504,30 +375,6 @@ class IceliteTable:
             "compaction_of": src,
             "files_before": len(files), "files_after": len(new_files)},
             stats_cols=stats_cols, validate_from=src or 0)
-
-    def rollback(self, snapshot_id: int) -> int:
-        """Roll the table back to an earlier snapshot (Iceberg's
-        rollback_to_snapshot): CURRENT moves to ``snapshot_id`` and
-        every LATER manifest is expired (renamed ``*.expired-*``,
-        audit-kept). Expiring the later manifests is what makes the
-        rollback durable in this commit model — _commit rebases losers
-        off the max COMMITTED manifest, so a still-live newer manifest
-        would silently re-win the next optimistic commit race and undo
-        the rollback. Data files stay on disk until
-        remove_orphan_files(); the rolled-back state is byte-identical
-        to the original snapshot. Returns ``snapshot_id``.
-        """
-        target = os.path.join(self.meta_dir, f"snap-{snapshot_id}.json")
-        if not os.path.exists(target):
-            raise ValueError(f"no snapshot {snapshot_id} to roll back to")
-        for s in self.snapshots():
-            sid = s["snapshot_id"]
-            if sid > snapshot_id:
-                m = os.path.join(self.meta_dir, f"snap-{sid}.json")
-                os.rename(m, m + f".expired-{uuid.uuid4().hex[:8]}")
-        self._atomic_write(os.path.join(self.meta_dir, "CURRENT"),
-                           f"snap-{snapshot_id}.json")
-        return snapshot_id
 
     # -- named refs (tags / publish pointers) ----------------------------
 
@@ -615,8 +462,6 @@ class IceliteTable:
         for s in self.snapshots():
             for f in s["files"]:
                 live.add(os.path.normpath(os.path.join(self.path, f["path"])))
-            for f in s.get("delete_files", []):   # MOR delete files are live
-                live.add(os.path.normpath(os.path.join(self.path, f["path"])))
         doomed = []
         for root, _dirs, files in os.walk(self.data_dir):
             for n in files:
@@ -634,31 +479,12 @@ class IceliteTable:
 
     # -- read ------------------------------------------------------------
 
-    def snapshot_id_as_of(self, ts: float) -> int:
-        """Resolve a unix timestamp to the snapshot current AT that
-        time — the latest snapshot with committed_at <= ts (Iceberg's
-        ``FOR SYSTEM_TIME AS OF`` / ``AS OF TIMESTAMP`` resolution).
-        Raises ValueError when the table has no snapshot that old.
-        """
-        best = None
-        for s in self.snapshots():
-            if s.get("committed_at", float("inf")) <= ts:
-                if best is None or s["snapshot_id"] > best:
-                    best = s["snapshot_id"]
-        if best is None:
-            raise ValueError(
-                f"icelite table {self.path}: no snapshot committed at or "
-                f"before ts={ts} (oldest retained snapshot is newer)")
-        return best
-
     def read(self, spark, snapshot_id: int | None = None,
-             path_filter: str | None = None, merge_schema: bool = False,
-             stats_filter: dict | None = None, as_of_ts: float | None = None,
-             ref: str | None = None):
-        """Snapshot-isolated scan (time travel when snapshot_id,
-        as_of_ts, or a named ``ref`` is given; the three selectors are
-        mutually exclusive — as_of_ts resolves via snapshot_id_as_of,
-        ref via ref_snapshot_id).
+             path_filter: str | None = None,
+             stats_filter: dict | None = None, ref: str | None = None):
+        """Snapshot-isolated scan (time travel when ``snapshot_id`` or a
+        named ``ref`` is given; the two selectors are mutually
+        exclusive — ref resolves via ref_snapshot_id).
 
         ``path_filter`` prunes files whose relative path does not
         contain the given substring (e.g. "_day=2024-01-01/") BEFORE any
@@ -673,25 +499,20 @@ class IceliteTable:
         still applies the real predicate; parquet row-group stats
         prune again inside each file Spark does scan).
 
-        ``merge_schema=True`` supports additive schema evolution: a
+        Additive schema evolution is planned from the manifest: a
         snapshot whose commits carry different (column-added) schemas
         reads as the union schema, older files null-filling the new
-        columns — Iceberg's add-column semantics. Planned from the
-        MANIFEST when the entries carry column signatures (recorded at
-        commit time, so the scan does zero footer reads — the Iceberg
-        model at 10^5-file manifests); falls back to parquet
-        mergeSchema for pre-signature manifests and for merge-on-read
-        snapshots. Off by default.
+        columns — Iceberg's add-column semantics (see _scan).
         """
-        if sum(x is not None for x in (snapshot_id, as_of_ts, ref)) > 1:
-            raise ValueError(
-                "pass at most one of snapshot_id / as_of_ts / ref")
-        if as_of_ts is not None:
-            snapshot_id = self.snapshot_id_as_of(as_of_ts)
+        if snapshot_id is not None and ref is not None:
+            raise ValueError("pass at most one of snapshot_id / ref")
         if ref is not None:
             snapshot_id = self.ref_snapshot_id(ref)
         snap = self.snapshot(snapshot_id)
         all_entries = snap["files"] if snap is not None else []
+        if not all_entries:
+            raise ValueError(f"icelite table {self.path} has no data "
+                             f"files in this snapshot")
         entries = all_entries
         if path_filter is not None:
             entries = [e for e in entries if path_filter in e["path"]]
@@ -702,71 +523,7 @@ class IceliteTable:
                     if col not in e.get("stats", {})
                     or not (e["stats"][col][1] < lo or e["stats"][col][0] > hi)
                 ]
-        files = [os.path.join(self.path, e["path"]) for e in entries]
-        if not files:
-            if not all_entries:
-                raise ValueError(f"icelite table {self.path} has no data "
-                                 f"files in this snapshot")
-            # pruning-to-zero is a CORRECT outcome (a range holding no
-            # data), not an error: return an empty frame with the
-            # table's schema (from one unpruned file's footer)
-            from .queries import parquet_schema
-            return spark.createDataFrame([], parquet_schema(
-                spark, os.path.join(self.path, all_entries[0]["path"])))
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        delete_files = (snap or {}).get("delete_files", [])
-        if not delete_files:
-            if merge_schema and all("schema" in e for e in entries):
-                # manifest-planned evolution: group files by their
-                # recorded column signature (no footer I/O here — the
-                # signatures were captured at commit time), scan each
-                # homogeneous group without mergeSchema, and null-fill
-                # via unionByName. First-seen (commit) order keeps
-                # added columns appended, Iceberg's add-column rule.
-                groups: dict[tuple, list[str]] = {}
-                for e in entries:
-                    groups.setdefault(tuple(e["schema"]), []).append(
-                        os.path.join(self.path, e["path"]))
-                if len(groups) == 1:
-                    return spark.read.parquet(*files)
-                dfs = [spark.read.parquet(*g) for g in groups.values()]
-                out = dfs[0]
-                for d in dfs[1:]:
-                    out = out.unionByName(d, allowMissingColumns=True)
-                return out
-            return reader.parquet(*files)
-        # merge-on-read: anti-join each file group against the delete
-        # entries that apply to it. Files are grouped by the SET of
-        # delete entries covering them (an entry's applies_to is the
-        # data-file list at delete time — Iceberg's sequence-number
-        # rule: later appends are unaffected), so a re-appended key is
-        # visible while the original stays hidden. Delete key sets are
-        # O(deleted rows) and broadcast; compact() materializes all of
-        # this away.
-        from collections import defaultdict
-        from pyspark.sql import functions as F
-
-        sig_groups: dict = defaultdict(list)
-        for e in entries:
-            sig = frozenset(i for i, de in enumerate(delete_files)
-                            if e["path"] in set(de["applies_to"]))
-            sig_groups[sig].append(os.path.join(self.path, e["path"]))
-        parts = []
-        for sig, group_files in sig_groups.items():
-            df = reader.parquet(*group_files)
-            for i in sorted(sig):
-                de = delete_files[i]
-                keys = spark.read.parquet(
-                    os.path.join(self.path, de["path"]))
-                df = df.join(F.broadcast(keys), on=list(de["key_cols"]),
-                             how="left_anti")
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._scan(spark, entries, all_entries[0])
 
     def incremental_read(self, spark, from_snapshot_id: int,
                          to_snapshot_id: int | None = None):
@@ -776,63 +533,55 @@ class IceliteTable:
         (``start-snapshot-id``/``end-snapshot-id``), the primitive CDC
         consumers and incremental ETL build on. Planned purely from
         manifests: the file set of ``to`` minus the file set of
-        ``from``; zero data files are opened for planning.
+        ``from``, scanned like read() (see _scan).
 
         Append-only contract, checked not assumed: if the range
         contains a replace/compaction (a ``from`` file missing from
-        ``to``) or merge-on-read deletes, a row-level diff is not
-        expressible as a file-set difference and this raises — the
-        Iceberg behavior for non-append snapshots in an incremental
-        scan. Callers handle those snapshots via a full-snapshot
-        refresh instead."""
+        ``to``), a row-level diff is not expressible as a file-set
+        difference and this raises — the Iceberg behavior for
+        non-append snapshots in an incremental scan. Callers handle
+        those snapshots via a full-snapshot refresh instead."""
         from_snap = self.snapshot(from_snapshot_id)
         to_snap = self.snapshot(to_snapshot_id)
         if from_snap is None or to_snap is None:
             raise ValueError("incremental_read: unknown snapshot id")
         if to_snap["snapshot_id"] < from_snap["snapshot_id"]:
             raise ValueError("incremental_read: to < from")
-        if to_snap.get("delete_files"):
-            raise ValueError(
-                "incremental_read: range contains merge-on-read deletes; "
-                "not an append-only range")
         from_paths = {e["path"] for e in from_snap["files"]}
-        to_paths = {e["path"] for e in to_snap["files"]}
-        if not from_paths <= to_paths:
+        if not from_paths <= {e["path"] for e in to_snap["files"]}:
             raise ValueError(
                 "incremental_read: range contains a replace/compaction; "
                 "not an append-only range")
-        added = sorted(to_paths - from_paths)
-        if not added:
-            from .queries import parquet_schema
+        added = [e for e in to_snap["files"] if e["path"] not in from_paths]
+        return self._scan(spark, added, to_snap["files"][0])
+
+    def _scan(self, spark, entries: list[dict], table_entry: dict):
+        """Scan manifest entries, planned from their recorded column
+        signatures with no footer read per file: files are grouped by
+        signature, each homogeneous group is one parquet scan typed by
+        its first file's footer (so building the frame runs no
+        schema-inference job), and the groups are null-filled together
+        with unionByName. First-seen (commit) order keeps added columns
+        appended, Iceberg's add-column rule. No entries is a CORRECT
+        outcome (pruning to a range that holds no data): an empty frame
+        typed by ``table_entry``'s footer."""
+        if not entries:
             return spark.createDataFrame([], parquet_schema(
-                spark, os.path.join(self.path, to_snap["files"][0]["path"])))
-        return spark.read.parquet(
-            *[os.path.join(self.path, p) for p in added])
+                spark, os.path.join(self.path, table_entry["path"])))
+        groups: dict[tuple, list[str]] = {}
+        for e in entries:
+            groups.setdefault(tuple(e["schema"]), []).append(
+                os.path.join(self.path, e["path"]))
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                      [read_parquet(spark, *g) for g in groups.values()])
 
 
-def _parquet_rows(path: str) -> int:
-    import pyarrow.parquet as pq
-    return pq.ParquetFile(path).metadata.num_rows
-
-
-def _parquet_column_names(path: str) -> list[str]:
-    """Top-level column names from the parquet footer (schema
-    signature for manifest-planned schema evolution)."""
-    import pyarrow.parquet as pq
-    return [f.name for f in pq.ParquetFile(path).schema_arrow]
-
-
-def _parquet_column_stats(path: str, cols: tuple[str, ...]) -> dict:
+def _column_stats(md, cols: tuple[str, ...]) -> dict:
     """Per-file [min, max] for the requested columns, aggregated over
-    row groups from the parquet footer (no data read). Only
-    JSON-representable stats are kept (numbers, strings; timestamps
-    via isoformat) — anything else is silently omitted, and readers
-    treat missing stats as "keep the file"."""
-    import datetime
-
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
+    the row groups of the parquet footer metadata ``md`` (no data
+    read). Only JSON-representable stats are kept (numbers, strings;
+    timestamps via isoformat) — anything else is silently omitted, and
+    readers treat missing stats as "keep the file"."""
     agg: dict[str, list] = {}
     invalid: set[str] = set()  # any row group without stats voids the column
     for rg in range(md.num_row_groups):
@@ -863,6 +612,63 @@ def _parquet_column_stats(path: str, cols: tuple[str, ...]) -> dict:
             else:
                 agg[name] = [lo, hi]
     return {k: v for k, v in agg.items() if k not in invalid}
+
+
+#: footer key under which Spark's parquet writer stores the row schema
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _as_nullable(f.dataType),
+                                           True, f.metadata) for f in dt])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType),
+                         _as_nullable(dt.valueType), True)
+    return dt
+
+
+def parquet_schema(spark, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read on the driver
+    from one parquet footer, so it runs no Spark job (schema inference
+    runs a one-task job per read).
+
+    Like Spark without ``mergeSchema``, it reads the first data file in
+    path order when ``path`` is a directory, skipping ``_``/``.`` names;
+    takes the Spark schema a Spark writer stored in the footer (which
+    keeps INT96 columns ``timestamp`` and written ``timestamp_ntz``
+    columns ``timestamp_ntz``), else converts the Arrow schema, reading
+    unzoned timestamps as ``timestamp_ntz`` only under the session's
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``; and makes every
+    field nullable, as file sources do."""
+    if "://" not in path:
+        path = os.path.abspath(path)
+    fs, p = pafs.FileSystem.from_uri(path)
+    if fs.get_file_info(p).type == pafs.FileType.Directory:
+        p = min(i.path for i in fs.get_file_info(pafs.FileSelector(
+                    p, recursive=True))
+                if i.type == pafs.FileType.File
+                and not any(part.startswith(("_", "."))
+                            for part in i.path[len(p):].split("/")))
+    schema = pq.read_schema(p, filesystem=fs)
+    stored = (schema.metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored is not None:
+        dt = T.StructType.fromJson(json.loads(stored))
+    else:
+        ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+        dt = from_arrow_schema(schema,
+                               prefer_timestamp_ntz=ntz.lower() == "true")
+    return _as_nullable(dt)
+
+
+def read_parquet(spark, *paths: str):
+    """``spark.read.parquet(*paths)`` typed by the first path's footer
+    (``parquet_schema``), so building the frame runs no Spark job. For
+    files of one column signature that is the schema Spark would
+    infer."""
+    return spark.read.schema(parquet_schema(spark, paths[0])).parquet(*paths)
 
 
 def write_dataframe_files(df, out_dir: str,

@@ -17,14 +17,14 @@ shuffles are, what changes at 100 TB.
 
 from __future__ import annotations
 
-import json
 import os
 
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql import Window as W
-from pyspark.sql.pandas.types import from_arrow_schema
+
+from .icelite import read_parquet
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -41,57 +41,7 @@ def q(name: str, sql: str | None = None):
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{sf_dir}/{name}.parquet"
-    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
-
-
-#: footer key under which Spark's parquet writer stores the row schema
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _as_nullable(dt: T.DataType) -> T.DataType:
-    if isinstance(dt, T.StructType):
-        return T.StructType([T.StructField(f.name, _as_nullable(f.dataType),
-                                           True, f.metadata) for f in dt])
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_as_nullable(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(_as_nullable(dt.keyType),
-                         _as_nullable(dt.valueType), True)
-    return dt
-
-
-def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
-    """The schema ``spark.read.parquet(path)`` infers, read on the driver
-    from one parquet footer, so it runs no Spark job (schema inference
-    runs a one-task job per read).
-
-    Like Spark without ``mergeSchema``, it reads the first data file in
-    path order when ``path`` is a directory, skipping ``_``/``.`` names;
-    takes the Spark schema a Spark writer stored in the footer (which
-    keeps INT96 columns ``timestamp`` and written ``timestamp_ntz``
-    columns ``timestamp_ntz``), else converts the Arrow schema, reading
-    unzoned timestamps as ``timestamp_ntz`` only under the session's
-    ``spark.sql.parquet.inferTimestampNTZ.enabled``; and makes every
-    field nullable, as file sources do."""
-    if "://" not in path:
-        path = os.path.abspath(path)
-    fs, p = pafs.FileSystem.from_uri(path)
-    if fs.get_file_info(p).type == pafs.FileType.Directory:
-        p = min(i.path for i in fs.get_file_info(pafs.FileSelector(
-                    p, recursive=True))
-                if i.type == pafs.FileType.File
-                and not any(part.startswith(("_", "."))
-                            for part in i.path[len(p):].split("/")))
-    schema = pq.read_schema(p, filesystem=fs)
-    stored = (schema.metadata or {}).get(_SPARK_ROW_METADATA)
-    if stored is not None:
-        dt = T.StructType.fromJson(json.loads(stored))
-    else:
-        ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
-        dt = from_arrow_schema(schema,
-                               prefer_timestamp_ntz=ntz.lower() == "true")
-    return _as_nullable(dt)
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def widen(spark: SparkSession, df: DataFrame) -> DataFrame:

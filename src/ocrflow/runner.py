@@ -29,7 +29,7 @@ import uuid
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import SparkSession, functions as F
 
-from .icelite import IceliteTable, write_dataframe_files
+from .icelite import IceliteTable, read_parquet, write_dataframe_files
 from .pipeline import DEFAULT_SALT_BUCKETS, extract_df
 
 #: lineage rows as run_extract builds them; a ``ts`` timestamp column
@@ -150,7 +150,7 @@ def run_extract(spark: SparkSession, input_path: str, out_table_path: str,
                 "files_processed": 0, "rows_out": 0, "skipped": len(done)}
 
     acc = spark.sparkContext.accumulator([], _ListAccum())
-    df = (spark.read.parquet(*pending)
+    df = (read_parquet(spark, *pending)
           .withColumn("_input_file", F.input_file_name()))
     extracted = extract_df(spark, df, partitions=partitions,
                            salt_buckets=salt_buckets,

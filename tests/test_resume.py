@@ -359,9 +359,10 @@ def test_concurrent_appenders_never_lose_updates(spark, tmp_path):
 
 
 def test_schema_evolution_additive_column(spark, tmp_path):
-    """Additive schema evolution: commit 2 adds a column; merge_schema
-    reads see the union schema with nulls for the old files, and
-    time travel to snapshot 1 still sees the old schema."""
+    """Additive schema evolution: commit 2 adds a column; reads see
+    the union schema with nulls for the old files, time travel to
+    snapshot 1 still sees the old schema, and compaction keeps the
+    added column."""
     from pyspark.sql import functions as F
     tbl = IceliteTable(str(tmp_path / "tbl"))
     f1 = write_dataframe_files(spark.range(5).toDF("id"),
@@ -371,12 +372,15 @@ def test_schema_evolution_additive_column(spark, tmp_path):
     f2 = write_dataframe_files(evolved, tbl.new_commit_dir("c2"))
     tbl.commit_append(f2)
 
-    merged = tbl.read(spark, merge_schema=True)
+    merged = tbl.read(spark)
     assert set(merged.columns) == {"id", "score"}
     rows = {r["id"]: r["score"] for r in merged.collect()}
     assert len(rows) == 8
     assert rows[1] is None and rows[6] == 0.5   # old files null-fill
     assert set(tbl.read(spark, snapshot_id=1).columns) == {"id"}
+
+    tbl.compact(spark)
+    assert {r["id"]: r["score"] for r in tbl.read(spark).collect()} == rows
 
 
 def test_expire_and_gc_reclaim_precompaction_files(spark, tmp_path):
@@ -447,90 +451,7 @@ def test_run_extract_writes_flat_layout(spark, input_dir, tmp_path):
     assert tbl.read(spark).count() == 300
 
 
-# -- round 3: delete_where, timestamp travel, validated rewrites ----------
-
-def test_delete_where_cow_rewrites_only_touched_files(spark, tmp_path):
-    """Row-level DELETE (COW): only files whose stats may contain
-    matches are rewritten; untouched entries carry over verbatim, the
-    pre-delete snapshot still time-travels to the deleted rows, and GC
-    after expiry reclaims the rewritten file."""
-    from ocrflow.icelite import IceliteTable
-    tbl = IceliteTable(str(tmp_path / "tbl"))
-    for i in range(3):
-        f = write_dataframe_files(
-            spark.range(i * 100, i * 100 + 50).toDF("id").coalesce(1),
-            tbl.new_commit_dir(f"c{i}"))
-        tbl.commit_append(f, stats_cols=("id",))
-    pre = tbl.current_snapshot_id()
-    untouched_before = {e["path"] for e in tbl.snapshot(pre)["files"]
-                        if e["stats"]["id"][0] >= 100}
-
-    sid = tbl.delete_where(spark, "id BETWEEN 20 AND 29",
-                           stats_hint={"id": (20, 29)},
-                           stats_cols=("id",))
-    snap = tbl.snapshot(sid)
-    assert snap["props"]["files_rewritten"] == 1
-    assert snap["props"]["files_kept"] == 2
-    # untouched entries carried over exactly (same paths, stats intact)
-    assert untouched_before <= {e["path"] for e in snap["files"]}
-    got = {r["id"] for r in tbl.read(spark).collect()}
-    assert got == ({*range(0, 20), *range(30, 50),
-                    *range(100, 150), *range(200, 250)})
-    # history preserved: pre-delete snapshot still reads the rows
-    old = {r["id"] for r in tbl.read(spark, snapshot_id=pre).collect()}
-    assert {*range(20, 30)} <= old
-    # erasure completes via expiry + GC
-    tbl.expire_snapshots(keep_last=1)
-    removed = tbl.remove_orphan_files()
-    assert any("/c0/" in p for p in removed)      # rewritten source file gone
-    assert {r["id"] for r in tbl.read(spark).collect()} == got
-
-
-def test_delete_where_null_predicate_keeps_nulls(spark, tmp_path):
-    """SQL DELETE semantics: rows where the predicate is NULL are
-    kept, not deleted."""
-    from pyspark.sql import functions as F
-    from ocrflow.icelite import IceliteTable
-    tbl = IceliteTable(str(tmp_path / "tbl"))
-    df = spark.createDataFrame(
-        [(1, 5), (2, None), (3, 50)], "id int, v int")
-    tbl.commit_append(write_dataframe_files(df, tbl.new_commit_dir("c0")))
-    tbl.delete_where(spark, F.col("v") > 10)
-    got = {r["id"] for r in tbl.read(spark).collect()}
-    assert got == {1, 2}                           # NULL row kept
-
-
-def test_delete_where_noop_when_stats_prove_untouched(spark, tmp_path):
-    from ocrflow.icelite import IceliteTable
-    tbl = IceliteTable(str(tmp_path / "tbl"))
-    f = write_dataframe_files(spark.range(0, 50).toDF("id").coalesce(1),
-                              tbl.new_commit_dir("c0"))
-    tbl.commit_append(f, stats_cols=("id",))
-    before = tbl.current_snapshot_id()
-    sid = tbl.delete_where(spark, "id BETWEEN 900 AND 999",
-                           stats_hint={"id": (900, 999)})
-    assert sid == before                           # no new snapshot
-
-
-def test_read_as_of_timestamp(spark, tmp_path):
-    from ocrflow.icelite import IceliteTable
-    tbl = IceliteTable(str(tmp_path / "tbl"))
-    import pytest as _pytest
-    tbl.commit_append(write_dataframe_files(
-        spark.range(0, 10).toDF("id"), tbl.new_commit_dir("c0")))
-    t1 = tbl.snapshot()["committed_at"]
-    tbl.commit_append(write_dataframe_files(
-        spark.range(10, 20).toDF("id"), tbl.new_commit_dir("c1")))
-    t2 = tbl.snapshot()["committed_at"]
-    # at t1 (inclusive): only the first commit
-    assert tbl.read(spark, as_of_ts=t1).count() == 10
-    assert tbl.read(spark, as_of_ts=(t1 + t2) / 2).count() == 10
-    assert tbl.read(spark, as_of_ts=t2 + 1).count() == 20
-    with _pytest.raises(ValueError):
-        tbl.read(spark, as_of_ts=t1 - 1)           # older than the table
-    with _pytest.raises(ValueError):
-        tbl.read(spark, snapshot_id=1, as_of_ts=t1)  # mutually exclusive
-
+# -- round 3: validated rewrites -----------------------------------------
 
 def test_replace_aborts_on_concurrent_append(spark, tmp_path):
     """commit_replace(validate_from=...) must NOT drop a concurrent
@@ -551,28 +472,6 @@ def test_replace_aborts_on_concurrent_append(spark, tmp_path):
         tbl.commit_replace(rewrite, validate_from=src)
     got = {r["id"] for r in tbl.read(spark).collect()}
     assert {*range(100, 110)} <= got               # append not lost
-
-
-def test_delete_where_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):
-    import pytest as _pytest
-    from ocrflow import icelite as I
-    tbl = I.IceliteTable(str(tmp_path / "tbl"))
-    tbl.commit_append(write_dataframe_files(
-        spark.range(0, 10).toDF("id"), tbl.new_commit_dir("c0")))
-
-    orig = I.write_dataframe_files
-
-    def racy_write(df, out_dir, partition_by=()):
-        files = orig(df, out_dir, partition_by)
-        # another writer lands between the rewrite and the commit
-        tbl.commit_append(orig(spark.range(50, 60).toDF("id"),
-                               tbl.new_commit_dir("race")))
-        return files
-    monkeypatch.setattr(I, "write_dataframe_files", racy_write)
-    with _pytest.raises(I.CommitConflictError):
-        tbl.delete_where(spark, "id < 5")
-    got = {r["id"] for r in tbl.read(spark).collect()}
-    assert {*range(50, 60)} <= got and {*range(0, 10)} <= got
 
 
 def test_read_pruned_to_zero_returns_empty_with_schema(spark, tmp_path):
@@ -606,7 +505,8 @@ def test_loser_rebases_onto_unpointed_manifest(spark, tmp_path):
     # simulate the claim-but-not-yet-pointed window by hand
     manifest = {"snapshot_id": 1, "parent_id": None, "committed_at": 0.0,
                 "files": [{"path": os.path.relpath(p, tbl.path),
-                           "rows": 10} for p in f1], "props": {}}
+                           "rows": 10, "schema": ["id"]} for p in f1],
+                "props": {}}
     with open(os.path.join(tbl.meta_dir, "snap-1.json"), "w") as fh:
         _json.dump(manifest, fh)
     assert tbl.current_snapshot_id() is None       # pointer lags
@@ -618,90 +518,11 @@ def test_loser_rebases_onto_unpointed_manifest(spark, tmp_path):
     assert tbl.read(spark).count() == 20           # both writers' rows live
 
 
-# -- round 3b: merge-on-read deletes --------------------------------------
-
-def test_mor_delete_hides_rows_and_time_travels(spark, tmp_path):
-    from ocrflow.icelite import IceliteTable
-    tbl = IceliteTable(str(tmp_path / "tbl"))
-    tbl.commit_append(write_dataframe_files(
-        spark.range(0, 50).toDF("id").coalesce(1), tbl.new_commit_dir("c0")))
-    pre = tbl.current_snapshot_id()
-    sid = tbl.delete_where_mor(spark, "id BETWEEN 10 AND 19",
-                               key_cols=("id",))
-    # metadata-only commit: data file list unchanged
-    assert ({e["path"] for e in tbl.snapshot(sid)["files"]}
-            == {e["path"] for e in tbl.snapshot(pre)["files"]})
-    got = {r["id"] for r in tbl.read(spark).collect()}
-    assert got == {*range(0, 10), *range(20, 50)}
-    # pre-delete snapshot unaffected
-    assert len({r["id"] for r in tbl.read(spark, snapshot_id=pre).collect()}) == 50
-
-
-def test_mor_delete_append_after_resurrects_new_rows_only(spark, tmp_path):
-    """Iceberg sequence-number semantics: a key appended AFTER the
-    delete is visible; the originally-deleted row stays hidden."""
-    from ocrflow.icelite import IceliteTable
-    tbl = IceliteTable(str(tmp_path / "tbl"))
-    df = spark.createDataFrame([(1, "old"), (2, "old")], "id int, v string")
-    tbl.commit_append(write_dataframe_files(df, tbl.new_commit_dir("c0")))
-    tbl.delete_where_mor(spark, "id = 1", key_cols=("id",))
-    tbl.commit_append(write_dataframe_files(
-        spark.createDataFrame([(1, "new")], "id int, v string"),
-        tbl.new_commit_dir("c1")))
-    got = {(r["id"], r["v"]) for r in tbl.read(spark).collect()}
-    assert got == {(2, "old"), (1, "new")}    # old (1,'old') hidden
-
-
-def test_mor_delete_stacking_and_compact_materializes(spark, tmp_path):
-    from ocrflow.icelite import IceliteTable
-    tbl = IceliteTable(str(tmp_path / "tbl"))
-    tbl.commit_append(write_dataframe_files(
-        spark.range(0, 40).toDF("id").coalesce(1), tbl.new_commit_dir("c0")))
-    tbl.delete_where_mor(spark, "id < 5", key_cols=("id",))
-    tbl.delete_where_mor(spark, "id >= 35", key_cols=("id",))
-    assert len(tbl.snapshot()["delete_files"]) == 2   # stacked
-    expect = {*range(5, 35)}
-    assert {r["id"] for r in tbl.read(spark).collect()} == expect
-    # COW delete refuses to run under pending MOR deletes
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="merge-on-read"):
-        tbl.delete_where(spark, "id = 20")
-    # compact materializes: delete entries gone, rows still hidden
-    sid = tbl.compact(spark)
-    assert "delete_files" not in tbl.snapshot(sid)
-    assert {r["id"] for r in tbl.read(spark).collect()} == expect
-    # ...and now COW delete works again
-    tbl.delete_where(spark, "id = 20")
-    assert 20 not in {r["id"] for r in tbl.read(spark).collect()}
-
-
-def test_mor_delete_files_survive_gc_until_expired(spark, tmp_path):
-    from ocrflow.icelite import IceliteTable
-    tbl = IceliteTable(str(tmp_path / "tbl"))
-    tbl.commit_append(write_dataframe_files(
-        spark.range(0, 20).toDF("id").coalesce(1), tbl.new_commit_dir("c0")))
-    tbl.delete_where_mor(spark, "id = 3", key_cols=("id",))
-    removed = tbl.remove_orphan_files()
-    # only write markers swept; the delete file (and data) are LIVE
-    assert not [p for p in removed if p.endswith(".parquet")]
-    assert {r["id"] for r in tbl.read(spark).collect()} == {*range(0, 20)} - {3}
-    tbl.compact(spark)
-    tbl.expire_snapshots(keep_last=1)
-    removed = tbl.remove_orphan_files()
-    assert any("mordelete-" in p for p in removed)   # reclaimed after expiry
-    assert {r["id"] for r in tbl.read(spark).collect()} == {*range(0, 20)} - {3}
-
-
 def test_schema_evolution_manifest_planned_three_commits(spark, tmp_path):
     """Manifest-planned evolution: three commits with successively
     added columns read as the full union WITHOUT parquet mergeSchema
     (signatures come from the manifest); column order follows commit
-    order (added columns append); stripping the recorded signatures
-    from the manifest (pre-signature table) falls back to parquet
-    mergeSchema with identical results."""
-    import json as _json
-    import os as _os
-
+    order (added columns append)."""
     from pyspark.sql import functions as F
 
     tbl = IceliteTable(str(tmp_path / "tbl"))
@@ -717,23 +538,13 @@ def test_schema_evolution_manifest_planned_three_commits(spark, tmp_path):
     snap = tbl.snapshot()
     assert all("schema" in e for e in snap["files"])
 
-    merged = tbl.read(spark, merge_schema=True)
+    merged = tbl.read(spark)
     assert merged.columns == ["id", "score", "tag"]   # append order
     rows = {r["id"]: (r["score"], r["tag"]) for r in merged.collect()}
     assert len(rows) == 9
     assert rows[0] == (None, None)
     assert rows[4] == (1.5, None)
     assert rows[8] == (2.5, "x")
-
-    # pre-signature manifest → fallback path, same data
-    p = _os.path.join(tbl.meta_dir, f"snap-{snap['snapshot_id']}.json")
-    for e in snap["files"]:
-        e.pop("schema", None)
-    with open(p, "w") as fh:
-        _json.dump(snap, fh)
-    legacy = tbl.read(spark, merge_schema=True)
-    lrows = {r["id"]: (r["score"], r["tag"]) for r in legacy.collect()}
-    assert lrows == rows
 
 
 def test_zorder_compaction_prunes_2d_box(spark, tmp_path):
@@ -859,35 +670,6 @@ def test_manifest_planning_stays_cheap_at_1e5_entries(spark, tmp_path):
     print(f"manifest-1e5: file_list {t_list:.3f}s, read-plan {t_plan:.3f}s")
 
 
-def test_rollback_restores_state_and_survives_next_commit(spark, tmp_path):
-    """rollback(sid): CURRENT returns to the old snapshot, later
-    manifests are expired (else the optimistic-commit rebase would
-    silently re-win off the newer manifest), reads are byte-identical
-    to the original state, and the NEXT commit builds on the
-    rolled-back state, not the undone one."""
-    tbl = IceliteTable(str(tmp_path / "tbl"))
-    s1 = tbl.commit_append(write_dataframe_files(
-        spark.range(0, 10).toDF("id").coalesce(1), tbl.new_commit_dir("c0")))
-    tbl.commit_append(write_dataframe_files(
-        spark.range(10, 99).toDF("id").coalesce(1), tbl.new_commit_dir("bad")))
-    assert tbl.read(spark).count() == 99
-    assert tbl.rollback(s1) == s1
-    assert tbl.current_snapshot_id() == s1
-    assert {r["id"] for r in tbl.read(spark).collect()} == set(range(10))
-    # next commit forks from the rolled-back state
-    tbl.commit_append(write_dataframe_files(
-        spark.range(100, 105).toDF("id").coalesce(1),
-        tbl.new_commit_dir("c2")))
-    got = {r["id"] for r in tbl.read(spark).collect()}
-    assert got == set(range(10)) | set(range(100, 105))  # no 'bad' rows
-    # the undone data files are reclaimable
-    orphans = tbl.remove_orphan_files(dry_run=True)
-    assert orphans, "undone commit's files should be orphaned"
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        tbl.rollback(999)
-
-
 def test_partition_evolution_daily_to_monthly_layouts(spark, tmp_path):
     """PARTITION EVOLUTION (Iceberg's spec-evolution semantics): era-1
     commits land hive-partitioned by DAY, era-2 commits by MONTH, in
@@ -966,9 +748,9 @@ def test_partition_evolution_daily_to_monthly_layouts(spark, tmp_path):
 
 def test_icelite_incremental_read(spark, tmp_path):
     """Incremental append scan: file-set diff between snapshots, with
-    the append-only contract enforced (replace/compaction and MOR
-    deletes in the range must raise, empty range yields an empty
-    frame with the table schema)."""
+    the append-only contract enforced (a replace/compaction in the
+    range must raise, empty range yields an empty frame with the
+    table schema)."""
     from ocrflow.icelite import IceliteTable, write_dataframe_files
 
     tbl = IceliteTable(str(tmp_path / "tbl"))
@@ -990,11 +772,6 @@ def test_icelite_incremental_read(spark, tmp_path):
     # a compaction breaks the append-only file-set contract
     tbl.compact(spark)
     with pytest.raises(ValueError, match="replace/compaction"):
-        tbl.incremental_read(spark, 1, tbl.current_snapshot_id())
-    # MOR deletes in the range are equally non-append
-    from pyspark.sql import functions as F
-    tbl.delete_where_mor(spark, F.col("id") == 7, key_cols=("id",))
-    with pytest.raises(ValueError, match="merge-on-read"):
         tbl.incremental_read(spark, 1, tbl.current_snapshot_id())
 
 
@@ -1029,24 +806,95 @@ def test_icelite_named_refs(spark, tmp_path):
 
 
 def test_empty_reads_take_the_table_schema_without_a_job(
-        spark, tmp_path, count_jobs):
-    # a read pruned to zero files and an incremental read that adds no
-    # file build their empty frame from one footer, with no Spark job;
-    # the frame's schema is the table's, nullability included
+        spark, tmp_path, input_dir, monkeypatch, count_jobs):
+    # icelite reads (one or two column signatures, incremental) and the
+    # runner's input scan type their scans from one footer per
+    # signature: building them runs no Spark job, and the schema is the
+    # one Spark infers for the same files, nullability included. A read
+    # pruned to zero files and an incremental read that adds no file
+    # build an empty frame with the table's schema
     from pyspark.sql import functions as F
+
+    from ocrflow import runner
+
     tbl = IceliteTable(str(tmp_path / "tbl"))
     df = spark.range(0, 50).select(
         "id", F.col("id").cast("string").alias("s"),
         F.lit("2020-01-01 00:00:00").cast("timestamp_ntz").alias("ts"),
         F.array("id").alias("a"))
-    tbl.commit_append(write_dataframe_files(df.coalesce(1),
-                                            tbl.new_commit_dir("c0")),
-                      stats_cols=("id",))
-    want = tbl.read(spark).schema
-    snap = tbl.current_snapshot_id()
-    for build in (lambda: tbl.read(spark, stats_filter={"id": (100, 200)}),
-                  lambda: tbl.incremental_read(spark, snap, snap)):
-        empty, jobs = count_jobs(build)
+    f1 = write_dataframe_files(df.repartition(2), tbl.new_commit_dir("c1"))
+    tbl.commit_append(f1, stats_cols=("id",))
+    f2 = write_dataframe_files(df.withColumn("score", F.lit(0.5)),
+                               tbl.new_commit_dir("c2"))
+    tbl.commit_append(f2, stats_cols=("id",))
+    first = spark.read.parquet(*f1).schema
+    both = (spark.read.parquet(*f1)
+            .unionByName(spark.read.parquet(*f2), allowMissingColumns=True))
+
+    class Stop(Exception):
+        pass
+
+    def stop(spark, df, **kw):
+        raise Stop(df)
+    monkeypatch.setattr(runner, "extract_df", stop)
+
+    def runner_scan():
+        try:
+            runner.run_extract(spark, input_dir, str(tmp_path / "out"))
+        except Stop as e:
+            return e.args[0].drop("_input_file")
+
+    inputs = runner.list_input_files(input_dir)
+    for build, want, n in (
+            (lambda: tbl.read(spark, stats_filter={"id": (100, 200)}),
+             first, 0),
+            (lambda: tbl.incremental_read(spark, 2, 2), first, 0),
+            (lambda: tbl.read(spark, snapshot_id=1), first, 50),
+            (lambda: tbl.read(spark), both.schema, 100),
+            (lambda: tbl.incremental_read(spark, 1, 2),
+             spark.read.parquet(*f2).schema, 50),
+            (runner_scan, spark.read.parquet(*inputs).schema, 300)):
+        got, jobs = count_jobs(build)
         assert jobs == 0
-        assert empty.schema == want
-        assert empty.count() == 0
+        assert got.schema == want
+        assert got.count() == n
+
+
+def test_commit_append_reads_each_footer_once(spark, tmp_path, monkeypatch):
+    # row count, column signature and stats all come from one footer
+    import pyarrow.parquet as pq
+
+    tbl = IceliteTable(str(tmp_path / "tbl"))
+    files = write_dataframe_files(spark.range(0, 30).toDF("id").repartition(3),
+                                  tbl.new_commit_dir("c0"))
+    assert len(files) == 3
+    opened = []
+    orig = pq.ParquetFile
+
+    def counting(*a, **kw):
+        opened.append(a[0])
+        return orig(*a, **kw)
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    tbl.commit_append(files, stats_cols=("id",))
+    assert sorted(opened) == files
+    entries = tbl.snapshot()["files"]
+    assert sum(e["rows"] for e in entries) == 30
+    assert all(e["schema"] == ["id"] and "id" in e["stats"] for e in entries)
+
+
+def test_commit_append_parses_parent_manifest_once(spark, tmp_path,
+                                                   monkeypatch):
+    tbl = IceliteTable(str(tmp_path / "tbl"))
+    tbl.commit_append(write_dataframe_files(spark.range(0, 5).toDF("id"),
+                                            tbl.new_commit_dir("c0")))
+    f = write_dataframe_files(spark.range(5, 9).toDF("id"),
+                              tbl.new_commit_dir("c1"))
+    parsed = []
+    orig = IceliteTable.snapshot
+
+    def counting(self, snapshot_id=None):
+        parsed.append(snapshot_id)
+        return orig(self, snapshot_id)
+    monkeypatch.setattr(IceliteTable, "snapshot", counting)
+    assert tbl.commit_append(f) == 2
+    assert parsed == [1]
