@@ -43,8 +43,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # Registration order is the driver's scoreboard: it checks the FIRST 50
 # keys. Every key in the window is oracled and proven STRING-exact vs
 # DuckDB at sf0.01 (the verify skill's sweep) before registration; the
-# full oracled set (85+ keys) is additionally gated by
-# tests/test_oracle.py every run, so keys outside the window are
+# full oracled set is additionally gated by tests/test_oracle.py every
+# run, with the sweep's string-exact comparison at sf0.001 under both
+# the tuned and a stock session, so keys outside the window are
 # locally verified, not unverified. Rotation policy (round 3, per
 # ADVICE): rotate NEWLY oracled queries into the window in place of
 # longest-driver-green extras, so external parity coverage accumulates
@@ -174,7 +175,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # external coverage >=160). All 49 r04-green keys rotate out after
 # their first external row, the precedent rotation #8 set; every
 # family they leave keeps local oracle-gate coverage (tests/
-# test_oracle.py, all 300+ keys every run) and most keep a NEWER
+# test_oracle.py, every oracled key string-exact under both sessions
+# every run) and most keep a NEWER
 # in-window representative. scd2_build is the one holdover: its r04
 # row was red (pandas-ns sentinel overflow, fixed this round — the
 # 9999-12-31 open-version date now 2200-01-01), so it stays to get a

@@ -242,20 +242,21 @@ def test_lsh_verified_finds_planted_near_dup(spark):
     assert (7, 99995) in hits and hits[(7, 99995)] >= 0.5
 
 
-def test_embedding_lsh_finds_planted_duplicate(spark):
-    # an exact copy of vec 2 must land in identical buckets in every
-    # table and survive the cosine ≥ τ re-check
+@pytest.mark.parametrize("key", ["dedup_embedding_cosine",
+                                 "dedup_embedding_lsh"])
+def test_embedding_dedup_finds_planted_duplicate(spark, key, tmp_path):
+    # an exact copy of vec 2 (same label) is the only pair at cosine ≥ τ:
+    # the label-blocked verifier finds it, and the LSH scanner must land
+    # it in identical buckets in every table and keep it on the re-check
     src = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     one = src.filter("vec_id = 2").first()
     planted = spark.createDataFrame([(99990, one["embedding"], one["label"])],
                                     src.schema)
-    tmp = tempfile.mkdtemp(prefix="ocrflow_elsh_")
-    src.unionByName(planted).write.parquet(os.path.join(tmp, "embeddings.parquet"))
-    pairs = {(r["vec_a"], r["vec_b"]): r["cosine"]
-             for r in D.QUERIES["dedup_embedding_lsh"](spark, tmp).collect()}
-    assert (2, 99990) in pairs and pairs[(2, 99990)] >= 0.9999
-    # scanner pairs agree with the exact verifier where labels block
-    assert all(a < b for a, b in pairs)
+    src.unionByName(planted).write.parquet(str(tmp_path / "embeddings.parquet"))
+    rows = D.QUERIES[key](spark, str(tmp_path)).collect()
+    assert [(r["vec_a"], r["vec_b"]) for r in rows] == [(2, 99990)]
+    if key == "dedup_embedding_lsh":
+        assert rows[0]["cosine"] >= 0.9999
 
 
 def test_text_analysis_sanity(spark):

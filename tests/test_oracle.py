@@ -1,13 +1,13 @@
 """Local pre-submit copy of the driver's DuckDB oracle check (SURVEY §5.4).
 
 Runs every QUERIES entry with an ORACLE twin at sf0.001 (fast; the
-driver uses sf0.01) and compares row count, column names, and
-order-insensitive values (floats to 1e-9 rel tol).
+driver uses sf0.01), under the tuned session and again under a stock
+one, through bench/sweep.py's oracle_mismatch: equal column names and
+equal non-empty str()-rendered, column-sorted, row-sorted rows.
 """
 
-import math
+import importlib.util
 import os
-import types
 
 import duckdb
 import pytest
@@ -19,67 +19,32 @@ from ocrflow.streaming import STREAM_QUERIES
 
 QUERIES = {**QUERIES, **STREAM_QUERIES}  # oracled stream_* keys join the gate
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("OCRFLOW_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = ("region nation customer supplier part orders lineitem "
-          "events documents embeddings").split()
+
+_spec = importlib.util.spec_from_file_location(
+    "sweep", os.path.join(REPO, "bench", "sweep.py"))
+sweep = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(sweep)
+
+#: rows-only keys empty at every scale, each with the planted-fixture
+#: test that checks its output instead
+EMPTY_ON_SF = {
+    "dedup_embedding_cosine": "tests/test_dataops.py::"
+    "test_embedding_dedup_finds_planted_duplicate[dedup_embedding_cosine]",
+    "dedup_embedding_lsh": "tests/test_dataops.py::"
+    "test_embedding_dedup_finds_planted_duplicate[dedup_embedding_lsh]",
+}
 
 
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for name in TABLES:
+    for name in sweep.TABLES:
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM "
                     f"read_parquet('{SF_DIR}/{name}.parquet')")
     yield con
     con.close()
-
-
-def _norm(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    if hasattr(v, "isoformat"):  # datetime/date
-        return v.isoformat().replace("+00:00", "")
-    return v
-
-
-def _rows_sorted(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm(r[i]) for i in idx) for r in rows]
-    return sorted(out, key=repr)
-
-
-def _close(a, b):
-    if isinstance(a, float) and isinstance(b, (float, int)):
-        return math.isclose(a, float(b), rel_tol=1e-9, abs_tol=1e-9)
-    return a == b
-
-
-def _code_names(code) -> set:
-    names = set(code.co_names)
-    for c in code.co_consts:
-        if isinstance(c, types.CodeType):
-            names |= _code_names(c)
-    return names
-
-
-def _guarded(fn, seen=frozenset()) -> bool:
-    """fn calls widen() or pin(), directly or through an ocrflow helper
-    (e.g. dataops._docs_tokenized)."""
-    names = _code_names(fn.__code__)
-    if names & {"widen", "pin"}:
-        return True
-    return any(_guarded(h, seen | {fn})
-               for h in (fn.__globals__.get(n) for n in names)
-               if isinstance(h, types.FunctionType) and h not in seen
-               and h.__module__.startswith("ocrflow"))
-
-
-#: oracled keys behind the scan-parallelism guard or a pushdown barrier
-GUARDED = sorted(k for k in ORACLE if _guarded(QUERIES[k]))
 
 
 @pytest.fixture(scope="module")
@@ -95,12 +60,8 @@ def stock(spark):
     return s
 
 
-def test_guarded_keys_found():
-    assert {"corpus_curation_e2e", "emb_quantize_int8", "decontaminate_fuzzy",
-            "str_regexp", "ann_lsh_recall"} <= set(GUARDED)
-
-
-@pytest.mark.parametrize("name", GUARDED)
+# every oracled key; the name is kept so its test ids stay stable
+@pytest.mark.parametrize("name", sorted(ORACLE))
 def test_guarded_query_matches_oracle_stock_session(stock, duck, name):
     assert stock.conf.get("spark.sql.shuffle.partitions") == "200"
     _assert_matches_oracle(stock, duck, name)
@@ -112,28 +73,9 @@ def test_query_matches_oracle(spark, duck, name):
 
 
 def _assert_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    s_rows = sdf.collect()
-    s_cols = sdf.columns
-
-    rel = duck.execute(ORACLE[name])
-    d_cols = [d[0] for d in rel.description]
-    d_rows = rel.fetchall()
-
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: column mismatch spark={sorted(s_cols)} duck={sorted(d_cols)}")
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: row count spark={len(s_rows)} duck={len(d_rows)}")
-    # the driver sweep flags empty results as issues — catch them here
-    # too (a vacuously-true oracle verifies nothing)
-    assert len(s_rows) > 0, f"{name}: empty result at {SF_DIR}"
-
-    s_sorted = _rows_sorted(s_cols, [tuple(r) for r in s_rows])
-    d_sorted = _rows_sorted(d_cols, d_rows)
-    for i, (sr, dr) in enumerate(zip(s_sorted, d_sorted)):
-        for a, b in zip(sr, dr):
-            assert _close(a, b), (
-                f"{name}: value mismatch at sorted row {i}: spark={sr} duck={dr}")
+    issue = sweep.oracle_mismatch(QUERIES[name](spark, SF_DIR),
+                                  duck.execute(ORACLE[name]))
+    assert issue is None, f"{name} at {SF_DIR}: {issue}"
 
 
 #: stopwords next to non-ASCII letters (where Java's Unicode-aware \b
@@ -156,7 +98,11 @@ def test_n_stop_matches_duckdb_next_to_non_ascii(spark, duck):
     assert got == want
 
 
-def test_rows_only_queries_run(spark):
-    for name in sorted(set(QUERIES) - set(ORACLE)):
-        df = QUERIES[name](spark, SF_DIR)
-        assert df.count() >= 0, name
+@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLE)))
+def test_rows_only_queries_run(spark, name):
+    n = QUERIES[name](spark, SF_DIR).count()
+    if name in EMPTY_ON_SF:
+        assert n == 0, (f"{name} has rows now: drop it from EMPTY_ON_SF "
+                        f"(its output is checked by {EMPTY_ON_SF[name]})")
+    else:
+        assert n > 0, f"{name}: empty result at {SF_DIR}"
