@@ -9,9 +9,15 @@ Usage:
 --sf defaults to $SPARK_GRAFT_SF_DIR, else sf0.1; --cpus to
 $SPARK_GRAFT_CPUS, else the CPUs this process may run on. Prints one
 JSON line: {"sf":..., "reps":N, "loadavg_start":[...],
-"loadavg_end":[...], "keys": {name: {"best":s, "all":[...]}}}. With
---explain, writes .explain("formatted") to OUTDIR/<key>.txt; run it
-from two checkouts to diff plans before and after a change.
+"loadavg_end":[...], "keys": {name: {"best":s, "all":[...],
+"compiles":[...]}}}. ``compiles[i]`` is the number of classes Janino
+compiled during rep i (CodegenMetrics; in local mode the driver and the
+executors share one JVM and one codegen cache). Rep 1 compiles the
+key's plan; from rep 2 on it should read 0. More than 0 there means the
+generated source changed between calls (a per-call path, uuid or seed
+inside an expression) or the working set outgrew the codegen cache.
+With --explain, writes .explain("formatted") to OUTDIR/<key>.txt; run
+it from two checkouts to diff plans before and after a change.
 """
 from __future__ import annotations
 
@@ -44,6 +50,8 @@ def main() -> None:
     spark = build_session(master=f"local[{args.cpus}]", app="isolate",
                           shuffle_partitions=max(args.cpus, 8))
     spark.sparkContext.setLogLevel("ERROR")
+    compile_timer = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                     .CodegenMetrics.METRIC_COMPILATION_TIME())
 
     out: dict = {}
     load0 = os.getloadavg()
@@ -55,13 +63,15 @@ def main() -> None:
             with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
                 f.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
-        times = []
+        times, compiles = [], []
         for _ in range(args.reps):
             spark.sparkContext.setJobDescription(f"isolate:{name}")
+            c0 = compile_timer.getCount()
             t0 = time.perf_counter()
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             times.append(round(time.perf_counter() - t0, 3))
-        out[name] = {"best": min(times), "all": times}
+            compiles.append(compile_timer.getCount() - c0)
+        out[name] = {"best": min(times), "all": times, "compiles": compiles}
     print(json.dumps({"sf": args.sf, "reps": args.reps,
                       "loadavg_start": load0, "loadavg_end": os.getloadavg(),
                       "keys": out}))

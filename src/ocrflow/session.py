@@ -107,6 +107,23 @@ def build_session(master: str | None = None, app: str = "ocrflow",
          # footer stats so icelite's manifest data-skipping works on
          # timestamp columns (test_partition_evolution relies on it)
          .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+         # Whole-stage codegen cache, a static conf: only a builder can
+         # set it. Spark's default holds 100 classes; a warm pass of
+         # perfbench's six operator_suite keys needs ~145, one of
+         # bench.py's 39 HEADLINE keys 601. Keys run in turn then evict
+         # each other, and every warm pass recompiles all of its classes
+         # with Janino. 1000 covers the HEADLINE set with headroom: warm
+         # passes compile 0 classes (CodegenMetrics), and operator_suite
+         # wall_s fell from 5.06 to 3.80 s (median of 10 pairs, 4 vCPUs).
+         .config("spark.sql.codegen.cache.maxEntries", "1000")
+         # The cache is keyed by generated source, and by default the
+         # class name embeds the codegen stage id. AQE numbers stages in
+         # the order they are planned, which follows which stage
+         # finished first, so a pipeline comes back under another id now
+         # and then and recompiles (assoc_pairs_support: 4 compiles on
+         # about one warm call in ten, each a first-call source with its
+         # id changed). Plans and dumps keep the id; class names drop it.
+         .config("spark.sql.codegen.useIdInClassName", "false")
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
          .config("spark.ui.enabled", "false")

@@ -38,3 +38,20 @@ def count_jobs(spark):
         return out, len(tracker.getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture()
+def count_compiles(spark):
+    """``count_compiles(fn)`` calls ``fn()`` and returns ``(result,
+    compiles)``, the number of classes Janino compiled meanwhile. In
+    local mode the driver and the executors share one JVM, and so one
+    codegen cache and one ``CodegenMetrics`` counter."""
+    timer = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+             .CodegenMetrics.METRIC_COMPILATION_TIME())
+
+    def run(fn):
+        before = timer.getCount()
+        out = fn()
+        return out, timer.getCount() - before
+
+    return run

@@ -14,7 +14,7 @@ import ocrflow.dataops as D
 SF_DIR = os.environ.get("OCRFLOW_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def test_minhash_lsh_finds_planted_near_dup(spark):
+def test_minhash_lsh_finds_planted_near_dup(spark, tmp_path):
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     one = src.filter("doc_id = 7").first()
     words = one["text"].split()
@@ -22,20 +22,20 @@ def test_minhash_lsh_finds_planted_near_dup(spark):
     planted = spark.createDataFrame(
         [(99991, " ".join(words), one["lang"], one["source"],
           len(one["text"]))], src.schema)
-    tmp = tempfile.mkdtemp(prefix="ocrflow_lsh_")
+    tmp = str(tmp_path)
     src.unionByName(planted).write.parquet(os.path.join(tmp, "documents.parquet"))
     pairs = {(r["doc_a"], r["doc_b"])
              for r in D.dedup_minhash_lsh(spark, tmp).collect()}
     assert (7, 99991) in pairs
 
 
-def test_exact_dedup_finds_planted_copy(spark):
+def test_exact_dedup_finds_planted_copy(spark, tmp_path):
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     one = src.filter("doc_id = 3").first()
     planted = spark.createDataFrame(
         [(88888, one["text"], one["lang"], one["source"], one["n_chars"])],
         src.schema)
-    tmp = tempfile.mkdtemp(prefix="ocrflow_dex_")
+    tmp = str(tmp_path)
     src.unionByName(planted).write.parquet(os.path.join(tmp, "documents.parquet"))
     dups = {r["keep_id"]: r["n_dups"]
             for r in D.dedup_exact(spark, tmp).collect()}
@@ -82,7 +82,7 @@ def test_connected_components_chain_and_convergence(spark):
     assert {comp[v] for v in (7, 8, 9)} == {7}
 
 
-def test_dedup_materialize_seeded_corpus(spark):
+def test_dedup_materialize_seeded_corpus(spark, tmp_path):
     # plant exact copies; the materialized corpus keeps only min-id
     # winners and every non-dup row
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -91,7 +91,7 @@ def test_dedup_materialize_seeded_corpus(spark):
         [(90001, one["text"], one["lang"], one["source"], one["n_chars"]),
          (90002, one["text"], one["lang"], one["source"], one["n_chars"])],
         src.schema)
-    tmp = tempfile.mkdtemp(prefix="ocrflow_dmat_")
+    tmp = str(tmp_path)
     src.unionByName(copies).write.parquet(os.path.join(tmp, "documents.parquet"))
     kept = {r["doc_id"] for r in D.QUERIES["dedup_materialize"](spark, tmp).collect()}
     assert 3 in kept and 90001 not in kept and 90002 not in kept
@@ -138,19 +138,18 @@ def test_lsh_cap_acts_before_gather(spark):
     assert "Join" not in plan
 
 
-def test_embedding_lsh_cap_bounds_dense_cluster(spark):
+def test_embedding_lsh_cap_bounds_dense_cluster(spark, tmp_path):
     # degenerate embedding corpus: one dense cluster (identical unit
     # vectors) of 300 + 20 distinct vectors. Uncapped this gathers a
     # 300-id array per table and emits ~300²/2 pairs; capped, the hot
     # buckets are dropped before the gather and output stays bounded.
-    import tempfile
     dim = 8
     base = [1.0] + [0.0] * (dim - 1)
     rows = [(i, base) for i in range(300)]
     rows += [(1000 + i, [0.0] * i + [1.0] + [0.0] * (dim - 1 - i))
              for i in range(1, min(20, dim))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    tmp = tempfile.mkdtemp(prefix="ocrflow_elsh_")
+    tmp = str(tmp_path)
     df.write.parquet(os.path.join(tmp, "embeddings.parquet"))
     capped = D.dedup_embedding_lsh(spark, tmp).count()
     assert capped == 0                     # hot cluster dropped entirely
@@ -190,7 +189,7 @@ def test_connected_components_random_graphs_vs_union_find(spark):
         assert got == expected, f"seed {seed}"
 
 
-def test_dedup_materialize_lsh_end_to_end(spark):
+def test_dedup_materialize_lsh_end_to_end(spark, tmp_path):
     # plant two near-identical copies of doc 7; the production path
     # keeps the original and drops both variants
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -201,7 +200,7 @@ def test_dedup_materialize_lsh_end_to_end(spark):
         [(99996, " ".join(w1), one["lang"], one["source"], one["n_chars"]),
          (99997, " ".join(w2), one["lang"], one["source"], one["n_chars"])],
         src.schema)
-    tmp = tempfile.mkdtemp(prefix="ocrflow_dml_")
+    tmp = str(tmp_path)
     src.unionByName(planted).write.parquet(os.path.join(tmp, "documents.parquet"))
     kept = {r["doc_id"]
             for r in D.QUERIES["dedup_materialize_lsh"](spark, tmp).collect()}
@@ -227,7 +226,7 @@ def test_dedup_materialize_lsh_end_to_end(spark):
     assert kept == expected
 
 
-def test_lsh_verified_finds_planted_near_dup(spark):
+def test_lsh_verified_finds_planted_near_dup(spark, tmp_path):
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     one = src.filter("doc_id = 7").first()
     words = one["text"].split()
@@ -235,7 +234,7 @@ def test_lsh_verified_finds_planted_near_dup(spark):
     planted = spark.createDataFrame(
         [(99995, " ".join(words), one["lang"], one["source"],
           len(one["text"]))], src.schema)
-    tmp = tempfile.mkdtemp(prefix="ocrflow_lshv_")
+    tmp = str(tmp_path)
     src.unionByName(planted).write.parquet(os.path.join(tmp, "documents.parquet"))
     rows = D.QUERIES["dedup_lsh_verified"](spark, tmp).collect()
     hits = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in rows}
@@ -306,7 +305,7 @@ def test_python_datasource_matches_gen_rows(spark):
     assert got == exp
 
 
-def test_mm_phash_dedup_planted_copy(spark):
+def test_mm_phash_dedup_planted_copy(spark, tmp_path):
     # two docs with identical text → identical image payloads → one
     # phash group of size ≥ 2 keeping the min asset id
     import ocrflow.multimodal as M
@@ -317,7 +316,7 @@ def test_mm_phash_dedup_planted_copy(spark):
     planted = spark.createDataFrame(
         [(96009, one["text"], one["lang"], one["source"], one["n_chars"])],
         src.schema)
-    tmp = tempfile.mkdtemp(prefix="ocrflow_phash_")
+    tmp = str(tmp_path)
     src.unionByName(planted).write.parquet(os.path.join(tmp, "documents.parquet"))
     groups = {r["keep_id"]: r["n_dups"]
               for r in M.mm_dedup_phash(spark, tmp).collect()}
@@ -426,18 +425,17 @@ def test_nextfit_pack_property():
     check()
 
 
-def test_tfidf_df_cap_bounds_hot_term_fanout(spark):
+def test_tfidf_df_cap_bounds_hot_term_fanout(spark, tmp_path):
     # degenerate corpus: 300 identical short docs → every term has
     # df=300. Uncapped, the inverted-index self-join emits 300²/2
     # cosine-1.0 pairs; with the df cap the hot terms are dropped
     # BEFORE the self-join, so candidate work stays bounded (here:
     # zero — no term survives).
-    import tempfile
     from ocrflow.dataops import tfidf_cosine_pairs
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma", 17) for i in range(300)],
         "doc_id long, text string, n_chars int")
-    tmp = tempfile.mkdtemp(prefix="ocrflow_tfidf_")
+    tmp = str(tmp_path)
     docs.write.parquet(os.path.join(tmp, "documents.parquet"))
     assert tfidf_cosine_pairs(spark, tmp).count() == 0
     assert tfidf_cosine_pairs(spark, tmp, df_cap=None).count() == 300 * 299 // 2
@@ -595,7 +593,7 @@ def test_hll_sketch_estimates_within_bound(spark):
     assert got_all
 
 
-def test_ewma_blocked_unbounded_history(spark):
+def test_ewma_blocked_unbounded_history(spark, tmp_path):
     # 20,000 rows on ONE key — 3x past the closed form's rn~6,726
     # double-overflow ceiling. The blocked form must stay finite and
     # match pandas ewm(adjust=True) everywhere.
@@ -612,7 +610,7 @@ def test_ewma_blocked_unbounded_history(spark):
         "ts": [base + datetime.timedelta(seconds=i) for i in range(n)],
     })
     sdf = spark.createDataFrame(pdf)
-    tmp = tempfile.mkdtemp(prefix="ocrflow_ewma_")
+    tmp = str(tmp_path)
     sdf.write.parquet(os.path.join(tmp, "events.parquet"))
     out = (D.ts_ewma_blocked(spark, tmp)
            .orderBy("event_id").toPandas())
@@ -626,7 +624,7 @@ def test_ewma_blocked_unbounded_history(spark):
     assert diff.max() < 2e-4, diff.max()  # 4dp rounding on our side only
 
 
-def test_kgram_dedup_finds_planted_quote(spark):
+def test_kgram_dedup_finds_planted_quote(spark, tmp_path):
     # doc B quotes a 6-token window from doc A verbatim inside
     # otherwise-unrelated text: whole-doc Jaccard is tiny, but the
     # exact-substring scanner must pair them.
@@ -638,7 +636,7 @@ def test_kgram_dedup_finds_planted_quote(spark):
     planted = spark.createDataFrame(
         [(97531, planted_text, one["lang"], one["source"],
           len(planted_text))], src.schema)
-    tmp = tempfile.mkdtemp(prefix="ocrflow_kgram_")
+    tmp = str(tmp_path)
     src.unionByName(planted).write.parquet(
         os.path.join(tmp, "documents.parquet"))
     pairs = {(r["doc_a"], r["doc_b"])
@@ -646,7 +644,7 @@ def test_kgram_dedup_finds_planted_quote(spark):
     assert (11, 97531) in pairs
 
 
-def test_kgram_hot_gram_cap_bounds_boilerplate(spark):
+def test_kgram_hot_gram_cap_bounds_boilerplate(spark, tmp_path):
     # 200 docs all sharing one boilerplate 6-gram: an uncapped scanner
     # emits 200*199/2 = 19,900 pairs from that gram alone; the 2..20
     # frequency band must drop it entirely.
@@ -656,12 +654,12 @@ def test_kgram_hot_gram_cap_bounds_boilerplate(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, "
               "n_chars long")
-    tmp = tempfile.mkdtemp(prefix="ocrflow_kgramcap_")
+    tmp = str(tmp_path)
     df.write.parquet(os.path.join(tmp, "documents.parquet"))
     assert D.dedup_kgram_exact(spark, tmp).count() == 0
 
 
-def test_cdc_chunks_resync_after_prefix_edit(spark):
+def test_cdc_chunks_resync_after_prefix_edit(spark, tmp_path):
     # THE content-defined-chunking property: a prefix insertion shifts
     # every byte offset, but boundaries resync and all downstream
     # chunk hashes survive. Fixed-size chunking shares ~0 here.
@@ -671,7 +669,7 @@ def test_cdc_chunks_resync_after_prefix_edit(spark):
     df = spark.createDataFrame(
         [(1, base, "en", "x", len(base)), (2, edited, "en", "x", len(edited))],
         "doc_id long, text string, lang string, source string, n_chars long")
-    tmp = tempfile.mkdtemp(prefix="ocrflow_cdc_")
+    tmp = str(tmp_path)
     df.write.parquet(os.path.join(tmp, "documents.parquet"))
     out = D.doc_cdc_chunks(spark, tmp).collect()
     h1 = [r["chunk_hash"] for r in out if r["doc_id"] == 1]
@@ -683,13 +681,13 @@ def test_cdc_chunks_resync_after_prefix_edit(spark):
     assert h1[-3:] == h2[-3:]
 
 
-def test_cdc_chunks_deterministic_across_partitioning(spark):
+def test_cdc_chunks_deterministic_across_partitioning(spark, tmp_path):
     # same corpus written as 1 file vs 8 files: different scan
     # partitioning and Arrow batch boundaries, identical chunk rows.
     src = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
            .filter(F.col("text").isNotNull()))
-    t1 = tempfile.mkdtemp(prefix="ocrflow_cdc1_")
-    t8 = tempfile.mkdtemp(prefix="ocrflow_cdc8_")
+    t1 = str(tmp_path / "cdc1")
+    t8 = str(tmp_path / "cdc8")
     src.coalesce(1).write.parquet(os.path.join(t1, "documents.parquet"))
     src.repartition(8).write.parquet(os.path.join(t8, "documents.parquet"))
     a = sorted(map(tuple, D.doc_cdc_chunks(spark, t1).collect()))
@@ -852,9 +850,9 @@ def test_snm_global_rank_has_no_single_partition_window(spark):
     assert "rangepartitioning" not in plan.lower(), plan
 
 
-def test_cusum_flags_planted_level_shift(spark):
+def test_cusum_flags_planted_level_shift(spark, tmp_path):
     import datetime
-    import tempfile, os as _os
+    import os as _os
     base = datetime.datetime(2024, 1, 1)
     rows = []
     eid = 0
@@ -868,7 +866,7 @@ def test_cusum_flags_planted_level_shift(spark):
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
-    tmp = tempfile.mkdtemp(prefix="ocrflow_cusum_")
+    tmp = str(tmp_path)
     df.write.parquet(_os.path.join(tmp, "events.parquet"))
     out = {r["day"].isoformat(): r["breach"]
            for r in D.ts_cusum_drift(spark, tmp).collect()}
@@ -909,15 +907,15 @@ def test_jl_projection_preserves_norms_in_expectation(spark):
     assert 0.8 < m < 1.2, m
 
 
-def test_l_diversity_flags_homogeneous_group(spark):
-    import tempfile, os as _os
+def test_l_diversity_flags_homogeneous_group(spark, tmp_path):
+    import os as _os
     src = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     # plant a QI group of 6 customers who ALL share one balance bucket:
     # k-anonymous (n >= 5) yet l-risky (diversity 1)
     rows = [(900000 + i, f"Customer#9{i}", 98, 1000.0 + i, "SEG_X")
             for i in range(6)]
     planted = spark.createDataFrame(rows, src.schema)
-    tmp = tempfile.mkdtemp(prefix="ocrflow_ldiv_")
+    tmp = str(tmp_path)
     src.unionByName(planted).write.parquet(
         _os.path.join(tmp, "customer.parquet"))
     import ocrflow.dataops as DD
@@ -992,7 +990,7 @@ def test_aqp_estimate_error_within_ci(spark):
     assert r["err_pct"] < 15.0
 
 
-def test_auc_roc_hand_computed_with_ties(spark):
+def test_auc_roc_hand_computed_with_ties(spark, tmp_path):
     """AUC via the Mann-Whitney identity on a hand-worked fixture with
     a tie straddling the classes: pos scores {3, 2}, neg {2, 1}.
     Pairwise: (3>2)=1, (3>1)=1, (2=2)=0.5, (2>1)=1 → U1=3.5,
@@ -1007,7 +1005,7 @@ def test_auc_roc_hand_computed_with_ties(spark):
         "value": [3.0, 2.0, 2.0, 1.0],
         "props": [""] * 4,
     })
-    tmp = tempfile.mkdtemp(prefix="ocrflow_auc_")
+    tmp = str(tmp_path)
     spark.createDataFrame(pdf).write.parquet(
         os.path.join(tmp, "events.parquet"))
     row = D.eval_auc_roc(spark, tmp).collect()[0]
@@ -1015,7 +1013,7 @@ def test_auc_roc_hand_computed_with_ties(spark):
     assert row.auc == 0.875
 
 
-def test_mannwhitney_hand_computed(spark):
+def test_mannwhitney_hand_computed(spark, tmp_path):
     """Same fixture: 2*U1 must be 7 (U1 = 3.5 with the midrank tie)."""
     import datetime as _dt
     import pandas as pd
@@ -1027,14 +1025,14 @@ def test_mannwhitney_hand_computed(spark):
         "value": [3.0, 2.0, 2.0, 1.0],
         "props": [""] * 4,
     })
-    tmp = tempfile.mkdtemp(prefix="ocrflow_mwu_")
+    tmp = str(tmp_path)
     spark.createDataFrame(pdf).write.parquet(
         os.path.join(tmp, "events.parquet"))
     row = D.stat_mannwhitney_u(spark, tmp).collect()[0]
     assert (row.n1, row.n2, row.two_u1) == (2, 2, 7)
 
 
-def test_chi_square_hand_computed_2x2(spark):
+def test_chi_square_hand_computed_2x2(spark, tmp_path):
     """2x2 with counts [[30,10],[10,30]] (types a/b × hours 0/1):
     N=80, all marginals 40, every expected cell 20, every term
     (obs-20)²/20 = 5 → chi2 = 20, dof = 1."""
@@ -1050,14 +1048,14 @@ def test_chi_square_hand_computed_2x2(spark):
         "value": 1.0,
         "props": "",
     })
-    tmp = tempfile.mkdtemp(prefix="ocrflow_chi2_")
+    tmp = str(tmp_path)
     spark.createDataFrame(pdf).write.parquet(
         os.path.join(tmp, "events.parquet"))
     row = D.stat_chi_square(spark, tmp).collect()[0]
     assert (row.n_cells, row.dof, row.chi2) == (4, 1, 20.0)
 
 
-def test_ndcg_perfect_ranking_is_one(spark):
+def test_ndcg_perfect_ranking_is_one(spark, tmp_path):
     """When predicted score order equals relevance order for every
     user, DCG == IDCG and mean NDCG@5 is exactly 1.0."""
     import datetime as _dt
@@ -1075,7 +1073,7 @@ def test_ndcg_perfect_ranking_is_one(spark):
         "value": [r[3] for r in rows],
         "props": "",
     })
-    tmp = tempfile.mkdtemp(prefix="ocrflow_ndcg_")
+    tmp = str(tmp_path)
     spark.createDataFrame(pdf).write.parquet(
         os.path.join(tmp, "events.parquet"))
     row = D.eval_ndcg_at_k(spark, tmp).collect()[0]
@@ -1083,7 +1081,7 @@ def test_ndcg_perfect_ranking_is_one(spark):
     assert row.mean_ndcg5 == 1.0
 
 
-def test_ks_hand_computed(spark):
+def test_ks_hand_computed(spark, tmp_path):
     """click values {1,2}, view values {3,4}: ECDFs never overlap
     below 2 vs above — D = 1.0 (F1(2)=1, F2(2)=0)."""
     import datetime as _dt
@@ -1096,14 +1094,14 @@ def test_ks_hand_computed(spark):
         "value": [1.0, 2.0, 3.0, 4.0],
         "props": [""] * 4,
     })
-    tmp = tempfile.mkdtemp(prefix="ocrflow_ks_")
+    tmp = str(tmp_path)
     spark.createDataFrame(pdf).write.parquet(
         os.path.join(tmp, "events.parquet"))
     row = D.stat_ks_two_sample(spark, tmp).collect()[0]
     assert (row.n1, row.n2, row.d_stat) == (2, 2, 1.0)
 
 
-def test_spearman_rho_monotone_and_hand_case(spark):
+def test_spearman_rho_monotone_and_hand_case(spark, tmp_path):
     """Perfectly monotone value-vs-user_id → rho = 1.0 exactly;
     reversing user_id → −1.0 (midranks cancel the doubling)."""
     import datetime as _dt
@@ -1120,14 +1118,14 @@ def test_spearman_rho_monotone_and_hand_case(spark):
         })
     for uids, want in ([[1, 2, 3, 4, 5, 6], 1.0],
                        [[6, 5, 4, 3, 2, 1], -1.0]):
-        tmp = tempfile.mkdtemp(prefix="ocrflow_rho_")
+        tmp = str(tmp_path / f"rho{want}")
         spark.createDataFrame(events(uids)).write.parquet(
             os.path.join(tmp, "events.parquet"))
         row = D.stat_spearman_rho(spark, tmp).collect()[0]
         assert (row.n, row.rho) == (6, want)
 
 
-def test_welch_identical_samples_t_zero(spark):
+def test_welch_identical_samples_t_zero(spark, tmp_path):
     """Identical click/view samples → t = 0 exactly, and the
     Welch–Satterthwaite df collapses to 2(n−1) = 4."""
     import datetime as _dt
@@ -1140,7 +1138,7 @@ def test_welch_identical_samples_t_zero(spark):
         "value": [1.0, 2.0, 3.0, 1.0, 2.0, 3.0],
         "props": "",
     })
-    tmp = tempfile.mkdtemp(prefix="ocrflow_welch_")
+    tmp = str(tmp_path)
     spark.createDataFrame(pdf).write.parquet(
         os.path.join(tmp, "events.parquet"))
     row = D.stat_welch_ttest(spark, tmp).collect()[0]
@@ -1169,10 +1167,9 @@ def test_ffd_packs_no_worse_than_nextfit_and_respects_budget(spark):
     assert all(a[s_] <= b[s_] for s_ in a), (a, b)
 
 
-def test_decontaminate_fuzzy_finds_planted_benchmark_copy(spark):
+def test_decontaminate_fuzzy_finds_planted_benchmark_copy(spark, tmp_path):
     """A corpus doc that IS a benchmark doc (doc_id % 11 == 0 side)
     must surface with jaccard 1.0; an unrelated doc must not pair."""
-    import tempfile
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     bench_doc = src.filter("doc_id % 11 = 0 AND text IS NOT NULL").first()
     copy_id = 77779  # 77779 % 11 != 0 → corpus side
@@ -1180,7 +1177,7 @@ def test_decontaminate_fuzzy_finds_planted_benchmark_copy(spark):
     planted = spark.createDataFrame(
         [(copy_id, bench_doc["text"], bench_doc["lang"],
           bench_doc["source"], bench_doc["n_chars"])], src.schema)
-    tmp = tempfile.mkdtemp(prefix="ocrflow_dfz_")
+    tmp = str(tmp_path)
     src.unionByName(planted).write.parquet(
         os.path.join(tmp, "documents.parquet"))
     hits = {(r["doc_id"], r["bench_id"]): r["jaccard"]
@@ -1210,7 +1207,7 @@ def test_pii_redact_is_idempotent_and_counts_injections(spark):
     assert re.search(_PII_PHONE, "<PHONE>") is None
 
 
-def test_text_nb_classifier_separable_corpus_is_perfect(spark):
+def test_text_nb_classifier_separable_corpus_is_perfect(spark, tmp_path):
     """On a corpus where each lang has a DISJOINT vocabulary, the NB
     classifier must predict every probe doc's own lang (the synthetic
     sf tables share one vocab across langs, so corpus accuracy there
@@ -1229,7 +1226,7 @@ def test_text_nb_classifier_separable_corpus_is_perfect(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, "
               "n_chars long")
-    tmp = tempfile.mkdtemp(prefix="ocrflow_nb_")
+    tmp = str(tmp_path)
     docs.write.parquet(os.path.join(tmp, "documents.parquet"))
 
     pred = {r["doc_id"]: r["pred_lang"]
@@ -1250,7 +1247,7 @@ def test_text_nb_classifier_separable_corpus_is_perfect(spark):
                 assert w2 > w1, (lang, pairs)
 
 
-def test_bh_step_up_rejects_below_crossing(spark):
+def test_bh_step_up_rejects_below_crossing(spark, tmp_path):
     """The BH rule is STEP-UP: with m=3, alpha=0.1 the thresholds are
     (0.0333, 0.0667, 0.1); p = (0.05, 0.06, 0.5) has p_(1) ABOVE its
     own threshold but p_(2) below its — so k* = 2 and BOTH rank 1 and
@@ -1266,7 +1263,7 @@ def test_bh_step_up_rejects_below_crossing(spark):
         "source": ["s1", "s2", "s3"],
         "n_chars": [950000, 740000, 500000],  # p = .05, .06, .50
     })
-    tmp = tempfile.mkdtemp(prefix="ocrflow_bh_")
+    tmp = str(tmp_path)
     spark.createDataFrame(pdf).write.parquet(
         os.path.join(tmp, "documents.parquet"))
     rows = {(r.lang, r.source): r
@@ -1292,7 +1289,7 @@ def test_bootstrap_ci_brackets_mean_with_full_reps(spark):
         assert r.ci_lo <= r.mean_value <= r.ci_hi, r
 
 
-def test_context_overflow_hand_case(spark):
+def test_context_overflow_hand_case(spark, tmp_path):
     """One conv, four turns of 200 whitespace tokens each: cumsum
     200/400/600/800 against budget 512 -> overflow at turn_idx 2,
     two whole turns kept."""
@@ -1305,7 +1302,7 @@ def test_context_overflow_hand_case(spark):
         "source": ["s"] * 4,
         "n_chars": [len(text)] * 4,
     })
-    tmp = tempfile.mkdtemp(prefix="ocrflow_ctx_")
+    tmp = str(tmp_path)
     spark.createDataFrame(pdf).write.parquet(
         os.path.join(tmp, "documents.parquet"))
     row = D.conv_context_overflow(spark, tmp).collect()[0]
@@ -1334,7 +1331,7 @@ def test_power_iteration_matches_numpy_simulation(spark):
     assert cos >= 0.9999, cos
 
 
-def test_power_iteration_converges_on_planted_direction(spark):
+def test_power_iteration_converges_on_planted_direction(spark, tmp_path):
     """A rank-1-dominant matrix (planted direction + small noise) has
     a wide spectral gap, so 12 iterations must recover the direction:
     |cos| >= 0.999 vs numpy's top eigenvector."""
@@ -1349,7 +1346,7 @@ def test_power_iteration_converges_on_planted_direction(spark):
         "embedding": [row.astype("float32").tolist() for row in X],
         "label": np.zeros(400, dtype="int32"),
     })
-    tmp = tempfile.mkdtemp(prefix="ocrflow_pi_")
+    tmp = str(tmp_path)
     spark.createDataFrame(pdf).write.parquet(
         os.path.join(tmp, "embeddings.parquet"))
     out = D.emb_power_iteration_top1(spark, tmp).collect()

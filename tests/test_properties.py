@@ -120,7 +120,7 @@ def test_batch_kernel_equals_per_turn_reference(turns, cuts):
                 for s in row["spans"]] == want.spans
 
 
-def test_asof_union_merge_matches_naive_oracle(spark):
+def test_asof_union_merge_matches_naive_oracle(spark, tmp_path):
     """Randomized as-of check incl. ties: the union-merge join_asof
     must match a naive per-purchase scan (latest click with
     ts <= p.ts, max event_id on equal ts) on random event sets where
@@ -145,8 +145,8 @@ def test_asof_union_merge_matches_naive_oracle(spark):
         df = spark.createDataFrame(
             rows, "event_id long, ts timestamp, user_id long, "
                   "event_type string, value double, props string")
-        import tempfile, os
-        d = tempfile.mkdtemp(prefix=f"ocrflow_asof_{seed}_")
+        import os
+        d = str(tmp_path / f"seed{seed}")
         df.write.parquet(os.path.join(d, "events.parquet"))
 
         got = {r["purchase_id"]: r["last_click_id"]
@@ -163,14 +163,13 @@ def test_asof_union_merge_matches_naive_oracle(spark):
         assert got == expected, f"seed {seed}"
 
 
-def test_asof_forward_matches_naive_oracle(spark):
+def test_asof_forward_matches_naive_oracle(spark, tmp_path):
     """Randomized FORWARD as-of check incl. ties: join_asof_forward
     (earliest following click, min event_id on equal ts) vs a naive
     per-purchase scan on random event sets dense in ts collisions."""
     import datetime
     import os
     import random
-    import tempfile
 
     from ocrflow.queries import QUERIES
 
@@ -189,7 +188,7 @@ def test_asof_forward_matches_naive_oracle(spark):
         df = spark.createDataFrame(
             rows, "event_id long, ts timestamp, user_id long, "
                   "event_type string, value double, props string")
-        d = tempfile.mkdtemp(prefix=f"ocrflow_fasof_{seed}_")
+        d = str(tmp_path / f"seed{seed}")
         df.write.parquet(os.path.join(d, "events.parquet"))
 
         got = {r["purchase_id"]: r["next_click_id"]
@@ -206,7 +205,7 @@ def test_asof_forward_matches_naive_oracle(spark):
         assert got == expected, f"seed {seed}"
 
 
-def test_skyline_window_sweep_matches_bruteforce(spark):
+def test_skyline_window_sweep_matches_bruteforce(spark, tmp_path):
     """Randomized skyline check incl. heavy vq ties: the O(n log n)
     window sweep must equal the O(n^2) strict-dominance definition on
     random points where many rows share the same quantized value (the
@@ -234,8 +233,8 @@ def test_skyline_window_sweep_matches_bruteforce(spark):
         df = spark.createDataFrame(
             rows, "event_id long, ts timestamp, user_id long, "
                   "event_type string, value double, props string")
-        import tempfile, os
-        d = tempfile.mkdtemp(prefix=f"ocrflow_sky_{seed}_")
+        import os
+        d = str(tmp_path / f"seed{seed}")
         df.write.parquet(os.path.join(d, "events.parquet"))
 
         got = {(r["event_type"], r["event_id"])
@@ -250,7 +249,7 @@ def test_skyline_window_sweep_matches_bruteforce(spark):
         assert got == expected, f"seed {seed}"
 
 
-def test_asof_nearest_matches_naive_oracle(spark):
+def test_asof_nearest_matches_naive_oracle(spark, tmp_path):
     """Randomized nearest-as-of check in the dense-tie regime (coarse
     second timestamps): the single-pass union-merge must match a naive
     per-purchase scan over all clicks ranked by (|Δt|, backward-first,
@@ -274,8 +273,7 @@ def test_asof_nearest_matches_naive_oracle(spark):
             rows, "event_id long, ts timestamp, user_id long, "
                   "event_type string, value double, props string")
         import os
-        import tempfile
-        d = tempfile.mkdtemp(prefix=f"ocrflow_near_{seed}_")
+        d = str(tmp_path / f"seed{seed}")
         df.write.parquet(os.path.join(d, "events.parquet"))
 
         got = {r["purchase_id"]: r["click_id"]
